@@ -171,8 +171,7 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
         if warmup:
             wdfs = spark_world(spark, n_pages=2000, n_hosts=50,
                                mean_outlinks=8, seed=7, n_seeds=500)
-            wcfg = CrawlConfig(max_epochs=2, max_retries=1,
-                               num_host_shards=8, bloom_bits_per_shard=1 << 20)
+            wcfg = CrawlConfig(max_epochs=2, max_retries=1)
             wr = _tf.mkdtemp(prefix="crawl_warm_")
             FrontierEngine(spark, wcfg, wr, wdfs["pages"], wdfs["robots"],
                            wdfs["seeds"]).run(max_epochs=2)
@@ -186,11 +185,6 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
             max_fetches=10_000_000,  # scaling epochs must not hit the cap
             replenish_per_epoch=replenish,
             epoch_window_ms=epoch_window_ms,  # wide epochs amortize fixed costs
-            # shard count ≥ the largest core count under test — bloom
-            # build/probe stages parallelize to n_shards tasks, so a small
-            # shard count becomes the serial fraction at high core counts
-            num_host_shards=32,
-            bloom_bits_per_shard=1 << 23,
             # web-representative MOR regime: at the north-star scale the
             # per-epoch delta log is ≪ the frontier, so epochs never pay a
             # full-frontier rewrite; the default 0.2 ratio fires EVERY
@@ -209,7 +203,7 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
             cfg = _dc.replace(cfg, rank_excess_rows=int(_rank_excess))
         root = tempfile.mkdtemp(prefix=f"crawl_bench_{cpus}_")
         eng = FrontierEngine(spark, cfg, root, dfs["pages"], dfs["robots"],
-                             dfs["seeds"], use_bloom=True)
+                             dfs["seeds"])
         eng.bootstrap()  # includes world materialization (setup, untimed)
         epochs = []
         t0 = time.time()
@@ -527,7 +521,7 @@ def write_report(result: dict) -> None:
         lines += [
             "",
             "On real dedicated executors the ceiling is ~1.0 and the "
-            "crawl's partitioning (uniform url-hash bloom shards, per-host "
+            "crawl's partitioning (url-hash seen-set layout, per-host "
             "top-k prefix, parallel snapshot writes) carries its relative "
             "efficiency.",
             "",
@@ -572,7 +566,7 @@ def write_report(result: dict) -> None:
             "Fixed cost per epoch is bounded by design: the engine runs a "
             "constant Spark-job count per epoch regardless of data volume "
             "(pinned intermediates, one single-row counter collect, "
-            "parallel commit writes + bloom update, plus two narrow "
+            "parallel commit writes, plus two narrow "
             "hot-host gate jobs that replace two full exchanges of the "
             "queued set) — see the jobs/epoch column, measured via "
             "per-epoch job groups. Epoch phases in BENCH/last_run.json: "

@@ -13,7 +13,8 @@ functions   scalar/vectorized column functions (URL canonicalization,
 operators   relational operators re-expressed Spark-first (dedup families,
             TF-IDF similarity join, greedy matching, set overlap, top-k)
 frontier    the crawl engine: synthetic world, politeness scheduler,
-            URL-seen bloom shards, epoch loop, reference simulator
+            exact URL-seen anti-join, epoch loop, reference simulator;
+            standalone bloom dedup operator
 sources     snapshot-table catalog (Iceberg-style commit/read on parquet;
             swaps to real Iceberg when the runtime jar is on the cluster)
 plans       reusable logical-plan fragments (scope rules, sharding)

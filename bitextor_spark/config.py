@@ -162,16 +162,11 @@ class CrawlConfig:
     # the walk exchange.
     rank_excess_rows: int = 2_000_000
 
-    # engine partitioning
+    # Bloom shard layout. The crawl does not read either field (its
+    # URL-seen check is the exact base + delta anti-join); they stay so
+    # existing configs, including perfbench/workloads.py, keep working.
     num_host_shards: int = 32
     bloom_bits_per_shard: int = 1 << 20  # 128 KiB per shard
-    bloom_num_hashes: int = 5
-    # total-bitmap-bytes gate for the broadcast seen-check: while
-    # n_shards × bits/8 stays under this, the folded shard bitmaps ride
-    # ONE driver broadcast per compaction and the per-epoch flag pass is
-    # a narrow mapInArrow (no exchange, no shard sort); past it (north-
-    # star multi-GB bitmaps) the cogrouped-Arrow path runs instead.
-    bloom_broadcast_bytes: int = 64 << 20
 
     # payload verification
     psnr_threshold_db: float = 40.0

@@ -1,7 +1,7 @@
 """Tiny end-to-end crawl demo: ``python -m bitextor_spark.frontier.demo``.
 
 Runs the full engine (canonicalize → scope → politeness schedule → fetch →
-discover → bloom/anti-join dedup → snapshot) over the deterministic small
+discover → URL-seen anti-join → snapshot) over the deterministic small
 world and prints the fetch-log head plus per-host metrics. The same world
 drives the simulator-parity tests, so what this prints is the exact crawl
 order the reference semantics mandate.
@@ -22,12 +22,12 @@ def main() -> None:
     spark = get_spark(app_name="frontier-demo", master="local[4]",
                       shuffle_partitions=8)
     world = small_world(WorldConfig(n_hosts=6, n_pages=120))
-    cfg = CrawlConfig(max_epochs=3, max_retries=1, num_host_shards=8)
+    cfg = CrawlConfig(max_epochs=3, max_retries=1)
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="frontier_demo_")
     try:
         eng = FrontierEngine(spark, cfg, root, dfs["pages"], dfs["robots"],
-                             dfs["seeds"], use_bloom=True)
+                             dfs["seeds"])
         stats = eng.run(max_epochs=3)
         for s in stats:
             print(f"epoch {s.epoch}: fetched={s.fetched} attempts={s.attempts} "

@@ -10,8 +10,8 @@ One epoch = one Spark job pipeline:
      (RE2-classified in-batch: resolve+canonicalize+explode+page dedup)
      ──scope rules (JVM exprs) + ONE groupBy(url)──► first-discoverer
      winner, in-scope dupe count, per-host reject count (fused pass)
-     ──bloom prefilter (broadcast probe under the size gate, cogrouped
-     Arrow above it) + base-presence left join + delta anti-join──►
+     ──exact URL-seen anti-join against the persisted base url_hash
+     layout + the gated delta-key anti-join──►
      admitted (pinned once; the commit writes branch off it)
      ──► frontier ∪ admitted ; snapshot commit (atomic manifest);
      per-host metrics written BEHIND the commit (one tagged-union agg,
@@ -27,16 +27,15 @@ the single-threaded simulator in tests/test_frontier_parity.py.
 Skew: the per-host top-k prefix bounds any mega-host's contribution to an
 epoch at the politeness ceiling (window_ms / min_delay + retries), so the
 walk's host segment for the hottest host is O(hundreds) of rows no matter
-how many billions of its URLs are queued; the bloom shards are uniform by
-url-hash. Frontier state lives in snapshot tables (sources/snapshots.py);
-every epoch is resumable (kill → rerun uncommitted epoch, identical by the
-virtual clock).
+how many billions of its URLs are queued. Frontier state lives in
+snapshot tables (sources/snapshots.py); every epoch is resumable (kill →
+rerun uncommitted epoch, identical by the virtual clock).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
@@ -44,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bitextor_spark.config import CrawlConfig
-from bitextor_spark.frontier import seen as seen_mod
 from bitextor_spark.frontier.politeness import schedule_host_arrays
 from bitextor_spark.plans.scope import apply_scope
 from bitextor_spark.plans.topk import per_key_topk_passthrough
@@ -114,7 +112,6 @@ class FrontierEngine:
         pages: DataFrame,
         robots: DataFrame,
         seeds: DataFrame,
-        use_bloom: bool = True,
         images: DataFrame | None = None,
         verify_payloads: bool = False,
         robots_versions: DataFrame | None = None,
@@ -138,7 +135,6 @@ class FrontierEngine:
             robots_versions.cache() if robots_versions is not None else None
         )
         self.seeds = seeds
-        self.use_bloom = use_bloom
         # image+caption payload table (input_hint shape); verified per fetch
         # wave in Arrow batches when verify_payloads is on (M4 invariant)
         self.images = images.cache() if images is not None else None
@@ -169,8 +165,8 @@ class FrontierEngine:
         except Exception:
             pass
         self._epoch_pins: list[DataFrame] = []
-        self._bloom_bcast = None  # per-compaction flag broadcast cache
-        self._bloom_bcast_future = None  # in-flight post-compaction rebuild
+        # name -> (frontier base paths, persisted df); see _base_cached
+        self._base_caches: dict[str, tuple] = {}
         # (path, future, pins) of a metrics delta written behind its
         # epoch's commit; registered at the next commit or flushed
         self._pending_metrics = None
@@ -204,61 +200,6 @@ class FrontierEngine:
                 pass
         self._epoch_pins = []
 
-    def _bloom_gate_ok(self) -> bool:
-        cfg = self.cfg
-        total = cfg.num_host_shards * (cfg.bloom_bits_per_shard // 8)
-        return total <= cfg.bloom_broadcast_bytes
-
-    def _bloom_flag_broadcast(self):
-        """Broadcast of the folded bloom shard blobs for the narrow flag
-        pass, rebuilt once per COMPACTION (the only event that changes the
-        base bitmaps — between compactions admissions live in the
-        bloom_pending delta, which the admission path anti-joins exactly).
-        Returns None when the total bitmap size exceeds
-        ``cfg.bloom_broadcast_bytes`` (north-star multi-GB bitmaps): the
-        cogrouped-Arrow flag path runs instead.
-
-        The collect+broadcast never lands on the epoch's serial path: it
-        prebuilds at bootstrap, and after a compaction a background thread
-        rebuilds it while the next epoch's candidate/walk/discovery phases
-        run (the flag pass, its only consumer, comes late in the epoch)."""
-        if not self._bloom_gate_ok():
-            return None
-        if self._bloom_bcast is None and self._bloom_bcast_future is not None:
-            self._bloom_bcast = self._bloom_bcast_future.result()
-            self._bloom_bcast_future = None
-        if self._bloom_bcast is None:
-            self._bloom_bcast = seen_mod.broadcast_blooms(
-                self.spark, self._load("blooms")
-            )
-        return self._bloom_bcast
-
-    def _rebuild_bloom_broadcast_async(self) -> None:
-        """Kick off the post-compaction broadcast rebuild off-thread."""
-        if not self._bloom_gate_ok():
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        self._bloom_bcast_future = pool.submit(
-            seen_mod.broadcast_blooms, self.spark, self._load("blooms")
-        )
-        pool.shutdown(wait=False)
-
-    def _invalidate_bloom_broadcast(self) -> None:
-        if self._bloom_bcast_future is not None:
-            try:
-                self._bloom_bcast_future.result().destroy()
-            except Exception:
-                pass
-            self._bloom_bcast_future = None
-        if self._bloom_bcast is not None:
-            try:
-                self._bloom_bcast.destroy()
-            except Exception:
-                pass
-            self._bloom_bcast = None
-
     # ------------------------------------------------------------------ #
     # bootstrap / resume                                                  #
     # ------------------------------------------------------------------ #
@@ -269,8 +210,6 @@ class FrontierEngine:
         # synthesizing/caching the world is setup, not crawl work
         self.pages.count()
         if self.catalog.latest_snapshot_id() is not None:
-            if self.use_bloom:
-                self._rebuild_bloom_broadcast_async()  # resume: warm off-epoch
             return
         cfg = self.cfg
         # materialize the (tiny) seed pipeline once: every downstream action
@@ -338,44 +277,16 @@ class FrontierEngine:
                 F.lit(1.0).alias("priority"),
                 F.lit(0).alias("updated_epoch"),
             )
-        ).localCheckpoint()  # reused by host_state, blooms, commit, count
+        ).localCheckpoint()  # reused by host_state, commit, count
         host_state = frontier.select("host").distinct().withColumn(
             "next_allowed_ms", F.lit(0).cast("long")
         )
-        replace = {"frontier": frontier, "host_state": host_state,
-                   "seed_domains": seed_domains}
-        if self.use_bloom:
-            blooms = seen_mod.update_blooms(
-                seen_mod.empty_blooms(self.spark),
-                frontier.select("url_hash"),
-                cfg.num_host_shards, cfg.bloom_bits_per_shard,
-                cfg.bloom_num_hashes,
-            )
-            replace["blooms"] = blooms
         self.catalog.commit(
-            replace=replace,
+            replace={"frontier": frontier, "host_state": host_state,
+                     "seed_domains": seed_domains},
             meta={"epoch": 0, "total_fetched": 0, "seq_offset": 0,
                   "queued": (n_seeds := frontier.count()),
                   "frontier_rows": n_seeds, "done": False},
-        )
-        if self.use_bloom:
-            # prebuild the flag broadcast at setup time so epoch 0 never
-            # pays the collect on its serial path
-            self._rebuild_bloom_broadcast_async()
-
-    def _with_global_seq(
-        self, events: DataFrame, n_events: int, seq_offset: int
-    ) -> DataFrame:
-        """Exact 0-based global sequence by (fetch_start_ms, host,
-        url_canon) via the shared scale-safe ranking (plans/ordering.py:
-        range-repartition → local rank → cumulative offsets; plain window
-        only below the inspection-scale threshold)."""
-        from bitextor_spark.plans.ordering import global_row_number
-
-        keys = [F.col("fetch_start_ms"), F.col("host"), F.col("url_canon")]
-        return global_row_number(
-            events, keys, seq_col="seq", offset=seq_offset - 1,
-            small_threshold=50_000, n_rows=n_events, pin=self._pin,
         )
 
     def _verify_payloads(self, events: DataFrame) -> DataFrame:
@@ -427,8 +338,6 @@ class FrontierEngine:
         "robots_state": ROBOTS_STATE_SCHEMA,
         "robots_state_delta": ROBOTS_STATE_SCHEMA,
         "seed_domains": "reg_domain string",
-        "blooms": seen_mod.BLOOM_SCHEMA,
-        "bloom_pending": "url_hash long",
         "fetch_log": EVENT_SCHEMA + ", epoch int",
         "metrics": (
             "epoch int, host string, fetched bigint, errors bigint, "
@@ -598,81 +507,18 @@ class FrontierEngine:
             latest.filter(F.col("state") == "QUEUED")
         )
 
-    def _queued_base(self) -> DataFrame:
-        """Base-frontier QUEUED rows, hash-partitioned + sorted on
-        URL_CANON and persisted ACROSS epochs (same invalidation key as
-        _base_urls): the base is immutable between compactions, so the
-        epoch's candidate DAG must not pay an O(frontier) exchange every
-        epoch. The layout key is url_canon — the SAME key the (static,
-        cached) pages table is laid out on — so the per-epoch fetch join
-        is exchange-free and sort-free on BOTH sides; the delta anti-join
-        on url_hash rides the broadcast hint (delta_broadcast_rows gate),
-        which preserves this layout. Past the gate (compaction-overdue
-        delta backlog) it degrades to one shuffle — the regime compaction
-        resets. Recomputable lineage (persist, not checkpoint)."""
-        m = self.catalog.load_manifest()
-        key = tuple(m["tables"]["frontier"]["paths"]) if m else None
-        cached: tuple | None = getattr(self, "_queued_base_cache", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        if cached is not None:
-            try:
-                cached[1].unpersist()
-            except Exception:
-                pass
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        df = (
-            self._load("frontier")
-            .filter(F.col("state") == "QUEUED")
-            .repartition(n, "url_canon")
-            .sortWithinPartitions("url_canon")
-            .persist()
-        )
-        self._queued_base_cache = (key, df)
-        return df
-
-    def _base_host_counts(self) -> DataFrame:
-        """Per-host row count of the QUEUED base — the hot-host bound's
-        base-side term, aggregated ONCE per compaction (cache keyed on the
-        base paths like _queued_base; O(distinct hosts) rows) so the
-        per-epoch gate scans only the O(delta) side instead of
-        re-aggregating the whole queued base every epoch. The counts
-        ignore not_before and changed keys — both only ever INFLATE a
-        host's count, preserving the gate's hot ⊇ true-hot upper-bound
-        invariant (a false-positive hot host pays one redundant rank; a
-        miss stays impossible)."""
-        m = self.catalog.load_manifest()
-        key = tuple(m["tables"]["frontier"]["paths"]) if m else None
-        cached: tuple | None = getattr(self, "_base_host_counts_cache", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        if cached is not None:
-            try:
-                cached[1].unpersist()
-            except Exception:
-                pass
-        df = (
-            self._queued_base()
-            .groupBy("host")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .persist()
-        )
-        self._base_host_counts_cache = (key, df)
-        return df
-
-    def _base_urls(self) -> DataFrame:
-        """url_hash set of the frontier BASE, hash-partitioned + sorted +
-        persisted ACROSS epochs — the base is immutable between
-        compactions, so the per-epoch maybe-seen anti-join must not pay an
-        O(frontier) exchange-and-sort every epoch. The persisted layout
-        (HashPartitioning on url_hash, sorted within partitions) is reused
-        by the sort-merge anti-join: only the small maybe side shuffles.
+    def _base_cached(
+        self, name: str, build: Callable[[], DataFrame]
+    ) -> DataFrame:
+        """``build()`` persisted ACROSS epochs, keyed by the frontier base
+        paths: the base is immutable between compactions, so a layout
+        derived from it must not pay an O(frontier) exchange every epoch.
         Rebuilt when the manifest's base paths change (compaction or
         resume); recomputable lineage (persist, not checkpoint), so
         executor loss re-reads parquet instead of failing the epoch."""
         m = self.catalog.load_manifest()
         key = tuple(m["tables"]["frontier"]["paths"]) if m else None
-        cached: tuple | None = getattr(self, "_base_urls_cache", None)
+        cached = self._base_caches.get(name)
         if cached is not None and cached[0] == key:
             return cached[1]
         if cached is not None:
@@ -680,16 +526,52 @@ class FrontierEngine:
                 cached[1].unpersist()
             except Exception:
                 pass
+        df = build().persist()
+        self._base_caches[name] = (key, df)
+        return df
+
+    def _queued_base(self) -> DataFrame:
+        """Base-frontier QUEUED rows, hash-partitioned + sorted on
+        URL_CANON — the SAME key the (static, cached) pages table is laid
+        out on — so the per-epoch fetch join is exchange-free and
+        sort-free on BOTH sides; the delta anti-join on url_hash rides the
+        broadcast hint (delta_broadcast_rows gate), which preserves this
+        layout. Past the gate (compaction-overdue delta backlog) it
+        degrades to one shuffle — the regime compaction resets."""
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        df = (
+        return self._base_cached("queued", lambda: (
+            self._load("frontier")
+            .filter(F.col("state") == "QUEUED")
+            .repartition(n, "url_canon")
+            .sortWithinPartitions("url_canon")
+        ))
+
+    def _base_host_counts(self) -> DataFrame:
+        """Per-host row count of the QUEUED base — the hot-host bound's
+        base-side term, aggregated ONCE per compaction (O(distinct hosts)
+        rows) so the per-epoch gate scans only the O(delta) side instead
+        of re-aggregating the whole queued base every epoch. The counts
+        ignore not_before and changed keys — both only ever INFLATE a
+        host's count, preserving the gate's hot ⊇ true-hot upper-bound
+        invariant (a false-positive hot host pays one redundant rank; a
+        miss stays impossible)."""
+        return self._base_cached("host_counts", lambda: (
+            self._queued_base()
+            .groupBy("host")
+            .agg(F.count(F.lit(1)).alias("_n"))
+        ))
+
+    def _base_urls(self) -> DataFrame:
+        """url_hash set of the frontier BASE, hash-partitioned + sorted
+        within partitions: the URL-seen sort-merge anti-join reuses this
+        layout, so only the small candidate side shuffles."""
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return self._base_cached("urls", lambda: (
             self._load("frontier")
             .select("url_hash")
             .repartition(n, "url_hash")
             .sortWithinPartitions("url_hash")
-            .persist()
-        )
-        self._base_urls_cache = (key, df)
-        return df
+        ))
 
     def _host_state_view(self) -> DataFrame:
         base = self._load("host_state")
@@ -1336,73 +1218,22 @@ class FrontierEngine:
             )
             .withColumn("url_hash", F.xxhash64("url_canon"))
         )
-        # --- seen check: bloom prefilter + exact anti-join on the residue ---
-        # The flag cogroup reads the pinned aggregate (narrow filter +
-        # projection); what pins is the ADMITTED set, because THREE
-        # commit-pool writes (frontier_delta, bloom_pending, metrics'
-        # queued counter) branch off it — unpinned they would each
-        # re-evaluate the flag cogroup and both anti-joins concurrently.
-        # The per-host dupe/unique counters need only pre-flag columns, so
-        # they read the pinned aggregate directly.
-        if self.use_bloom:
-            # n_disc drops BEFORE the flag pass: the dupe counter is read
-            # from the pinned aggregate, not the flag output, so it must
-            # not ride the Arrow transfer through the Python flag pass
-            bcast = self._bloom_flag_broadcast()
-            if bcast is not None:
-                # bitmaps under the size gate: one broadcast per
-                # compaction, per-epoch flag is a NARROW mapInArrow — no
-                # shard exchange, no cogroup sort in the epoch DAG
-                flagged = seen_mod.flag_maybe_seen_via_broadcast(
-                    grouped.drop("n_disc"), bcast, cfg.num_host_shards,
-                    cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
-                )
-            else:
-                flagged = seen_mod.flag_maybe_seen(
-                    grouped.drop("n_disc"), self._load("blooms"),
-                    cfg.num_host_shards,
-                    cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
-                )
-            # presence = in base OR in delta log. The base check is ONE
-            # left join carrying a presence marker (kept rows: bloom-miss
-            # OR base-miss) rather than a definitely-new ∪ anti-join(maybe)
-            # union — a union would reference the unpinned cogroup from two
-            # branches of the pin job and evaluate the Python flag pass
-            # twice. A bloom-miss row can't be in the base (that is the
-            # bloom's guarantee), so joining it costs nothing semantically;
-            # the base side reuses the cross-epoch persisted url_hash
-            # layout, the delta side stays a broadcast (gated) — never a
-            # fresh O(frontier) exchange per epoch. The delta check covers
-            # bloom-miss rows too: blooms are merge-on-read (folded only at
-            # compaction), so a bloom miss proves absence from the BASE
-            # only — admissions since the last compaction live in the
-            # delta log alone.
-            admitted = (
-                flagged.join(
-                    self._base_urls().withColumn("_in_base", F.lit(True)),
-                    "url_hash", "left",
-                )
-                .filter(~F.col("maybe_seen") | F.col("_in_base").isNull())
-                .drop("maybe_seen", "_in_base")
+        # --- seen check: exact anti-join, presence = in base OR in delta ---
+        # The base side reuses the cross-epoch persisted url_hash layout
+        # (_base_urls), so only the candidate side shuffles; the delta side
+        # is the gated broadcast of the pinned delta keys — never a fresh
+        # O(frontier) exchange per epoch. The ADMITTED set pins because two
+        # commit-pool writes (frontier_delta, metrics' queued counter)
+        # branch off it — unpinned they would each re-run both anti-joins.
+        # The per-host dupe/unique counters read the pinned aggregate.
+        admitted = grouped.drop("n_disc").join(
+            self._base_urls(), "url_hash", "left_anti"
+        )
+        if latest is not None:
+            admitted = admitted.join(
+                self._delta_hint(latest.select("url_hash")),
+                "url_hash", "left_anti",
             )
-            if latest is not None:
-                admitted = admitted.join(
-                    self._delta_hint(latest.select("url_hash")),
-                    "url_hash", "left_anti",
-                )
-        else:
-            admitted = grouped.drop("n_disc").join(
-                self._base_urls(), "url_hash", "left_anti"
-            )
-            if latest is not None:
-                admitted = admitted.join(
-                    self._delta_hint(latest.select("url_hash")),
-                    "url_hash", "left_anti",
-                )
-        # Pin the admitted set (eager localCheckpoint — measured better
-        # than fusing this pin with the bloom_pending delta write: staging
-        # that write here serializes it, while in the commit pool it
-        # overlaps the other table writes for free).
         # the admission counter rides the pin's materialization (the other
         # half of the former metrics-write observation)
         obs_ad = Observation()
@@ -1575,27 +1406,6 @@ class FrontierEngine:
                 append["robots_state_delta"] = robots_eff.filter(
                     "_refreshed"
                 ).select("host", "crawl_delay_s", "fetched_ms")
-        if self.use_bloom:
-            # merge-on-read blooms: per epoch only the admitted url hashes
-            # append (O(admissions) — at the north-star the shard bitmaps
-            # are GBs and a per-epoch rewrite is pure non-scaling fixed
-            # cost); the bitmaps fold at compaction, the same cadence that
-            # resets the delta log. Exactness holds between folds because
-            # the admission path anti-joins the delta log for EVERY
-            # candidate, bloom-hit or not (see the seen check above).
-            if compact:
-                pending = self._deltas("bloom_pending")
-                new_hashes = admitted.select("url_hash")
-                if pending is not None:
-                    new_hashes = new_hashes.unionByName(pending)
-                replace["blooms"] = seen_mod.update_blooms(
-                    self._load("blooms"), new_hashes,
-                    cfg.num_host_shards, cfg.bloom_bits_per_shard,
-                    cfg.bloom_num_hashes,
-                )
-                drop.append("bloom_pending")
-            else:
-                append["bloom_pending"] = admitted.select("url_hash")
         if fetch_log_extra is not None:
             append["fetch_verify"] = fetch_log_extra
 
@@ -1668,13 +1478,6 @@ class FrontierEngine:
         ]
         self._release_pins()
         self._pending_metrics = (metrics_path, metrics_future, metrics_pins)
-        if compact and self.use_bloom:
-            # the commit above replaced the bloom base: next epoch's flag
-            # pass must see the folded bitmaps, not the stale broadcast —
-            # rebuild in the background while the next epoch's early
-            # phases run (the flag pass comes late in the epoch)
-            self._invalidate_bloom_broadcast()
-            self._rebuild_bloom_broadcast_async()
         self.last_timings = {k: v for k, v in _t.items() if k != '_start'}
         tracker = self.spark.sparkContext.statusTracker()
         try:
@@ -1693,15 +1496,19 @@ class FrontierEngine:
         self.bootstrap()
         stats: list[EpochStats] = []
         limit = max_epochs if max_epochs is not None else self.cfg.max_epochs
-        while True:
-            meta = self.meta()
-            if meta.get("done") or int(meta["epoch"]) >= limit:
-                break
-            st = self.run_epoch()
-            stats.append(st)
-            if st.attempts == 0 and st.queued_remaining == 0:
-                break
-        self.flush_pending_metrics()
+        try:
+            while True:
+                meta = self.meta()
+                if meta.get("done") or int(meta["epoch"]) >= limit:
+                    break
+                st = self.run_epoch()
+                stats.append(st)
+                if st.attempts == 0 and st.queued_remaining == 0:
+                    break
+        finally:
+            # an exception in a later epoch must not orphan the previous
+            # epoch's staged (write-behind) metrics
+            self.flush_pending_metrics()
         return stats
 
     # convenience readers -------------------------------------------------
@@ -1709,8 +1516,8 @@ class FrontierEngine:
     def fetch_log(self) -> DataFrame:
         """Fetch log with the exact global sequence derived from the total
         order (epoch, fetch_start_ms, host, url_canon). Inspection-scale
-        reads use one window; bulk exports should use
-        ``_with_global_seq``-style range ranking instead. Payload
+        reads use one window; bulk exports should rank with
+        ``plans.ordering.global_row_number`` instead. Payload
         verification results (when enabled) live in the fetch_verify side
         table and join back here by (url_hash, epoch)."""
         df = self._load("fetch_log").drop("new_next_allowed")

@@ -1,23 +1,21 @@
-"""Partitioned Bloom URL-seen structure (C5) — the frontier-dedup scale path.
+"""Partitioned Bloom URL-seen structure (C5) — a standalone dedup operator.
 
 Heritrix's BdbUriUniqFilter (crawler-beans.cxml:430-433) is a disk-backed
-exact set. At 10^10 URLs an exact anti-join against the full frontier
-shuffles every candidate; the Bloom shards cut that: candidates that are
-*definitely new* (any bit clear) skip the exact join entirely, and only the
-"maybe seen" residue (true hits + ~1% false positives at 10 bits/key) takes
-the exact anti-join — so the engine stays exact while the expensive join
-shrinks by the novelty rate. No false negatives by construction.
+exact set. A bloom prefilter can shrink an exact anti-join to the "maybe
+seen" residue (true hits + ~1% false positives at 10 bits/key); no false
+negatives by construction. The crawl engine does NOT use it: its URL-seen
+check is the exact anti-join over the persisted url_hash base layout plus
+the gated delta keys, and an interleaved A/B measured the bloom flag as
+pure extra cost there (SURVEY §4). This module stays as the measured
+operator that ``bench.py``'s dedup bench, perfbench's traced ``seen.*``
+round and ``tests/test_seen.py`` drive.
 
 Sharding is by ``pmod(url_hash, n_shards)`` — uniform by hash, so a
-mega-domain cannot hot-spot a shard (this is the salted/sharded layout the
-north rule asks for: host-derived keys alone would put a whole mega-host
-in one shard; hashing the full URL is the degenerate-salt limit that
-provably balances). Each shard is one binary blob row; membership tests
-vectorize in numpy over Arrow buffers, via one of two exact-equivalent
-plans picked by total bitmap size (engine config ``bloom_broadcast_bytes``):
-bounded bitmaps broadcast once per compaction and probe NARROW
-(mapInArrow, no exchange); north-star multi-GB bitmaps stream through a
-cogrouped-Arrow join per shard instead.
+mega-domain cannot hot-spot a shard (host-derived keys alone would put a
+whole mega-host in one shard; hashing the full URL is the degenerate-salt
+limit that provably balances). Each shard is one binary blob row;
+membership tests vectorize in numpy over Arrow buffers, streamed through a
+cogrouped-Arrow join per shard, so nothing is collected to the driver.
 """
 
 from __future__ import annotations
@@ -97,15 +95,11 @@ def update_blooms(
     )
 
 
-def _probe(bits: np.ndarray, hashes: np.ndarray, m_bits: int, k: int,
-           base: "np.ndarray | int" = 0) -> np.ndarray:
-    """Vectorized membership test of ``hashes`` against a uint8 bitmap.
-
-    ``base`` shifts each key's byte offset — 0 for a single-shard bitmap,
-    or a per-key offset vector when ``bits`` concatenates many shards."""
+def _probe(bits: np.ndarray, hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:
+    """Vectorized membership test of ``hashes`` against a uint8 bitmap."""
     maybe = np.ones(len(hashes), dtype=bool)
     for pos in _positions(hashes, m_bits, k):
-        maybe &= (bits[base + (pos >> 3)] >> (pos & 7) & 1).astype(bool)
+        maybe &= (bits[pos >> 3] >> (pos & 7) & 1).astype(bool)
     return maybe
 
 
@@ -150,55 +144,3 @@ def flag_maybe_seen(
         .cogroup(blooms.groupBy("shard"))
         .applyInArrow(check, out_schema)
     )
-
-
-def broadcast_blooms(spark: SparkSession, blooms: DataFrame):
-    """Collect the shard blobs and broadcast ``{shard: bytes}``.
-
-    The caller gates this by total bitmap bytes (config
-    ``bloom_broadcast_bytes``): bounded-size bloom tables ride one
-    broadcast per compaction instead of a per-epoch cogroup exchange; at
-    north-star scale (multi-GB bitmaps) the cogroup path stays."""
-    rows = blooms.select("shard", "bloom").collect()
-    return spark.sparkContext.broadcast(
-        {int(r["shard"]): bytes(r["bloom"]) for r in rows}
-    )
-
-
-def flag_maybe_seen_via_broadcast(
-    candidates: DataFrame,  # must carry url_hash
-    blobs_bcast,  # Broadcast[dict[int, bytes]] from broadcast_blooms
-    n_shards: int,
-    m_bits: int,
-    k: int,
-) -> DataFrame:
-    """Broadcast twin of :func:`flag_maybe_seen` — NARROW (mapInArrow, no
-    exchange, no shard sort): every partition probes the broadcast bitmaps
-    in place, fully vectorized across shards (the per-key shard id becomes
-    a byte offset into one concatenated bitmap array). Exactness contract:
-    identical flags to the cogroup path (tests/test_seen.py parity)."""
-    import pyarrow as pa
-
-    out_schema = T.StructType(
-        list(candidates.schema.fields)
-        + [T.StructField("maybe_seen", T.BooleanType())]
-    )  # fresh StructType: .add would mutate the DF's cached schema
-    nbytes = m_bits // 8
-
-    def probe_stream(batches):
-        blobs = blobs_bcast.value
-        bits_all = np.zeros(n_shards * nbytes, dtype=np.uint8)
-        for s, b in blobs.items():
-            bits_all[s * nbytes:(s + 1) * nbytes] = np.frombuffer(
-                b, dtype=np.uint8
-            )
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = batch.column("url_hash").to_numpy(zero_copy_only=False)
-            # same non-negative mod as shard_col's pmod
-            base = (h % n_shards).astype(np.int64) * nbytes
-            maybe = _probe(bits_all, h, m_bits, k, base=base)
-            yield batch.append_column("maybe_seen", pa.array(maybe))
-
-    return candidates.mapInArrow(probe_stream, out_schema)

@@ -21,11 +21,9 @@ import re
 from urllib.parse import parse_qsl, unquote, urlencode, urljoin, urlsplit
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -219,23 +217,8 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
 
 
 @pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: host_of(u) if u else None)
-
-
-@pandas_udf(StringType())
 def registered_domain_udf(hosts: pd.Series) -> pd.Series:
     return hosts.map(lambda h: registered_domain(h) if h else None)
-
-
-@pandas_udf(IntegerType())
-def path_depth_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: path_depth(u) if u else 0).astype("int32")
-
-
-@pandas_udf(IntegerType())
-def max_repetitions_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: max_segment_repetitions(u) if u else 0).astype("int32")
 
 
 # Links already in canonical shape skip the full parser: absolute http(s),
@@ -283,27 +266,6 @@ _RESOLVE_FULL_TYPE = StructType(
         StructField("reg_domain", StringType()),
     ]
 )
-
-
-@pandas_udf(_RESOLVE_FULL_TYPE)
-def resolve_outlink_full_udf(base: pd.Series, link: pd.Series) -> pd.DataFrame:
-    """Fused resolve → canonicalize → host → registered-domain in ONE Arrow
-    round-trip. Each ArrowEvalPython node costs a python-worker stream per
-    task; chaining three separate UDF nodes at 32 cores triples that fixed
-    cost, which dominates epoch wall time at high core counts."""
-    link_s = link.fillna("")
-    fast = link_s.str.match(_CLEAN_ABS_RE) & base.notna()
-    canon = pd.Series(index=base.index, dtype=object)
-    canon[fast] = link_s[fast]
-    slow = ~fast
-    if slow.any():
-        canon[slow] = [
-            resolve_outlink(b, l) if b else None
-            for b, l in zip(base[slow], link_s[slow])
-        ]
-    host = canon.map(lambda u: host_of(u) if u else None)
-    reg = host.map(lambda h: _reg_domain_cached(h) if h else None)
-    return pd.DataFrame({"url_canon": canon, "host": host, "reg_domain": reg})
 
 
 @pandas_udf(_RESOLVE_FULL_TYPE)
@@ -373,26 +335,6 @@ def resolve_outlinks_arr_udf(base: pd.Series, links: pd.Series) -> pd.Series:
             row.append((canon, h, reg(h)))
         out.append(row)
     return pd.Series(out, dtype=object)
-
-
-@pandas_udf(StringType())
-def resolve_outlink_udf(base: pd.Series, link: pd.Series) -> pd.Series:
-    link_s = link.fillna("")
-    fast = link_s.str.match(_CLEAN_ABS_RE) & base.notna()
-    out = pd.Series(index=base.index, dtype=object)
-    out[fast] = link_s[fast]
-    slow = ~fast
-    if slow.any():
-        out[slow] = [
-            resolve_outlink(b, l) if b else None
-            for b, l in zip(base[slow], link_s[slow])
-        ]
-    return out
-
-
-def url_hash_col(url_col):
-    """64-bit URL hash — Spark's JVM-side xxhash64 (north_rule F2 mapping)."""
-    return F.xxhash64(url_col)
 
 
 # ---------------------------------------------------------------------------

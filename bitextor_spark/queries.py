@@ -911,8 +911,7 @@ def _crawl_wave_impl(spark, cfg_kwargs):
     from bitextor_spark.frontier.world import small_world, world_to_dfs
 
     world = small_world(WorldConfig(n_hosts=4, n_pages=60))
-    cfg = CrawlConfig(max_epochs=2, max_retries=1, num_host_shards=4,
-                      **cfg_kwargs)
+    cfg = CrawlConfig(max_epochs=2, max_retries=1, **cfg_kwargs)
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="crawl_wave_")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -920,7 +919,6 @@ def _crawl_wave_impl(spark, cfg_kwargs):
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         eng = FrontierEngine(
             spark, cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng.run(max_epochs=2)
         rows = eng.fetch_log().select(

@@ -57,7 +57,6 @@ def parse_args(argv):
                    "reading tables (bench/test mode)")
     p.add_argument("--max-epochs", type=int, default=100)
     p.add_argument("--max-fetches", type=int, default=1_000_000)
-    p.add_argument("--num-host-shards", type=int, default=32)
     p.add_argument("--replenish-per-epoch", type=int, default=3000)
     p.add_argument("--epoch-window-ms", type=int, default=600_000)
     p.add_argument("--queue-order", choices=("bfs", "priority"),
@@ -67,8 +66,6 @@ def parse_args(argv):
     p.add_argument("--priority-floor", type=float, default=0.0)
     p.add_argument("--verify-payloads", action="store_true",
                    help="decode+verify image bytes per fetch wave (M4 gate)")
-    p.add_argument("--no-bloom", action="store_true",
-                   help="disable the bloom prefilter (exact anti-join only)")
     return p.parse_args(argv)
 
 
@@ -92,7 +89,6 @@ def main(argv=None) -> int:
     cfg = CrawlConfig(
         max_epochs=args.max_epochs,
         max_fetches=args.max_fetches,
-        num_host_shards=args.num_host_shards,
         replenish_per_epoch=args.replenish_per_epoch,
         epoch_window_ms=args.epoch_window_ms,
         queue_order=args.queue_order,
@@ -124,7 +120,6 @@ def main(argv=None) -> int:
 
     eng = FrontierEngine(
         spark, cfg, args.catalog_root, pages, robots, seeds,
-        use_bloom=not args.no_bloom,
         images=images, verify_payloads=args.verify_payloads,
     )
     stats = eng.run(max_epochs=args.max_epochs)

@@ -54,7 +54,6 @@ def fs_run(spark, no_aqe):
     root = tempfile.mkdtemp(prefix="cat_swap_fs_")
     eng = FrontierEngine(
         spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-        use_bloom=True,
     )
     eng.run(max_epochs=N_EPOCHS)
     yield eng
@@ -65,7 +64,6 @@ def _run_with_catalog(spark, catalog, max_epochs=N_EPOCHS):
     dfs = world_to_dfs(spark, small_world(WORLD_CFG))
     eng = FrontierEngine(
         spark, CFG, catalog, dfs["pages"], dfs["robots"], dfs["seeds"],
-        use_bloom=True,
     )
     eng.run(max_epochs=max_epochs)
     return eng
@@ -100,7 +98,6 @@ def test_table_catalog_resume(spark, fs_run, no_aqe):
         dfs = world_to_dfs(spark, small_world(WORLD_CFG))
         eng2 = FrontierEngine(
             spark, CFG, cat, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         assert int(eng2.meta()["epoch"]) == 2  # resumed, not reseeded
         eng2.run(max_epochs=N_EPOCHS)

@@ -67,7 +67,7 @@ def engine_run(spark, world, no_aqe):
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="frontier_parity_")
     eng = FrontierEngine(
-        spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"], use_bloom=True
+        spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"]
     )
     eng.run(max_epochs=N_EPOCHS)
     yield eng
@@ -130,7 +130,6 @@ def test_resume_from_snapshot(spark, world, sim, no_aqe):
     try:
         eng1 = FrontierEngine(
             spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng1.run(max_epochs=2)
         assert int(eng1.meta()["epoch"]) == 2
@@ -143,7 +142,6 @@ def test_resume_from_snapshot(spark, world, sim, no_aqe):
 
         eng2 = FrontierEngine(
             spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng2.run(max_epochs=N_EPOCHS)  # resumes from snapshot, runs 4 more
         assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
@@ -206,7 +204,6 @@ def test_priority_queue_parity(spark, no_aqe):
     try:
         eng = FrontierEngine(
             spark, cfg_p, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng.run(max_epochs=4)
         assert _log_tuples_engine(eng) == _log_tuples_sim(sim_p)
@@ -230,14 +227,14 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe):
     try:
         eng1 = FrontierEngine(
             spark, cfg_c, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng1.run(max_epochs=3)  # epoch 2 compacted, epoch 3 is a delta
         m = eng1.catalog.load_manifest()
         assert "frontier_delta" in m["tables"], "resume point must have deltas"
+        # the URL-seen check is the exact anti-join alone: no bloom tables
+        assert not {"blooms", "bloom_pending"} & set(m["tables"])
         eng2 = FrontierEngine(
             spark, cfg_c, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng2.run(max_epochs=N_EPOCHS)
         assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
@@ -246,6 +243,43 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe):
         # post-compaction manifest carries no delta log (epoch 6 compacted)
         m = eng2.catalog.load_manifest()
         assert "frontier_delta" not in m["tables"]
+        assert not {"blooms", "bloom_pending"} & set(m["tables"])
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_run_flushes_metrics_when_an_epoch_raises(spark, world):
+    """run() registers the write-behind metrics of the last committed
+    epoch even when a later epoch raises, so no staged delta is orphaned."""
+    dfs = world_to_dfs(spark, world)
+    root = tempfile.mkdtemp(prefix="frontier_flush_")
+    try:
+        eng = FrontierEngine(
+            spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
+        )
+        real_run_epoch = eng.run_epoch
+        calls = []
+
+        def run_epoch():
+            calls.append(1)
+            if len(calls) == 2:
+                raise RuntimeError("injected epoch failure")
+            return real_run_epoch()
+
+        eng.run_epoch = run_epoch
+        with pytest.raises(RuntimeError, match="injected epoch failure"):
+            eng.run(max_epochs=N_EPOCHS)
+        # read the catalog directly: engine.metrics() would flush first
+        metrics = eng.catalog.read(
+            spark, "metrics",
+            schema=FrontierEngine._TABLE_SCHEMAS["metrics"],
+        )
+        assert metrics is not None, "epoch 0 metrics were never registered"
+        fetched = metrics.filter("epoch = 0").agg(F.sum("fetched")).first()[0]
+        log_fetched = eng.fetch_log().filter(
+            "epoch = 0 AND outcome = 'FETCHED'"
+        ).count()
+        assert log_fetched > 0 and fetched == log_fetched
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -301,7 +335,7 @@ def test_robots_ttl_refresh_parity(spark, no_aqe):
     root = tempfile.mkdtemp(prefix="frontier_ttl_")
     try:
         args = (spark, ttl_cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"])
-        kw = {"use_bloom": True, "robots_versions": dfs["robots_versions"]}
+        kw = {"robots_versions": dfs["robots_versions"]}
         eng1 = FrontierEngine(*args, **kw)
         eng1.run(max_epochs=3)  # stop mid-crawl: cache is warm + committed
         eng2 = FrontierEngine(*args, **kw)  # resume from snapshot
@@ -354,7 +388,6 @@ def test_politeness_overlay_parity(spark, no_aqe):
     try:
         eng = FrontierEngine(
             spark, ov_cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True,
         )
         eng.run(max_epochs=N_EPOCHS)
         assert _log_tuples_engine(eng) == _log_tuples_sim(ov_sim)
@@ -387,7 +420,6 @@ def test_rank_regime_parity(spark, world, no_aqe, monkeypatch):
         try:
             eng = FrontierEngine(
                 spark, cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-                use_bloom=True,
             )
             eng.run(max_epochs=N_EPOCHS)
             return _log_tuples_engine(eng)

@@ -76,7 +76,7 @@ def test_engine_payload_verification(spark):
         cfg = CrawlConfig(max_epochs=3, max_retries=1, num_host_shards=4)
         eng = FrontierEngine(
             spark, cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-            use_bloom=True, images=images, verify_payloads=True,
+            images=images, verify_payloads=True,
         )
         eng.run(max_epochs=3)
         log = eng.fetch_log().collect()

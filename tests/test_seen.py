@@ -51,45 +51,3 @@ def test_incremental_update_preserves_members(spark):
     assert {r.n_items for r in b2.collect()} and sum(
         r.n_items for r in b2.collect()
     ) == 1000
-
-
-def test_broadcast_flag_parity_with_cogroup(spark):
-    """flag_maybe_seen_via_broadcast must emit IDENTICAL flags to the
-    cogrouped path (the engine picks between them by bitmap size only),
-    including extra candidate columns riding through, negative hashes
-    (pmod vs numpy-mod shard agreement), and shards with no blob."""
-    inserted = spark.range(0, 3000).select(F.xxhash64("id").alias("url_hash"))
-    blooms = spark.createDataFrame(
-        seen_mod.update_blooms(
-            seen_mod.empty_blooms(spark, N_SHARDS, M_BITS),
-            # leave some shards without a blob: only even-shard keys insert
-            inserted.filter(
-                seen_mod.shard_col(F.col("url_hash"), N_SHARDS) % 2 == 0
-            ),
-            N_SHARDS, M_BITS, K,
-        ).collect(),
-        seen_mod.BLOOM_SCHEMA,
-    ).cache()
-    probes = (
-        spark.range(0, 2000)
-        .union(spark.range(5_000_000, 5_002_000))
-        .select(
-            F.xxhash64("id").alias("url_hash"),
-            F.concat(F.lit("u"), F.col("id")).alias("url_canon"),
-        )
-    )
-    via_cogroup = {
-        r.url_canon: r.maybe_seen
-        for r in seen_mod.flag_maybe_seen(
-            probes, blooms, N_SHARDS, M_BITS, K
-        ).collect()
-    }
-    bcast = seen_mod.broadcast_blooms(spark, blooms)
-    via_bcast = {
-        r.url_canon: r.maybe_seen
-        for r in seen_mod.flag_maybe_seen_via_broadcast(
-            probes, bcast, N_SHARDS, M_BITS, K
-        ).collect()
-    }
-    assert via_bcast == via_cogroup
-    assert any(via_bcast.values()) and not all(via_bcast.values())

@@ -35,8 +35,7 @@ spark = get_spark(app_name="ab-constraint", master=f"local[{cpus}]",
                   extra_conf={"spark.sql.adaptive.enabled": "false"})
 wdfs = spark_world(spark, n_pages=2000, n_hosts=50, mean_outlinks=8,
                    seed=7, n_seeds=500)
-wcfg = CrawlConfig(max_epochs=2, max_retries=1, num_host_shards=8,
-                   bloom_bits_per_shard=1 << 20)
+wcfg = CrawlConfig(max_epochs=2, max_retries=1)
 wr = tempfile.mkdtemp(prefix="abc_warm_")
 FrontierEngine(spark, wcfg, wr, wdfs["pages"], wdfs["robots"],
                wdfs["seeds"]).run(max_epochs=2)
@@ -46,14 +45,13 @@ dfs = spark_world(spark, n_pages=2_000_000, n_hosts=6000, mean_outlinks=10,
                   seed=42, n_seeds=1_200_000)
 cfg = CrawlConfig(max_epochs=3, max_retries=1, max_fetches=10_000_000,
                   replenish_per_epoch=1000, epoch_window_ms=36_000_000,
-                  num_host_shards=32, bloom_bits_per_shard=1 << 23,
                   compact_delta_ratio=3.0)
 
 
 def one_run(mode):
     root = tempfile.mkdtemp(prefix=f"abc_{mode}_")
     eng = FrontierEngine(spark, cfg, root, dfs["pages"], dfs["robots"],
-                         dfs["seeds"], use_bloom=True)
+                         dfs["seeds"])
     # AFTER init: the engine defaults the conf to false at construction
     spark.conf.set("spark.sql.constraintPropagation.enabled", mode)
     eng.bootstrap()

@@ -96,11 +96,10 @@ def main() -> int:
                       mean_outlinks=10, seed=42, n_seeds=max(n * 3 // 5, 10))
     cfg = CrawlConfig(max_epochs=1, max_retries=1, max_fetches=10_000_000,
                       replenish_per_epoch=1000, epoch_window_ms=36_000_000,
-                      num_host_shards=32, bloom_bits_per_shard=1 << 23,
                       compact_delta_ratio=3.0)
     root = tempfile.mkdtemp(prefix="winner_ab_")
     eng = FrontierEngine(spark, cfg, root, dfs["pages"], dfs["robots"],
-                         dfs["seeds"], use_bloom=True)
+                         dfs["seeds"])
     eng.bootstrap()
     eng.run_epoch()  # stages the fat epoch's events
     ev_path = sorted(glob.glob(root + "/data/fetch_log/delta-*"))[0]

@@ -48,7 +48,7 @@ from bitextor_spark.functions.images import (  # noqa: E402
 
 # --- the registry queries' exact world/config (queries.py::_crawl_wave_impl)
 WORLD_CFG = WorldConfig(n_hosts=4, n_pages=60)
-BASE_CFG = dict(max_epochs=2, max_retries=1, num_host_shards=4)
+BASE_CFG = dict(max_epochs=2, max_retries=1)
 
 FETCH_LOG_COLS = (
     ("seq", "BIGINT"),

@@ -46,8 +46,7 @@ def main() -> None:
     # warmup (same shapes as bench)
     wdfs = spark_world(spark, n_pages=2000, n_hosts=50, mean_outlinks=8,
                        seed=7, n_seeds=500)
-    wcfg = CrawlConfig(max_epochs=2, max_retries=1, num_host_shards=8,
-                       bloom_bits_per_shard=1 << 20)
+    wcfg = CrawlConfig(max_epochs=2, max_retries=1)
     wr = tempfile.mkdtemp(prefix="crawl_warm_")
     FrontierEngine(spark, wcfg, wr, wdfs["pages"], wdfs["robots"],
                    wdfs["seeds"]).run(max_epochs=2)
@@ -58,12 +57,11 @@ def main() -> None:
     cfg = CrawlConfig(
         max_epochs=3, max_retries=1, max_fetches=10_000_000,
         replenish_per_epoch=1000, epoch_window_ms=36_000_000,
-        num_host_shards=32, bloom_bits_per_shard=1 << 23,
         compact_delta_ratio=3.0,
     )
     root = tempfile.mkdtemp(prefix=f"crawl_prof_{cpus}_")
     eng = FrontierEngine(spark, cfg, root, dfs["pages"], dfs["robots"],
-                         dfs["seeds"], use_bloom=True)
+                         dfs["seeds"])
     t0 = time.time()
     stats = eng.run(max_epochs=3)
     wall = time.time() - t0
