@@ -219,8 +219,9 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
                 "wall_sec": round(e_wall, 2),
                 "urls_per_sec": round(st.attempts / e_wall, 1),
                 "n_jobs": eng.last_timings.get("n_jobs"),
+                "n_compiles": eng.last_timings.get("n_compiles"),
                 "phases": {k: v for k, v in eng.last_timings.items()
-                           if k != "n_jobs"},
+                           if k not in ("n_jobs", "n_compiles")},
                 # per-EPOCH steal/busy: each throughput sample carries the
                 # box state it was measured under, so a steal episode is
                 # attributable to the exact samples it distorted
@@ -230,9 +231,11 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
                 break
         # settle the write-behind metrics sink OUTSIDE the timed window:
         # its write overlapped the measured epochs (that's the point); the
-        # final registration is bookkeeping, not crawl throughput
+        # final registration is bookkeeping, not crawl throughput, and is
+        # reported on its own as flush_sec
         wall = time.time() - t0
         eng.flush_pending_metrics()
+        flush = time.time() - t0 - wall
         attempts = sum(e["attempts"] for e in epochs)
         shutil.rmtree(root, ignore_errors=True)
         # ceiling job + its own steal window: the ceiling is only a valid
@@ -246,6 +249,7 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
             "epochs": len(epochs),
             "fetch_attempts": attempts,
             "wall_sec": round(wall, 2),
+            "flush_sec": round(flush, 2),
             "urls_per_sec": round(attempts / wall, 1),
             "epoch_samples": epochs,
             "jvm_ceiling_rows_per_sec": ceil,

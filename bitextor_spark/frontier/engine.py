@@ -39,6 +39,7 @@ from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -68,6 +69,7 @@ HOST_STATE_SCHEMA = "host string, next_allowed_ms long"
 # than this falls back to the full skew-proof per-host rank (bounded driver
 # memory, same discipline as the delta broadcast gate)
 _HOT_HOST_GATE = 1024
+_CONSTRAINT_PROPAGATION = "spark.sql.constraintPropagation.enabled"
 ROBOTS_STATE_SCHEMA = "host string, crawl_delay_s int, fetched_ms long"
 METRIC_COLS = ("fetched", "errors", "skipped_seen", "skipped_scope", "queued")
 
@@ -75,6 +77,18 @@ METRIC_COLS = ("fetched", "errors", "skipped_seen", "skipped_scope", "queued")
 def _host_col(url_col):
     # try_: Spark 4's plain parse_url THROWS on URLs java.net.URI rejects
     return F.try_parse_url(url_col, F.lit("HOST"))
+
+
+def _codegen_compiles(spark: SparkSession) -> int | None:
+    """Generated classes compiled in this JVM so far (Spark's codegen
+    metrics count compiles, not cache hits); None off a classic session."""
+    try:
+        return (
+            spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount()
+        )
+    except (AttributeError, Py4JError):
+        return None
 
 
 def _parquet_rows(path: str) -> int:
@@ -158,10 +172,13 @@ class FrontierEngine:
         # the epoch DAG is ~200 operators of driver-side analysis per
         # epoch; disabling it is semantics-neutral (it only ADDS inferred
         # filters) and measured ~7% off the 3-epoch bench-world crawl wall
-        # (interleaved 16-core A/B, r5). Session-wide runtime conf — set
-        # it back after construction to override.
+        # (interleaved 16-core A/B, r5). Session-wide runtime conf;
+        # close() puts back the value (or absence) found here.
+        self._prev_constraint_propagation = spark.conf.getAll.get(
+            _CONSTRAINT_PROPAGATION
+        )
         try:
-            spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+            spark.conf.set(_CONSTRAINT_PROPAGATION, "false")
         except Exception:
             pass
         self._epoch_pins: list[DataFrame] = []
@@ -674,6 +691,7 @@ class FrontierEngine:
         # the scaling-efficiency driver) is then measurable by bench
         job_group = f"epoch-{id(self):x}-{epoch}"
         self.spark.sparkContext.setJobGroup(job_group, "crawl epoch")
+        compiles0 = _codegen_compiles(self.spark)
         seq_offset = int(meta["seq_offset"])
         total_fetched = int(meta["total_fetched"])
         epoch_start = epoch * cfg.epoch_window_ms
@@ -1486,6 +1504,10 @@ class FrontierEngine:
             )
         except Exception:
             pass
+        if compiles0 is not None:
+            self.last_timings['n_compiles'] = (
+                _codegen_compiles(self.spark) - compiles0
+            )
         return EpochStats(epoch, n_fetched, n_attempts, n_new, queued_remaining)
 
     # ------------------------------------------------------------------ #
@@ -1556,3 +1578,18 @@ class FrontierEngine:
             except Exception:
                 pass
         self._pending_metrics = None
+
+    def close(self) -> None:
+        """Hand the session back as the engine found it: register pending
+        metrics, free the per-base caches and restore constraint
+        propagation. The catalog readers still work afterwards."""
+        self.flush_pending_metrics()
+        for _, df in self._base_caches.values():
+            df.unpersist()
+        self._base_caches.clear()
+        if self._prev_constraint_propagation is None:
+            self.spark.conf.unset(_CONSTRAINT_PROPAGATION)
+        else:
+            self.spark.conf.set(
+                _CONSTRAINT_PROPAGATION, self._prev_constraint_propagation
+            )

@@ -12,6 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-class cache (static conf, default 100 entries): a crawl
+# epoch's working set is 131 classes, so at the default LRU evicts each one
+# before its next use and every epoch recompiles all of them.
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def get_spark(
     app_name: str = "bitextor-spark",
@@ -39,6 +44,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -23,7 +23,8 @@ through the same path, so both sides must see one filesystem. Object-store
 URIs (s3://...) are rejected — swap SnapshotCatalog for real Iceberg
 tables (sources/snapshots.py docstring) before pointing state at S3.
 
-The session is taken from spark-submit (no master/conf override here);
+The session is taken from spark-submit (no master override here; the one
+conf it defaults is the generated-class cache size, ``session.py``);
 shuffle partitioning, AQE, and executor sizing are cluster-side flags.
 Resume is automatic: if ``--catalog-root`` already holds a committed
 snapshot, the run continues from the last epoch without re-fetching or
@@ -79,12 +80,22 @@ def main(argv=None) -> int:
             "for object-store state."
         )
 
+    from pyspark import SparkConf
     from pyspark.sql import SparkSession
 
     from bitextor_spark.config import CrawlConfig
     from bitextor_spark.frontier.engine import FrontierEngine
+    from bitextor_spark.session import CODEGEN_CACHE_ENTRIES
 
-    spark = SparkSession.builder.appName("bitextor-spark-crawl").getOrCreate()
+    # a static conf, so it is set before the session exists; a --conf on
+    # the spark-submit line still wins
+    codegen_cache = "spark.sql.codegen.cache.maxEntries"
+    spark = (
+        SparkSession.builder.appName("bitextor-spark-crawl")
+        .config(codegen_cache,
+                SparkConf().get(codegen_cache, str(CODEGEN_CACHE_ENTRIES)))
+        .getOrCreate()
+    )
 
     cfg = CrawlConfig(
         max_epochs=args.max_epochs,

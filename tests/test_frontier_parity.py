@@ -284,6 +284,81 @@ def test_run_flushes_metrics_when_an_epoch_raises(spark, world):
         shutil.rmtree(root, ignore_errors=True)
 
 
+# Runs in a fresh process: Spark sizes its generated-class cache once per
+# JVM, and this session's cache already holds the earlier tests' classes.
+_COMPILE_PROBE = """
+import dataclasses, json, sys
+sys.path.insert(0, {tests_dir!r})
+from bitextor_spark.frontier.engine import FrontierEngine
+from bitextor_spark.frontier.world import small_world, world_to_dfs
+from bitextor_spark.session import get_spark
+from test_frontier_parity import CFG, WORLD_CFG
+
+spark = get_spark(master="local[2]", shuffle_partitions=4, extra_conf={{
+    "spark.sql.adaptive.enabled": "false",
+    "spark.ui.showConsoleProgress": "false"}})
+compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME())
+dfs = world_to_dfs(spark, small_world(WORLD_CFG))
+eng = FrontierEngine(spark, dataclasses.replace(CFG, compact_delta_ratio=0.0),
+                     {root!r}, dfs["pages"], dfs["robots"], dfs["seeds"])
+eng.bootstrap()
+counts = []
+for _ in range(3):
+    c0 = compiles.getCount()
+    eng.run_epoch()
+    counts.append(compiles.getCount() - c0)
+print(json.dumps(counts))
+"""
+
+
+def test_steady_state_epoch_reuses_generated_code(tmp_path):
+    """Every epoch at a fixed plan shape (compaction each epoch) runs the
+    same generated classes up to a few epoch-valued literals, so a
+    steady-state epoch must find them in Spark's codegen cache instead of
+    compiling its whole working set again."""
+    import json
+    import subprocess
+    import sys
+
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    repo = os.path.dirname(tests_dir)
+    code = _COMPILE_PROBE.format(tests_dir=tests_dir,
+                                 root=str(tmp_path / "catalog"))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g",
+           "PYTHONPATH": os.pathsep.join(
+               p for p in (repo, os.environ.get("PYTHONPATH")) if p)}
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, cwd=repo, env=env, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    counts = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert counts[2] * 4 <= counts[0], f"compiles per epoch: {counts}"
+
+
+def test_close_restores_session(spark, world):
+    """close() after run() frees the per-base caches and leaves the
+    session's confs as they were."""
+    from bitextor_spark.frontier.engine import _CONSTRAINT_PROPAGATION
+
+    # as in a fresh session, so close() has an override to undo
+    spark.conf.unset(_CONSTRAINT_PROPAGATION)
+    confs = dict(spark.conf.getAll)
+    dfs = world_to_dfs(spark, world)
+    root = tempfile.mkdtemp(prefix="frontier_close_")
+    try:
+        eng = FrontierEngine(
+            spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
+        )
+        eng.run(max_epochs=2)
+        base_caches = [df for _, df in eng._base_caches.values()]
+        assert base_caches and all(df.is_cached for df in base_caches)
+        eng.close()
+        assert dict(spark.conf.getAll) == confs
+        assert not any(df.is_cached for df in base_caches)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_https_fallback_seed(engine_run, sim):
     """C2: the dead-http seed for the https-only host bootstraps as https
     and gets crawled (utils/common.py:155-181 semantics), identically in
