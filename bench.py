@@ -195,12 +195,6 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
             # stays far under delta_broadcast_rows.
             compact_delta_ratio=3.0,
         )
-        # A/B knob: force the pre-walk rank regimes (0 = always rank, as
-        # before the excess gate) without editing config defaults
-        _rank_excess = os.environ.get("SPARK_GRAFT_RANK_EXCESS")
-        if _rank_excess is not None:
-            import dataclasses as _dc
-            cfg = _dc.replace(cfg, rank_excess_rows=int(_rank_excess))
         root = tempfile.mkdtemp(prefix=f"crawl_bench_{cpus}_")
         eng = FrontierEngine(spark, cfg, root, dfs["pages"], dfs["robots"],
                              dfs["seeds"])
@@ -459,12 +453,11 @@ def write_report(result: dict) -> None:
             "per-epoch sample carries the /proc/stat steal% of its own "
             "measurement window; min/median/max columns expose dispersion "
             "so a steal episode reads as noise, not regression. jobs/epoch "
-            "is the MAX over epochs: it grows by one broadcast anti-join "
-            "job per epoch as the uncompacted delta chain lengthens "
-            "(bounded by _DELTA_CHAIN_MAX_PARTS=8, then the constant-job "
-            "shuffle groupBy takes over; compaction folds the chain — "
-            "this bench pushes compaction out of the window on purpose), "
-            "so it is amortized-constant per epoch, not frontier-size-"
+            "is the MAX over epochs. It does not grow with the "
+            "uncompacted delta log (this bench pushes compaction out of "
+            "the window on purpose): the log's latest versions are the "
+            "read itself for one append and one latest-wins groupBy for "
+            "more, so it is constant per epoch, not frontier-size-"
             "dependent.",
             "",
             "| cores | samples | urls/s min/med/max | best run | "
@@ -570,10 +563,11 @@ def write_report(result: dict) -> None:
             "Fixed cost per epoch is bounded by design: the engine runs a "
             "constant Spark-job count per epoch regardless of data volume "
             "(pinned intermediates, one single-row counter collect, "
-            "parallel commit writes, plus two narrow "
-            "hot-host gate jobs that replace two full exchanges of the "
-            "queued set) — see the jobs/epoch column, measured via "
-            "per-epoch job groups. Epoch phases in BENCH/last_run.json: "
+            "parallel commit writes, plus one narrow "
+            "hot-host gate job that skips the rank's two full exchanges "
+            "of the queued set while the over-cap volume is small) — see "
+            "the jobs/epoch column, measured via per-epoch job groups. "
+            "Epoch phases in BENCH/last_run.json: "
             "pin_delta + topk_gate + plan_candidates together are the "
             "candidate phase (the former single plan_candidates mark).",
             "",

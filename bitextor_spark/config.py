@@ -154,8 +154,8 @@ class CrawlConfig:
     # The per-host k_cap rank before the politeness walk is a pure
     # volume cap (the walk's prefix masks enforce budget + window
     # exactly, so walking a host's WHOLE queue is always correct).
-    # Skip the rank — one consumption of the queued set instead of a
-    # hot/cold split plus two window exchanges — while the total
+    # Skip the rank — one consumption of the queued set instead of the
+    # skew-proof rank's two window exchanges — while the total
     # over-cap volume (Σ max(rows − k_cap, 0) over hot hosts, an upper
     # bound from the gate's count pass) stays under this many rows;
     # past it (mega-host regime) the rank pays for itself by shrinking

@@ -27,14 +27,24 @@ the single-threaded simulator in tests/test_frontier_parity.py.
 Skew: the per-host top-k prefix bounds any mega-host's contribution to an
 epoch at the politeness ceiling (window_ms / min_delay + retries), so the
 walk's host segment for the hottest host is O(hundreds) of rows no matter
-how many billions of its URLs are queued. Frontier state lives in
-snapshot tables (sources/snapshots.py); every epoch is resumable (kill →
-rerun uncommitted epoch, identical by the virtual clock).
+how many billions of its URLs are queued. The prefix is a volume cap, not
+a correctness step, so it has two outcomes: while the gate's over-cap
+excess stays under cfg.rank_excess_rows the whole queued set flows to the
+walk in one consumption; past it every host is ranked by the skew-proof
+per_key_topk_passthrough.
+
+Frontier state lives in snapshot tables (sources/snapshots.py): a
+single-version base plus a per-epoch delta log. The log's latest version
+per URL is the read itself while it holds one append, and one latest-wins
+groupBy (_latest_wins, the same fold compaction runs) once it holds more.
+Every epoch is resumable (kill → rerun uncommitted epoch, identical by
+the virtual clock).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Any, Callable
 
 import numpy as np
@@ -65,10 +75,6 @@ EVENT_SCHEMA = (
     "not_before_ms long, discovered_epoch int"
 )
 HOST_STATE_SCHEMA = "host string, next_allowed_ms long"
-# max over-k_cap hosts handled via the driver-side isin prefix filter; more
-# than this falls back to the full skew-proof per-host rank (bounded driver
-# memory, same discipline as the delta broadcast gate)
-_HOT_HOST_GATE = 1024
 _CONSTRAINT_PROPAGATION = "spark.sql.constraintPropagation.enabled"
 ROBOTS_STATE_SCHEMA = "host string, crawl_delay_s int, fetched_ms long"
 METRIC_COLS = ("fetched", "errors", "skipped_seen", "skipped_scope", "queued")
@@ -89,6 +95,20 @@ def _codegen_compiles(spark: SparkSession) -> int | None:
         )
     except (AttributeError, Py4JError):
         return None
+
+
+def _unpin(dfs) -> None:
+    """Free pinned blocks now instead of at GC + ContextCleaner. A persist
+    pin is a cached query; a localCheckpoint pin is not (its unpersist is
+    a no-op), so its checkpointed RDD is freed directly."""
+    for df in dfs:
+        try:
+            if df.is_cached:
+                df.unpersist()
+            else:
+                df._jdf.queryExecution().logical().rdd().unpersist(False)
+        except (AttributeError, Py4JError):
+            pass  # session already stopped: nothing left to free
 
 
 def _parquet_rows(path: str) -> int:
@@ -210,11 +230,7 @@ class FrontierEngine:
         """Free the epoch's materialized blocks immediately after commit
         rather than waiting for GC + ContextCleaner (a 50-epoch crawl would
         otherwise accumulate checkpoint blocks nondeterministically)."""
-        for df in self._epoch_pins:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        _unpin(self._epoch_pins)
         self._epoch_pins = []
 
     # ------------------------------------------------------------------ #
@@ -232,11 +248,11 @@ class FrontierEngine:
         # materialize the (tiny) seed pipeline once: every downstream action
         # would otherwise re-run the canonicalize/reg-domain UDF fan-out.
         # One fused Arrow UDF = one python round-trip per task.
-        s = (
+        s = self._pin(
             self.seeds.withColumn("_c", canonicalize_full_udf("seed_url"))
             .select("seed_id", "seed_url", "_c.url_canon", "_c.host", "_c.reg_domain")
             .filter(F.col("url_canon").isNotNull())
-        ).localCheckpoint()
+        )
         # C2 https fallback (utils/common.py:155-181): a dead http seed
         # whose https twin resolves bootstraps as https. Two probes against
         # the co-partitioned pages cache; bootstrap-only cost.
@@ -244,7 +260,7 @@ class FrontierEngine:
         https_twin = F.concat(
             F.lit("https://"), F.substring("url_canon", len("http://") + 1, 1 << 30)
         )
-        s = (
+        s = self._pin(
             s.join(
                 page_urls.withColumn("_live", F.lit(True)), "url_canon", "left"
             )
@@ -271,13 +287,13 @@ class FrontierEngine:
                 "host",
                 "reg_domain",
             )
-        ).localCheckpoint()
-        seed_domains = s.select("reg_domain").distinct().localCheckpoint()
+        )
+        seed_domains = self._pin(s.select("reg_domain").distinct())
         scoped = apply_scope(
             s.withColumn("hop", F.lit(0)), seed_domains, self.robots, cfg
         ).filter(F.col("in_scope"))
         w = Window.partitionBy("url_canon").orderBy("seed_id")
-        frontier = (
+        frontier = self._pin(  # reused by host_state, commit, count
             scoped.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(
@@ -294,7 +310,7 @@ class FrontierEngine:
                 F.lit(1.0).alias("priority"),
                 F.lit(0).alias("updated_epoch"),
             )
-        ).localCheckpoint()  # reused by host_state, commit, count
+        )
         host_state = frontier.select("host").distinct().withColumn(
             "next_allowed_ms", F.lit(0).cast("long")
         )
@@ -305,6 +321,7 @@ class FrontierEngine:
                   "queued": (n_seeds := frontier.count()),
                   "frontier_rows": n_seeds, "done": False},
         )
+        self._release_pins()
 
     def _verify_payloads(self, events: DataFrame) -> DataFrame:
         """Per-row payload invariant (M4): decode image bytes in Arrow
@@ -438,91 +455,41 @@ class FrontierEngine:
             return F.broadcast(df)
         return df
 
-    # past this many un-compacted appends the anti-join chain's lineage
-    # (K-1 stacked broadcast anti-joins) stops paying for itself; the
-    # shuffle groupBy is exact at any K
-    _DELTA_CHAIN_MAX_PARTS = 8
-
     def _delta_latest(self) -> DataFrame | None:
         """Latest version per changed url_hash, or None when no delta log
         exists. run_epoch pins this once (it is O(changes since last
         compaction)) and threads it through every view below — it feeds
-        two branches of the candidate DAG plus the discovery anti-join and
-        the broadcast build, so recomputing it per consumer multiplies the
-        latest-wins cost. EACH per-epoch append is single-version per
-        url_hash (a URL changes at most once per epoch, and an epoch's
-        attempted and admitted sets are disjoint), so:
+        two branches of the candidate DAG plus the discovery anti-join, so
+        recomputing it per consumer multiplies the latest-wins cost. Two
+        paths, both exact:
 
-        - one append: latest-wins is the identity — return the read;
-        - few appends under the broadcast gate: latest = newest append,
-          plus each older append anti-joined against the KEYS of all
-          newer appends (manifest order IS updated_epoch order) — K-1
-          broadcast anti-joins, no shuffle, no sort-aggregate (measured
-          ~2x cheaper than the groupBy at the bench's 2M-version log);
-        - long log or past `delta_broadcast_rows` (compaction-overdue
-          backlog): the shuffle groupBy, exact at any size — the same
-          regime split as every other delta key-set decision."""
+        - one append: each per-epoch append is single-version per url_hash
+          (a URL changes at most once per epoch, and an epoch's attempted
+          and admitted sets are disjoint), so latest-wins is the identity
+          and the read is returned as is;
+        - two or more: one _latest_wins groupBy over the whole log, the
+          same fold compaction runs."""
         m = self.catalog.load_manifest()
         if m is None or "frontier_delta" not in m.get("tables", {}):
             return None
-        n_parts = len(m["tables"]["frontier_delta"]["paths"])
-        if n_parts <= 1:
-            return self._deltas("frontier_delta")
-        n_rows = int(m["meta"].get("delta_rows", 0))
-        if (n_parts > self._DELTA_CHAIN_MAX_PARTS
-                or n_rows > self.cfg.delta_broadcast_rows):
-            return self._latest_wins(self._deltas("frontier_delta"))
-        parts = self.catalog.read_parts(
-            self.spark, "frontier_delta",
-            schema=self._TABLE_SCHEMAS["frontier_delta"],
-        )
-        out = parts[-1]
-        newer_keys = parts[-1].select("url_hash")
-        for older in parts[-2::-1]:
-            out = out.unionByName(
-                older.join(F.broadcast(newer_keys), "url_hash", "left_anti")
-            )
-            newer_keys = newer_keys.unionByName(older.select("url_hash"))
-        return out
+        deltas = self._deltas("frontier_delta")
+        if len(m["tables"]["frontier_delta"]["paths"]) <= 1:
+            return deltas
+        return self._latest_wins(deltas)
 
-    def _merge_latest(self, base: DataFrame, latest: DataFrame) -> DataFrame:
+    def _merge_latest(
+        self, base: DataFrame, latest: DataFrame | None
+    ) -> DataFrame:
         """base (single-version) merged with the latest delta versions.
         The wide groupBy already ran on the (small) delta side; the base
         pays one anti-join against the broadcast-gated changed-key set."""
+        if latest is None:
+            return base
         unchanged = base.join(
             self._delta_hint(latest.select("url_hash")),
             "url_hash", "left_anti",
         )
         return unchanged.unionByName(latest)
-
-    _AUTO = object()  # sentinel: compute _delta_latest() internally
-
-    def _frontier_view(self, latest: DataFrame | None = _AUTO) -> DataFrame:
-        if latest is FrontierEngine._AUTO:
-            latest = self._delta_latest()
-        base = self._load("frontier")
-        if latest is None:
-            return base
-        return self._merge_latest(base, latest)
-
-    def _queued_view(self, latest: DataFrame | None = _AUTO) -> DataFrame:
-        """Current QUEUED rows. The state filter pushes into the base scan;
-        changed URLs are represented solely by their latest delta version
-        (still-QUEUED retry bumps survive, terminal transitions drop out),
-        and a terminal-in-base URL never has a delta version (transitions
-        are monotone), so base QUEUED rows minus changed keys is exact."""
-        if latest is FrontierEngine._AUTO:
-            latest = self._delta_latest()
-        q = self._queued_base()
-        if latest is None:
-            return q
-        unchanged = q.join(
-            self._delta_hint(latest.select("url_hash")),
-            "url_hash", "left_anti",
-        )
-        return unchanged.unionByName(
-            latest.filter(F.col("state") == "QUEUED")
-        )
 
     def _base_cached(
         self, name: str, build: Callable[[], DataFrame]
@@ -539,10 +506,7 @@ class FrontierEngine:
         if cached is not None and cached[0] == key:
             return cached[1]
         if cached is not None:
-            try:
-                cached[1].unpersist()
-            except Exception:
-                pass
+            _unpin([cached[1]])
         df = build().persist()
         self._base_caches[name] = (key, df)
         return df
@@ -590,34 +554,42 @@ class FrontierEngine:
             .sortWithinPartitions("url_hash")
         ))
 
-    def _host_state_view(self) -> DataFrame:
-        base = self._load("host_state")
-        deltas = self._deltas("host_state_delta")
-        if deltas is None:
-            return base
+    def _state_parts(
+        self, name: str, new: DataFrame | None
+    ) -> list[DataFrame]:
+        """A per-host state table's base, its delta log and ``new`` (this
+        epoch's rows, when compaction folds them in), whichever exist."""
+        base = self.catalog.read(
+            self.spark, name, schema=self._TABLE_SCHEMAS[name]
+        )
+        return [p for p in (base, self._deltas(f"{name}_delta"), new)
+                if p is not None]
+
+    def _host_state_view(self, new: DataFrame | None = None) -> DataFrame:
+        """Per-host politeness cursor. Cursors only grow, so the merge of
+        base ∪ deltas ∪ ``new`` is a plain max()."""
+        parts = self._state_parts("host_state", new)
+        if len(parts) == 1:
+            return parts[0]
         return (
-            base.unionByName(deltas)
+            reduce(DataFrame.unionByName, parts)
             .groupBy("host")
             .agg(F.max("next_allowed_ms").alias("next_allowed_ms"))
         )
 
-    def _robots_state_view(self) -> DataFrame | None:
+    def _robots_state_view(
+        self, new: DataFrame | None = None
+    ) -> DataFrame | None:
         """Per-host robots cache (crawl_delay_s, fetched_ms) — MOR like
         host_state: fetch timestamps only grow, so latest-wins is a
-        max_by over base ∪ deltas. None until the first TTL-mode epoch."""
-        base = self.catalog.read(
-            self.spark, "robots_state", schema=ROBOTS_STATE_SCHEMA
-        )
-        deltas = self._deltas("robots_state_delta")
-        if base is None and deltas is None:
+        max_by over base ∪ deltas ∪ ``new``. None until the first
+        TTL-mode epoch."""
+        parts = self._state_parts("robots_state", new)
+        if not parts:
             return None
-        both = (
-            base.unionByName(deltas)
-            if base is not None and deltas is not None
-            else (base if base is not None else deltas)
-        )
         return (
-            both.groupBy("host")
+            reduce(DataFrame.unionByName, parts)
+            .groupBy("host")
             .agg(
                 F.max_by(
                     F.struct("crawl_delay_s", "fetched_ms"), "fetched_ms"
@@ -792,78 +764,40 @@ class FrontierEngine:
         )
         # The k_cap prefix truncates ONLY hosts holding more eligible rows
         # than the cap — at web scale that is the mega-domain tail, not the
-        # typical host. Ranking everything costs two full exchanges of the
-        # queued set per epoch for a near-no-op, so the rank is gated: a
-        # narrow UPPER-BOUND count pass finds possibly-over-cap hosts and
-        # only THEIR rows pay the rank shuffle; every other host's rows
-        # pass through with no exchange at all. The bound's base-side term
-        # is the per-compaction cached host-count table (O(hosts), see
+        # typical host — and the walk's prefix masks enforce budget +
+        # window exactly on a host's whole queue, so the rank is a volume
+        # cap, never a correctness step. It is gated on an UPPER-BOUND
+        # over-cap volume: the bound's base-side term is the
+        # per-compaction cached host-count table (O(hosts), see
         # _base_host_counts) and its per-epoch work is one groupBy over
         # the pinned delta projection — O(changes), never an O(queued)
         # scan per epoch. Every relaxation (not_before ignored, changed
-        # base rows counted on both sides) inflates counts, so
-        # hot ⊇ true-hot always holds: a false positive ranks one extra
-        # host, a miss is impossible, and walk groups stay ≤ k_cap +
-        # blocked. Driver list bounded by _HOT_HOST_GATE (same discipline
-        # as delta_broadcast_rows); above it → the full skew-proof rank
-        # (correct at any skew shape).
+        # base rows counted on both sides) inflates counts, so a stale
+        # count can only force a redundant rank, never an undersized one.
         bound = self._base_host_counts()
         if latest is not None:
             bound = bound.unionByName(
                 latest.filter(F.col("state") == "QUEUED")
                 .groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
             )
-        hot_counts = (
+        # one aggregate job (NOT limit().collect(): CollectLimit executes
+        # as incremental scale-up jobs — 5+ jobs for an empty result)
+        excess = int(
             bound.groupBy("host").agg(F.sum("_n").alias("_n"))
             .filter(F.col("_n") > k_cap)
+            .agg(F.sum(F.col("_n") - k_cap)).collect()[0][0] or 0
         )
-        hot_df = hot_counts.select("host")
-        # one aggregate job answers BOTH gate questions (NOT
-        # limit().collect(): CollectLimit executes as incremental
-        # scale-up jobs — 5+ jobs for an empty result): how many hosts
-        # exceed the cap, and how much over-cap VOLUME they hold. The
-        # walk's prefix masks enforce budget + window exactly on a
-        # host's whole queue, so the rank is a volume cap, never a
-        # correctness step — while the excess stays under
-        # cfg.rank_excess_rows the queued set flows to the walk in ONE
-        # consumption (no hot/cold split re-evaluating the candidate
-        # DAG, no window exchanges); the extra exchange volume is the
-        # excess itself, bounded by the gate. Excess is an upper bound
-        # (same relaxations as the host counts), so a stale count can
-        # only force a redundant rank, never an undersized one.
-        gate_row = hot_counts.agg(
-            F.count(F.lit(1)).alias("nh"),
-            F.sum(F.col("_n") - k_cap).alias("excess"),
-        ).collect()[0]
-        n_hot = int(gate_row["nh"] or 0)
-        excess = int(gate_row["excess"] or 0)
         mark('topk_gate')
-        blocked_col = F.col("not_before_ms") > epoch_start
-        if n_hot == 0 or excess <= cfg.rank_excess_rows:
-            # no host over the cap, or the over-cap volume is cheaper
-            # to walk than to rank: the whole queued set flows to the
-            # walk in ONE consumption, no rank, no union
+        if excess <= cfg.rank_excess_rows:
+            # the over-cap volume is cheaper to walk than to rank: the
+            # whole queued set flows to the walk in ONE consumption, no
+            # window exchanges; the extra walk volume is the excess itself
             cand = queued
-        elif n_hot > _HOT_HOST_GATE:
-            cand = per_key_topk_passthrough(
-                queued, "host", order_cols, k_cap, blocked_col
-            )
         else:
-            # hot side first: the isin predicate pushes into the cached
-            # base scan, so the second consumption of `queued` touches
-            # only the hot hosts' rows
-            hot_hosts = [r.host for r in hot_df.collect()]
-            # host.isNull() keeps the split partition-complete: isin and
-            # ~isin both evaluate NULL for a NULL host, which would silently
-            # drop the row from BOTH branches (hosts are non-null today —
-            # this guards the invariant, not a live case)
-            cand = queued.filter(
-                F.col("host").isNull() | ~F.col("host").isin(hot_hosts)
-            ).unionByName(
-                per_key_topk_passthrough(
-                    queued.filter(F.col("host").isin(hot_hosts)),
-                    "host", order_cols, k_cap, blocked_col,
-                )
+            # mega-host regime: the skew-proof rank over every host
+            cand = per_key_topk_passthrough(
+                queued, "host", order_cols, k_cap,
+                F.col("not_before_ms") > epoch_start,
             )
 
         # --- per-host state (fetch resolve already happened per side) ---
@@ -1370,6 +1304,10 @@ class FrontierEngine:
         replace: dict[str, DataFrame] = {}
         append: dict[str, DataFrame] = {}
         drop: list[str] = []
+        if ttl_mode:
+            robots_refreshed = robots_eff.filter("_refreshed").select(
+                "host", "crawl_delay_s", "fetched_ms"
+            )
         if compact:
             # rewrite the base as the merged view (including this epoch's
             # delta) and drop the delta logs — read amplification resets.
@@ -1382,48 +1320,18 @@ class FrontierEngine:
             replace["frontier"] = self._merge_latest(
                 self._load("frontier"), self._latest_wins(all_d)
             )
-            old_h = self._deltas("host_state_delta")
-            all_h = self._load("host_state").unionByName(host_state_delta)
-            if old_h is not None:
-                all_h = all_h.unionByName(old_h)
-            replace["host_state"] = all_h.groupBy("host").agg(
-                F.max("next_allowed_ms").alias("next_allowed_ms")
-            )
+            replace["host_state"] = self._host_state_view(host_state_delta)
             drop = ["frontier_delta", "host_state_delta"]
             if ttl_mode:
-                # fold the robots cache the same way: base ∪ delta log ∪
-                # this epoch's refreshed rows, latest-fetch-wins
-                parts = [
-                    robots_eff.filter("_refreshed").select(
-                        "host", "crawl_delay_s", "fetched_ms"
-                    )
-                ]
-                old_r = self.catalog.read(
-                    self.spark, "robots_state", schema=ROBOTS_STATE_SCHEMA
-                )
-                old_rd = self._deltas("robots_state_delta")
-                parts += [p for p in (old_r, old_rd) if p is not None]
-                all_r = parts[0]
-                for p in parts[1:]:
-                    all_r = all_r.unionByName(p)
-                replace["robots_state"] = (
-                    all_r.groupBy("host")
-                    .agg(
-                        F.max_by(
-                            F.struct("crawl_delay_s", "fetched_ms"),
-                            "fetched_ms",
-                        ).alias("_w")
-                    )
-                    .select("host", "_w.*")
+                replace["robots_state"] = self._robots_state_view(
+                    robots_refreshed
                 )
                 drop.append("robots_state_delta")
         else:
             append["frontier_delta"] = frontier_delta_next
             append["host_state_delta"] = host_state_delta
             if ttl_mode:
-                append["robots_state_delta"] = robots_eff.filter(
-                    "_refreshed"
-                ).select("host", "crawl_delay_s", "fetched_ms")
+                append["robots_state_delta"] = robots_refreshed
         if fetch_log_extra is not None:
             append["fetch_verify"] = fetch_log_extra
 
@@ -1439,10 +1347,7 @@ class FrontierEngine:
             n_attempts = n_fetched + int(ev["e"] or 0)
             # queued' = queued − terminal attempts + newly admitted
             n_terminal = n_fetched + n_failed
-            prev_queued = meta.get("queued")
-            if prev_queued is None:
-                prev_queued = self._queued_view(latest).count()
-            queued_remaining = int(prev_queued) - n_terminal + n_new
+            queued_remaining = int(meta["queued"]) - n_terminal + n_new
             pending = int(meta.get("delta_rows", 0)) + n_attempts + n_new
             stats_box.update(
                 n_new=n_new, n_fetched=n_fetched, n_attempts=n_attempts,
@@ -1470,11 +1375,7 @@ class FrontierEngine:
             p_future.result()
             pre_written["metrics"] = ("append", p_path)
             self._pending_metrics = None
-            for df in p_pins:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+            _unpin(p_pins)
         self.catalog.commit(
             replace=replace or None,
             append=append or None,
@@ -1554,7 +1455,7 @@ class FrontierEngine:
 
     def frontier(self) -> DataFrame:
         """Current frontier (merged MOR view: base latest-wins deltas)."""
-        return self._frontier_view()
+        return self._merge_latest(self._load("frontier"), self._delta_latest())
 
     def metrics(self) -> DataFrame:
         self.flush_pending_metrics()
@@ -1572,11 +1473,7 @@ class FrontierEngine:
         self.catalog.commit(
             pre_written={"metrics": ("append", path)}, meta=self.meta()
         )
-        for df in pins:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        _unpin(pins)
         self._pending_metrics = None
 
     def close(self) -> None:

@@ -250,23 +250,6 @@ class TableCatalog:
             for f in want.fields
         ])
 
-    def read_parts(
-        self,
-        spark: SparkSession,
-        name: str,
-        snapshot_id: int | None = None,
-        schema: str | None = None,
-    ) -> list[DataFrame] | None:
-        """One DataFrame per committed append, in manifest (commit) order
-        (see SnapshotCatalog.read_parts)."""
-        manifest = self.load_manifest(snapshot_id)
-        if manifest is None or name not in manifest["tables"]:
-            return None
-        return [
-            self._cast_schema(spark.table(i), schema)
-            for i in manifest["tables"][name]["paths"]
-        ]
-
     def history(self) -> list[dict[str, Any]]:
         c = self._commits()
         if c is None:

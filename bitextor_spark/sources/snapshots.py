@@ -192,26 +192,6 @@ class SnapshotCatalog:
         reader = spark.read.schema(schema) if schema else spark.read
         return reader.parquet(*paths)
 
-    def read_parts(
-        self,
-        spark: SparkSession,
-        name: str,
-        snapshot_id: int | None = None,
-        schema: str | None = None,
-    ) -> list[DataFrame] | None:
-        """One DataFrame per committed append, in manifest (commit) order —
-        the per-epoch delta-log structure that `read` flattens. Lets a
-        reader exploit per-append invariants (e.g. single-version per key)
-        instead of re-deriving them over the flattened union."""
-        manifest = self.load_manifest(snapshot_id)
-        if manifest is None or name not in manifest["tables"]:
-            return None
-        reader = spark.read.schema(schema) if schema else spark.read
-        return [
-            reader.parquet(os.path.join(self.data_dir, rel))
-            for rel in manifest["tables"][name]["paths"]
-        ]
-
     def history(self) -> list[dict[str, Any]]:
         out = []
         for sid in self._manifest_ids():

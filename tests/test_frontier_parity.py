@@ -214,36 +214,67 @@ def test_priority_queue_parity(spark, no_aqe):
 def test_compaction_cadence_invariance(spark, world, sim, no_aqe):
     """MOR frontier storage: the crawl is byte-identical whatever the
     compaction cadence, including a resume that lands between two
-    compactions (the resumed engine reads base + delta logs)."""
+    compactions (the resumed engine reads base + delta logs). At cadence
+    4 the resume point holds three delta appends, so the resumed epoch
+    and the final frontier read both take the multi-append latest-wins
+    merge."""
     import dataclasses
 
-    # ratio trigger off (it would compact every epoch at this scale and
-    # never leave a delta log standing): cadence-only compaction here
-    cfg_c = dataclasses.replace(
-        CFG, frontier_compact_epochs=2, compact_delta_ratio=float("inf")
-    )
+    # (cadence, frontier_delta appends at the epoch-3 resume point,
+    # delta log left after epoch 6); the ratio trigger is off (it would
+    # compact every epoch at this scale and never leave a delta log
+    # standing): cadence-only compaction here
+    for cadence, n_appends, delta_left in ((2, 1, False), (4, 3, True)):
+        cfg_c = dataclasses.replace(
+            CFG, frontier_compact_epochs=cadence,
+            compact_delta_ratio=float("inf"),
+        )
+        dfs = world_to_dfs(spark, world)
+        root = tempfile.mkdtemp(prefix="frontier_compact_")
+        try:
+            eng1 = FrontierEngine(
+                spark, cfg_c, root, dfs["pages"], dfs["robots"],
+                dfs["seeds"],
+            )
+            eng1.run(max_epochs=3)
+            m = eng1.catalog.load_manifest()
+            assert len(m["tables"]["frontier_delta"]["paths"]) == n_appends
+            # the URL-seen check is the exact anti-join alone: no blooms
+            assert not {"blooms", "bloom_pending"} & set(m["tables"])
+            eng2 = FrontierEngine(
+                spark, cfg_c, root, dfs["pages"], dfs["robots"],
+                dfs["seeds"],
+            )
+            eng2.run(max_epochs=N_EPOCHS)
+            assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
+            seen = {r.url_canon
+                    for r in eng2.frontier().select("url_canon").collect()}
+            assert seen == sim.seen
+            m = eng2.catalog.load_manifest()
+            assert ("frontier_delta" in m["tables"]) == delta_left
+            assert not {"blooms", "bloom_pending"} & set(m["tables"])
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+
+def test_bootstrap_releases_its_pins(spark, world):
+    """bootstrap() frees the blocks it pins once its commit is written:
+    with the engine's own pages/robots caches materialized, the session
+    holds as many persisted RDDs after bootstrap() as before it."""
     dfs = world_to_dfs(spark, world)
-    root = tempfile.mkdtemp(prefix="frontier_compact_")
+    root = tempfile.mkdtemp(prefix="frontier_boot_pins_")
     try:
-        eng1 = FrontierEngine(
-            spark, cfg_c, root, dfs["pages"], dfs["robots"], dfs["seeds"],
+        eng = FrontierEngine(
+            spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
         )
-        eng1.run(max_epochs=3)  # epoch 2 compacted, epoch 3 is a delta
-        m = eng1.catalog.load_manifest()
-        assert "frontier_delta" in m["tables"], "resume point must have deltas"
-        # the URL-seen check is the exact anti-join alone: no bloom tables
-        assert not {"blooms", "bloom_pending"} & set(m["tables"])
-        eng2 = FrontierEngine(
-            spark, cfg_c, root, dfs["pages"], dfs["robots"], dfs["seeds"],
-        )
-        eng2.run(max_epochs=N_EPOCHS)
-        assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
-        seen = {r.url_canon for r in eng2.frontier().select("url_canon").collect()}
-        assert seen == sim.seen
-        # post-compaction manifest carries no delta log (epoch 6 compacted)
-        m = eng2.catalog.load_manifest()
-        assert "frontier_delta" not in m["tables"]
-        assert not {"blooms", "bloom_pending"} & set(m["tables"])
+        eng.pages.count()
+        eng.robots.count()
+        persisted = spark.sparkContext._jsc.getPersistentRDDs
+        before = len(persisted())
+        eng.bootstrap()
+        assert eng.meta()["epoch"] == 0
+        assert len(persisted()) == before
+        eng.close()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -472,16 +503,13 @@ def test_politeness_overlay_parity(spark, no_aqe):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_rank_regime_parity(spark, world, no_aqe, monkeypatch):
+def test_rank_regime_parity(spark, world, no_aqe):
     """The pre-walk k_cap rank is a volume cap, never a correctness step:
-    all three gate regimes — excess-gated single consumption (default),
-    hot/cold split rank (rank_excess_rows=0, few hot hosts), and the
-    skew-proof full rank (_HOT_HOST_GATE forced to 0) — must reproduce
-    the reference simulator byte-for-byte on a world whose per-host
-    queues exceed k_cap."""
+    both gate regimes — excess-gated single consumption (default) and the
+    skew-proof full rank (rank_excess_rows=0) — must reproduce the
+    reference simulator byte-for-byte on a world whose per-host queues
+    exceed k_cap."""
     import dataclasses
-
-    import bitextor_spark.frontier.engine as engine_mod
 
     # k_cap = replenish_per_epoch = 4 << per-host queue depth (~25): every
     # host is hot and the walk sees over-cap queues in the single-pass
@@ -503,8 +531,5 @@ def test_rank_regime_parity(spark, world, no_aqe, monkeypatch):
 
     # default: excess (~hundreds of rows) is under the gate -> single pass
     assert run(hot_cfg) == ref
-    # force the hot/cold split (n_hot <= _HOT_HOST_GATE branch)
-    assert run(dataclasses.replace(hot_cfg, rank_excess_rows=0)) == ref
-    # force the skew-proof full rank (n_hot > gate branch)
-    monkeypatch.setattr(engine_mod, "_HOT_HOST_GATE", 0)
+    # any over-cap volume -> the full rank
     assert run(dataclasses.replace(hot_cfg, rank_excess_rows=0)) == ref
