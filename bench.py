@@ -223,13 +223,7 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
             })
             if st.attempts == 0 and st.queued_remaining == 0:
                 break
-        # settle the write-behind metrics sink OUTSIDE the timed window:
-        # its write overlapped the measured epochs (that's the point); the
-        # final registration is bookkeeping, not crawl throughput, and is
-        # reported on its own as flush_sec
         wall = time.time() - t0
-        eng.flush_pending_metrics()
-        flush = time.time() - t0 - wall
         attempts = sum(e["attempts"] for e in epochs)
         shutil.rmtree(root, ignore_errors=True)
         # ceiling job + its own steal window: the ceiling is only a valid
@@ -243,7 +237,6 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
             "epochs": len(epochs),
             "fetch_attempts": attempts,
             "wall_sec": round(wall, 2),
-            "flush_sec": round(flush, 2),
             "urls_per_sec": round(attempts / wall, 1),
             "epoch_samples": epochs,
             "jvm_ceiling_rows_per_sec": ceil,

@@ -13,9 +13,9 @@ One epoch = one Spark job pipeline:
      ──exact URL-seen anti-join against the persisted base url_hash
      layout + the gated delta-key anti-join──►
      admitted (pinned once; the commit writes branch off it)
-     ──► frontier ∪ admitted ; snapshot commit (atomic manifest);
-     per-host metrics written BEHIND the commit (one tagged-union agg,
-     staged on a side thread, registered at the next commit)
+     ──► frontier ∪ admitted ; snapshot commit (atomic manifest) that
+     writes the deltas and the epoch's per-host metrics (one tagged-union
+     agg) concurrently, so a committed epoch carries its own metrics
 
 Parallelism-independence: every nondeterministic boundary is closed by an
 explicit total order — per-host queue order (hop, url_canon), global fetch
@@ -61,6 +61,7 @@ from bitextor_spark.functions.urls import (
     canonicalize_full_udf,
     make_flat_resolver,
 )
+from bitextor_spark.session import unpin
 from bitextor_spark.sources.snapshots import SnapshotCatalog
 
 FRONTIER_SCHEMA = (
@@ -77,12 +78,6 @@ EVENT_SCHEMA = (
 HOST_STATE_SCHEMA = "host string, next_allowed_ms long"
 _CONSTRAINT_PROPAGATION = "spark.sql.constraintPropagation.enabled"
 ROBOTS_STATE_SCHEMA = "host string, crawl_delay_s int, fetched_ms long"
-METRIC_COLS = ("fetched", "errors", "skipped_seen", "skipped_scope", "queued")
-
-
-def _host_col(url_col):
-    # try_: Spark 4's plain parse_url THROWS on URLs java.net.URI rejects
-    return F.try_parse_url(url_col, F.lit("HOST"))
 
 
 def _codegen_compiles(spark: SparkSession) -> int | None:
@@ -95,35 +90,6 @@ def _codegen_compiles(spark: SparkSession) -> int | None:
         )
     except (AttributeError, Py4JError):
         return None
-
-
-def _unpin(dfs) -> None:
-    """Free pinned blocks now instead of at GC + ContextCleaner. A persist
-    pin is a cached query; a localCheckpoint pin is not (its unpersist is
-    a no-op), so its checkpointed RDD is freed directly."""
-    for df in dfs:
-        try:
-            if df.is_cached:
-                df.unpersist()
-            else:
-                df._jdf.queryExecution().logical().rdd().unpersist(False)
-        except (AttributeError, Py4JError):
-            pass  # session already stopped: nothing left to free
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count of a staged parquet directory from its file footers —
-    driver-side metadata reads, no Spark job. (On an object store this
-    becomes a manifest/footer listing; same O(files) cost.)"""
-    import glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(f).num_rows
-        for f in glob.glob(_os.path.join(path, "*.parquet"))
-    )
 
 
 @dataclass
@@ -204,9 +170,6 @@ class FrontierEngine:
         self._epoch_pins: list[DataFrame] = []
         # name -> (frontier base paths, persisted df); see _base_cached
         self._base_caches: dict[str, tuple] = {}
-        # (path, future, pins) of a metrics delta written behind its
-        # epoch's commit; registered at the next commit or flushed
-        self._pending_metrics = None
 
     def _pin(self, df: DataFrame, columnar: bool = False) -> DataFrame:
         """Eagerly materialize an epoch intermediate, tracked for cleanup.
@@ -230,7 +193,7 @@ class FrontierEngine:
         """Free the epoch's materialized blocks immediately after commit
         rather than waiting for GC + ContextCleaner (a 50-epoch crawl would
         otherwise accumulate checkpoint blocks nondeterministically)."""
-        _unpin(self._epoch_pins)
+        unpin(self._epoch_pins)
         self._epoch_pins = []
 
     # ------------------------------------------------------------------ #
@@ -506,7 +469,7 @@ class FrontierEngine:
         if cached is not None and cached[0] == key:
             return cached[1]
         if cached is not None:
-            _unpin([cached[1]])
+            unpin([cached[1]])
         df = build().persist()
         self._base_caches[name] = (key, df)
         return df
@@ -954,9 +917,8 @@ class FrontierEngine:
         # trip per epoch. Released with the epoch's other pins post-commit.
         events = raw_events.persist()
         self._epoch_pins.append(events)
-        # the epoch's outcome counters ride THIS write as an observation
-        # (not the metrics sink: that write now trails the commit — see
-        # the metrics block below), so _meta never waits on metrics
+        # the epoch's outcome counters ride THIS write as an observation,
+        # so the commit's meta never waits on the metrics write
         from pyspark.sql import Observation
 
         obs_ev = Observation()
@@ -976,24 +938,23 @@ class FrontierEngine:
         ).parquet(events_path)
 
         mark('plan_candidates')
+        ev = obs_ev.get
+        n_fetched = int(ev["f"] or 0)
+        n_failed = int(ev["fl"] or 0)
+        n_attempts = n_fetched + int(ev["e"] or 0)
         # adaptive compaction, decided as soon as the attempt count is
-        # known (staged events file's parquet footers — driver-local
-        # metadata read, no job): rewrite the base once the pending delta
-        # log reaches compact_delta_ratio of the frontier (cheap at small
-        # scale where that is every epoch; rare at web scale), with
-        # frontier_compact_epochs as a hard interval cap. Decided here,
-        # as soon as the staged events file exists, BEFORE the commit pool
-        # so every table write runs concurrently. The
-        # admission count, unknown until the metrics write finishes, is
-        # left out of the trigger — compaction timing is a pure cost knob
-        # (any cadence is exact, per the cadence-invariance parity test),
-        # and the recorded delta_rows below uses the true value.
+        # known: rewrite the base once the pending delta log reaches
+        # compact_delta_ratio of the frontier (cheap at small scale where
+        # that is every epoch; rare at web scale), with
+        # frontier_compact_epochs as a hard interval cap. The admission
+        # count is left out of the trigger — compaction timing is a pure
+        # cost knob (any cadence is exact, per the cadence-invariance
+        # parity test), and the recorded delta_rows below uses it.
         prev_frontier_rows = int(
             meta.get("frontier_rows", meta.get("queued", 0))
         )
-        n_attempts_staged = _parquet_rows(events_path)
         compact = (
-            int(meta.get("delta_rows", 0)) + n_attempts_staged
+            int(meta.get("delta_rows", 0)) + n_attempts
             >= cfg.compact_delta_ratio * max(prev_frontier_rows, 1)
             or (epoch + 1) % max(cfg.frontier_compact_epochs, 1) == 0
         )
@@ -1272,31 +1233,6 @@ class FrontierEngine:
             )
         )
         mark('metrics_dag')
-        # per-host metrics stay a WRITE-ONLY distributed sink (at 10^8 hosts
-        # a driver collect is an OOM) and nothing in the next epoch reads
-        # them — so the metrics write runs BEHIND the commit: staged now
-        # (under THIS epoch's snapshot id), launched on a side thread that
-        # overlaps the commit pool and the next epoch's phases, and
-        # registered in the NEXT commit via the (kind, staged_path)
-        # pre_written form (the future has a whole epoch to finish; the
-        # registration joins it first). The epoch counters moved to
-        # observations on the events write and the admitted pin above, so
-        # _meta never waits on this write. Crash window: a crash between
-        # this epoch's manifest publish and the next registration orphans
-        # ONE epoch's metrics rows (recoverable from fetch_log — the
-        # frontier state machine itself is untouched); `flush_pending_
-        # metrics` closes the window at run end / first metrics read.
-        metrics_path = self.catalog.stage_path("metrics", kind="append")
-        metrics_pins = [events, grouped_all, admitted]
-
-        def _write_metrics():
-            metrics.write.mode("overwrite").parquet(metrics_path)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        _mpool = ThreadPoolExecutor(max_workers=1)
-        metrics_future = _mpool.submit(_write_metrics)
-        _mpool.shutdown(wait=False)
 
         # --- commit: MOR deltas, adaptive compaction (`compact` was
         # decided right after the events write, where the attempt count
@@ -1334,26 +1270,23 @@ class FrontierEngine:
                 append["robots_state_delta"] = robots_refreshed
         if fetch_log_extra is not None:
             append["fetch_verify"] = fetch_log_extra
+        # per-host metrics are a write-only distributed sink (at 10^8 hosts
+        # a driver collect is an OOM): the commit pool writes them beside
+        # the deltas, so the epoch's manifest lists its own metrics
+        append["metrics"] = metrics
 
-        stats_box: dict[str, int] = {}
-
-        def _meta() -> dict[str, Any]:
-            # the observations were materialized by the events write and
-            # the admitted pin — both long done; .get never blocks here
-            ev = obs_ev.get
-            n_new = int(obs_ad.get["q"] or 0)
-            n_fetched = int(ev["f"] or 0)
-            n_failed = int(ev["fl"] or 0)
-            n_attempts = n_fetched + int(ev["e"] or 0)
-            # queued' = queued − terminal attempts + newly admitted
-            n_terminal = n_fetched + n_failed
-            queued_remaining = int(meta["queued"]) - n_terminal + n_new
-            pending = int(meta.get("delta_rows", 0)) + n_attempts + n_new
-            stats_box.update(
-                n_new=n_new, n_fetched=n_fetched, n_attempts=n_attempts,
-                queued_remaining=queued_remaining,
-            )
-            return {
+        # the observations were materialized by the events write and the
+        # admitted pin, so the whole meta is known before the commit starts
+        n_new = int(obs_ad.get["q"] or 0)
+        # queued' = queued − terminal attempts + newly admitted
+        queued_remaining = int(meta["queued"]) - n_fetched - n_failed + n_new
+        pending = int(meta.get("delta_rows", 0)) + n_attempts + n_new
+        self.catalog.commit(
+            replace=replace or None,
+            append=append,
+            drop=drop or None,
+            pre_written={"fetch_log": "append"},
+            meta={
                 "epoch": epoch + 1,
                 "seq_offset": seq_offset + n_attempts,
                 "total_fetched": total_fetched + n_fetched,
@@ -1364,39 +1297,10 @@ class FrontierEngine:
                 "delta_rows": 0 if compact else pending,
                 "done": queued_remaining == 0
                 or total_fetched + n_fetched >= cfg.max_fetches,
-            }
-
-        pre_written: dict[str, Any] = {"fetch_log": "append"}
-        prev_metrics = self._pending_metrics
-        if prev_metrics is not None:
-            # register LAST epoch's metrics file (its write had a whole
-            # epoch to finish; join it, then its pins can finally go)
-            p_path, p_future, p_pins = prev_metrics
-            p_future.result()
-            pre_written["metrics"] = ("append", p_path)
-            self._pending_metrics = None
-            _unpin(p_pins)
-        self.catalog.commit(
-            replace=replace or None,
-            append=append or None,
-            drop=drop or None,
-            pre_written=pre_written,
-            meta=_meta,
+            },
         )
-        n_new = stats_box["n_new"]
-        n_fetched = stats_box["n_fetched"]
-        n_attempts = stats_box["n_attempts"]
-        queued_remaining = stats_box["queued_remaining"]
         mark('commit')
-        # this epoch's metrics trail the commit: hold the pins its write
-        # reads (events / winner aggregate / admitted) one more epoch and
-        # release the rest now
-        keep_ids = {id(df) for df in metrics_pins}
-        self._epoch_pins = [
-            df for df in self._epoch_pins if id(df) not in keep_ids
-        ]
         self._release_pins()
-        self._pending_metrics = (metrics_path, metrics_future, metrics_pins)
         self.last_timings = {k: v for k, v in _t.items() if k != '_start'}
         tracker = self.spark.sparkContext.statusTracker()
         try:
@@ -1419,19 +1323,14 @@ class FrontierEngine:
         self.bootstrap()
         stats: list[EpochStats] = []
         limit = max_epochs if max_epochs is not None else self.cfg.max_epochs
-        try:
-            while True:
-                meta = self.meta()
-                if meta.get("done") or int(meta["epoch"]) >= limit:
-                    break
-                st = self.run_epoch()
-                stats.append(st)
-                if st.attempts == 0 and st.queued_remaining == 0:
-                    break
-        finally:
-            # an exception in a later epoch must not orphan the previous
-            # epoch's staged (write-behind) metrics
-            self.flush_pending_metrics()
+        while True:
+            meta = self.meta()
+            if meta.get("done") or int(meta["epoch"]) >= limit:
+                break
+            st = self.run_epoch()
+            stats.append(st)
+            if st.attempts == 0 and st.queued_remaining == 0:
+                break
         return stats
 
     # convenience readers -------------------------------------------------
@@ -1458,29 +1357,16 @@ class FrontierEngine:
         return self._merge_latest(self._load("frontier"), self._delta_latest())
 
     def metrics(self) -> DataFrame:
-        self.flush_pending_metrics()
         return self._load("metrics")
 
     def flush_pending_metrics(self) -> None:
-        """Register a metrics delta still trailing its epoch's commit
-        (write-behind sink). Called automatically at run() end and on the
-        first metrics read; a metrics-only snapshot carries every other
-        table (and the run meta) forward unchanged."""
-        if self._pending_metrics is None:
-            return
-        path, future, pins = self._pending_metrics
-        future.result()
-        self.catalog.commit(
-            pre_written={"metrics": ("append", path)}, meta=self.meta()
-        )
-        _unpin(pins)
-        self._pending_metrics = None
+        """No-op: each epoch's metrics commit with the epoch. Kept because
+        perfbench/crawl.py and perfbench/make_digests.py still call it."""
 
     def close(self) -> None:
-        """Hand the session back as the engine found it: register pending
-        metrics, free the per-base caches and restore constraint
-        propagation. The catalog readers still work afterwards."""
-        self.flush_pending_metrics()
+        """Hand the session back as the engine found it: free the per-base
+        caches and restore constraint propagation. The catalog readers
+        still work afterwards."""
         for _, df in self._base_caches.values():
             df.unpersist()
         self._base_caches.clear()

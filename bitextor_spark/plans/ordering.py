@@ -10,11 +10,10 @@ The ranged intermediate MUST be materialized once and read by both the
 count pass and the rank pass: ``repartitionByRange`` samples its boundaries
 with an RDD-id-derived seed, so two independent executions of the same
 logical subtree can disagree by a row or two at partition boundaries —
-enough to corrupt the offsets (observed, test_ordering caught it). Callers
-that manage their own block lifecycle (the frontier engine) pass ``pin=``;
-everyone else gets the default bounded registry: each new ranking releases
-the previous call's blocks (its consumers have materialized by then), and
-``release_pins()`` frees the last one explicitly.
+enough to corrupt the offsets (observed, test_ordering caught it). The pins
+live in a bounded registry: each new ranking releases the previous call's
+blocks (its consumers have materialized by then), and ``release_pins()``
+frees the last one explicitly.
 
 Reference semantics: multi-key LC_ALL=C sort pipelines
 (bitextor/Snakefile:1543-1608 presort, bitextor_build_TMX.py:222 ordering).
@@ -22,21 +21,17 @@ Reference semantics: multi-key LC_ALL=C sort pipelines
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from bitextor_spark.session import unpin
 
 _DEFAULT_PINS: list[DataFrame] = []
 
 
 def release_pins() -> None:
-    """Free blocks pinned by previous default-pinned rankings."""
-    for df in _DEFAULT_PINS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    """Free blocks pinned by previous rankings."""
+    unpin(_DEFAULT_PINS)
     _DEFAULT_PINS.clear()
 
 
@@ -49,9 +44,7 @@ def _default_pin(df: DataFrame) -> DataFrame:
 
 
 def _ranked(
-    df: DataFrame,
-    keys: list[Column],
-    pin: Callable[[DataFrame], DataFrame] | None,
+    df: DataFrame, keys: list[Column]
 ) -> tuple[DataFrame, "F.Column", int]:
     """(joined ranged df, 0-based global seq column expr, total rows)."""
     spark = df.sparkSession
@@ -59,7 +52,7 @@ def _ranked(
     ranged = df.repartitionByRange(nparts, *keys).withColumn(
         "_pid", F.spark_partition_id()
     )
-    ranged = (pin or _default_pin)(ranged)
+    ranged = _default_pin(ranged)
     counts = {
         r["_pid"]: r["count"] for r in ranged.groupBy("_pid").count().collect()
     }
@@ -83,14 +76,12 @@ def global_row_number(
     offset: int = 0,
     small_threshold: int | None = None,
     n_rows: int | None = None,
-    pin: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Exact 1-based global row_number over `keys` without a single-task sort.
 
     If `n_rows` is known and below `small_threshold`, uses the plain global
     window (cheapest for inspection-scale inputs). Otherwise the
-    range-partitioned rank (module docstring); `pin` overrides the default
-    materialization hook (e.g. FrontierEngine._pin for release-after-commit).
+    range-partitioned rank (module docstring).
     """
     if (
         small_threshold is not None
@@ -99,7 +90,7 @@ def global_row_number(
     ):
         w = Window.orderBy(*keys)
         return df.withColumn(seq_col, F.row_number().over(w) + offset)
-    joined, seq0, _total = _ranked(df, keys, pin)
+    joined, seq0, _total = _ranked(df, keys)
     return joined.withColumn(seq_col, seq0 + 1 + offset).drop("_pid", "_off")
 
 
@@ -110,7 +101,6 @@ def global_ntile(
     tile_col: str = "batch",
     small_threshold: int | None = None,
     n_rows: int | None = None,
-    pin: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Exact global ntile(n) over `keys`, built on the same ranged pass.
 
@@ -125,7 +115,7 @@ def global_ntile(
     ):
         w = Window.orderBy(*keys)
         return df.withColumn(tile_col, F.ntile(n).over(w))
-    joined, seq0, total = _ranked(df, keys, pin)
+    joined, seq0, total = _ranked(df, keys)
     q, r = divmod(total, n)
     big = r * (q + 1)  # rows living in the (q+1)-sized leading tiles
     if q == 0:

@@ -3,14 +3,16 @@
 Tuned per SURVEY.md §4: AQE on (runtime re-plan ≈ the reference's Snakemake
 checkpoint re-evaluation), skew-join handling, Arrow for all pandas UDF
 exchange, and shuffle partitions sized to the core count (overridable via
-SPARK_GRAFT_SHUFFLE_PARTITIONS for cluster runs).
+SPARK_GRAFT_SHUFFLE_PARTITIONS for cluster runs). ``unpin`` frees the
+blocks of pinned (localCheckpoint or persisted) DataFrames.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 # Spark's generated-class cache (static conf, default 100 entries): a crawl
 # epoch's working set is 131 classes, so at the default LRU evicts each one
@@ -50,3 +52,17 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def unpin(dfs: list[DataFrame]) -> None:
+    """Free pinned blocks now instead of at GC + ContextCleaner. A persist
+    pin is a cached query; a localCheckpoint pin is not (its unpersist is
+    a no-op), so its checkpointed RDD is freed directly."""
+    for df in dfs:
+        try:
+            if df.is_cached:
+                df.unpersist()
+            else:
+                df._jdf.queryExecution().logical().rdd().unpersist(False)
+        except (AttributeError, Py4JError):
+            pass  # session already stopped: nothing left to free

@@ -40,7 +40,7 @@ import os
 import re
 import tempfile
 import time
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,7 +128,7 @@ class TableCatalog:
         self,
         replace: dict[str, DataFrame] | None = None,
         append: dict[str, DataFrame] | None = None,
-        meta: dict[str, Any] | Callable[[], dict[str, Any]] | None = None,
+        meta: dict[str, Any] | None = None,
         pre_written: dict[str, str] | None = None,
         drop: list[str] | None = None,
     ) -> int:
@@ -143,17 +143,8 @@ class TableCatalog:
             jobs.append(("replace", name, df))
         for name, df in (append or {}).items():
             jobs.append(("append", name, df))
-        for name, kindref in (pre_written or {}).items():
-            # (kind, staged_path) registers data staged for an EARLIER
-            # snapshot id (write-behind sinks); a bare kind string reads
-            # this snapshot's stage_path
-            if isinstance(kindref, tuple):
-                kind, staged = kindref
-            else:
-                kind = kindref
-                staged = os.path.join(
-                    self._staging_root, f"{name}-{snap_id:06d}"
-                )
+        for name, kind in (pre_written or {}).items():
+            staged = os.path.join(self._staging_root, f"{name}-{snap_id:06d}")
             jobs.append((kind, name, self.spark.read.parquet(staged)))
 
         for kind, name, df in jobs:
@@ -174,7 +165,6 @@ class TableCatalog:
         for name in drop or []:
             tables.pop(name, None)
 
-        meta_val = (meta() if callable(meta) else meta) or {}
         schema = T.StructType([
             T.StructField("snapshot_id", T.LongType()),
             T.StructField("parent", T.LongType()),
@@ -184,7 +174,7 @@ class TableCatalog:
         ])
         row = self.spark.createDataFrame(
             [(snap_id, prev["snapshot_id"] if prev else -1, time.time(),
-              json.dumps(meta_val), json.dumps(tables))],
+              json.dumps(meta or {}), json.dumps(tables))],
             schema,
         ).coalesce(1)
         self._append_commit_row(row)  # the commit point

@@ -28,7 +28,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,26 +83,21 @@ class SnapshotCatalog:
         self,
         replace: dict[str, DataFrame] | None = None,
         append: dict[str, DataFrame] | None = None,
-        meta: dict[str, Any] | Callable[[], dict[str, Any]] | None = None,
+        meta: dict[str, Any] | None = None,
         pre_written: dict[str, str] | None = None,
         drop: list[str] | None = None,
     ) -> int:
         """Write data files, then atomically publish the manifest.
 
         Tables not mentioned carry forward from the previous manifest.
+        ``replace`` and ``append`` tables are written concurrently.
         ``pre_written`` maps table name -> kind ("replace"/"append") for
-        tables whose data files were already staged at ``stage_path`` —
-        the commit only records them in the manifest (no write job). A
-        value may also be a ``(kind, staged_path)`` tuple where
-        ``staged_path`` is an earlier ``stage_path`` result: that
-        registers data staged for a PREVIOUS snapshot id (the engine's
-        write-behind metrics sink trails its epoch's commit by one).
-        ``drop`` removes tables from the manifest (their data files become
-        unreferenced — e.g. delta logs folded into a compacted base).
-        ``meta`` may be a zero-arg callable, evaluated after the data
-        writes finish but before the manifest publish — for metadata that
-        depends on write-side observations (Dataset.observe counters riding
-        on a table write in the pool).
+        tables whose data files were already staged at this snapshot's
+        ``stage_path`` — the commit only records them in the manifest (no
+        write job). ``drop`` removes tables from the manifest (their data
+        files become unreferenced — e.g. delta logs folded into a
+        compacted base). ``meta`` is the run metadata the manifest
+        carries (the engine's epoch counters).
         """
         prev = self.load_manifest()
         snap_id = (prev["snapshot_id"] + 1) if prev else 0
@@ -137,13 +132,8 @@ class SnapshotCatalog:
             tables.pop(name, None)
 
         label = {"replace": "snap", "append": "delta"}
-        for name, kindref in (pre_written or {}).items():
-            if isinstance(kindref, tuple):
-                kind, staged = kindref
-                rel = os.path.relpath(staged, self.data_dir)
-            else:
-                kind = kindref
-                rel = f"{name}/{label[kind]}-{snap_id:06d}"
+        for name, kind in (pre_written or {}).items():
+            rel = f"{name}/{label[kind]}-{snap_id:06d}"
             jobs.append((kind, name, rel, None))
 
         for kind, name, rel, _df in jobs:
@@ -158,7 +148,7 @@ class SnapshotCatalog:
             "snapshot_id": snap_id,
             "committed_at": time.time(),
             "tables": tables,
-            "meta": (meta() if callable(meta) else meta) or {},
+            "meta": meta or {},
             "parent": prev["snapshot_id"] if prev else None,
         }
         tmp = os.path.join(self.manifest_dir, f".manifest-{snap_id}.json.tmp")

@@ -85,9 +85,9 @@ def test_url_seen_set(engine_run, sim):
     assert eng_seen == sim.seen
 
 
-def test_metrics_parity(engine_run, sim):
+def _assert_metrics_parity(eng, sim):
     got = collections.defaultdict(collections.Counter)
-    for r in engine_run.metrics().collect():
+    for r in eng.metrics().collect():
         for k in ("fetched", "errors", "skipped_seen", "skipped_scope", "queued"):
             got[r.host][k] += r[k]
     want = {h: {k: v for k, v in c.items()} for h, c in sim.metrics.items()}
@@ -96,6 +96,10 @@ def test_metrics_parity(engine_run, sim):
     want = {h: c for h, c in want.items() if any(c.values())}
     got = {h: c for h, c in got.items() if any(c.values())}
     assert got == want
+
+
+def test_metrics_parity(engine_run, sim):
+    _assert_metrics_parity(engine_run, sim)
 
 
 def test_politeness_invariant(engine_run, world):
@@ -121,17 +125,22 @@ def test_retries_and_scope_exercised(sim):
 
 
 def test_resume_from_snapshot(spark, world, sim, no_aqe):
-    """Kill after epoch 2, resume in a NEW engine instance: identical crawl.
+    """Kill after epoch 2, resume in a NEW engine instance: identical crawl
+    and identical per-host metrics.
 
-    Also drops an orphan data directory (as a crash mid-epoch-3 would) to
-    show uncommitted files are invisible to the resumed run (C14)."""
+    The first engine runs its epochs one by one and never returns from a
+    run(), as a driver killed right after its second commit would. Also
+    drops an orphan data directory (as a crash mid-epoch-3 would) to show
+    uncommitted files are invisible to the resumed run (C14)."""
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="frontier_resume_")
     try:
         eng1 = FrontierEngine(
             spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
         )
-        eng1.run(max_epochs=2)
+        eng1.bootstrap()
+        eng1.run_epoch()
+        eng1.run_epoch()
         assert int(eng1.meta()["epoch"]) == 2
 
         # crash artifacts: an orphan (uncommitted) frontier snapshot
@@ -147,6 +156,7 @@ def test_resume_from_snapshot(spark, world, sim, no_aqe):
         assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
         seen = {r.url_canon for r in eng2.frontier().select("url_canon").collect()}
         assert seen == sim.seen
+        _assert_metrics_parity(eng2, sim)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -280,8 +290,8 @@ def test_bootstrap_releases_its_pins(spark, world):
 
 
 def test_run_flushes_metrics_when_an_epoch_raises(spark, world):
-    """run() registers the write-behind metrics of the last committed
-    epoch even when a later epoch raises, so no staged delta is orphaned."""
+    """When a later epoch raises out of run(), every committed epoch's
+    metrics are already in the catalog: they commit with their epoch."""
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="frontier_flush_")
     try:
@@ -300,7 +310,7 @@ def test_run_flushes_metrics_when_an_epoch_raises(spark, world):
         eng.run_epoch = run_epoch
         with pytest.raises(RuntimeError, match="injected epoch failure"):
             eng.run(max_epochs=N_EPOCHS)
-        # read the catalog directly: engine.metrics() would flush first
+        # read the catalog directly, as a new engine would
         metrics = eng.catalog.read(
             spark, "metrics",
             schema=FrontierEngine._TABLE_SCHEMAS["metrics"],

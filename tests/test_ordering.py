@@ -8,7 +8,11 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from bitextor_spark.plans.ordering import global_ntile, global_row_number
+from bitextor_spark.plans.ordering import (
+    global_ntile,
+    global_row_number,
+    release_pins,
+)
 
 
 def _fixture(spark, n=5000):
@@ -51,6 +55,17 @@ def test_global_ntile_matches_window(spark):
         for r in df.withColumn("batch", F.ntile(8).over(w)).collect()
     }
     assert got == want
+
+
+def test_release_pins_frees_the_ranking_pin(spark):
+    """release_pins() frees the localCheckpoint the last ranking pinned:
+    the session holds as many persisted RDDs afterwards as before it."""
+    release_pins()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persisted())
+    global_row_number(_fixture(spark), [F.col("a"), F.col("id")]).count()
+    release_pins()
+    assert len(persisted()) == before
 
 
 def test_per_key_topk_passthrough_matches_naive(spark):

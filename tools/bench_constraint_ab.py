@@ -62,7 +62,6 @@ def one_run(mode):
         t0 = time.time()
         eng.run_epoch()
         out.append((round(time.time() - t0, 2), dict(eng.last_timings)))
-    eng.flush_pending_metrics()
     shutil.rmtree(root, ignore_errors=True)
     return out
 
