@@ -139,17 +139,18 @@ class FrontierEngine:
         # wave in Arrow batches when verify_payloads is on (M4 invariant)
         self.images = images.cache() if images is not None else None
         self.verify_payloads = verify_payloads and images is not None
+        # one partition count for every layout the engine builds (pages,
+        # queued base, base urls, the walk's host partitions), read once:
+        # the exchange-free fetch join needs pages and the queued base to
+        # agree on it
+        self._n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # pages is the fetch target: co-partition AND co-sort once by
         # url_canon so the per-epoch fetch/discovery sort-merge joins reuse
         # this cached layout — no exchange and no re-sort of the (static,
         # world-sized) pages side per epoch; only the O(candidates) probe
         # side shuffles.
         self.pages = (
-            pages.repartition(
-                spark.conf.get("spark.sql.shuffle.partitions", None) and
-                int(spark.conf.get("spark.sql.shuffle.partitions")) or 32,
-                "url_canon",
-            )
+            pages.repartition(self._n_shuffle, "url_canon")
             .sortWithinPartitions("url_canon")
             .cache()
         )
@@ -482,11 +483,10 @@ class FrontierEngine:
         broadcast hint (delta_broadcast_rows gate), which preserves this
         layout. Past the gate (compaction-overdue delta backlog) it
         degrades to one shuffle — the regime compaction resets."""
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         return self._base_cached("queued", lambda: (
             self._load("frontier")
             .filter(F.col("state") == "QUEUED")
-            .repartition(n, "url_canon")
+            .repartition(self._n_shuffle, "url_canon")
             .sortWithinPartitions("url_canon")
         ))
 
@@ -509,11 +509,10 @@ class FrontierEngine:
         """url_hash set of the frontier BASE, hash-partitioned + sorted
         within partitions: the URL-seen sort-merge anti-join reuses this
         layout, so only the small candidate side shuffles."""
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         return self._base_cached("urls", lambda: (
             self._load("frontier")
             .select("url_hash")
-            .repartition(n, "url_hash")
+            .repartition(self._n_shuffle, "url_hash")
             .sortWithinPartitions("url_hash")
         ))
 
@@ -664,13 +663,12 @@ class FrontierEngine:
             if priority_mode:
                 # precedence floor (C10): below-floor cash never schedules
                 side = side.filter(F.col("priority") >= cfg.priority_floor)
-            if "updated_epoch" in side.columns:
-                side = side.drop("updated_epoch")
-            # state is the constant "QUEUED" on both sides of the merge —
-            # dropping it narrows every downstream exchange AND the Arrow
-            # transfer into the politeness walk (the walk reads 14 of the
-            # frontier's columns; state was the one dead passenger)
-            side = side.drop("state")
+            # updated_epoch served only the latest-wins merge, and state is
+            # the constant "QUEUED" on both sides of it — dropping them
+            # narrows every downstream exchange AND the Arrow transfer into
+            # the politeness walk (the walk reads 14 of the frontier's
+            # columns; state was the one dead passenger)
+            side = side.drop("updated_epoch", "state")
             return side.join(
                 self.pages.select(
                     "url_canon",
@@ -903,9 +901,8 @@ class FrontierEngine:
         # delta write (Iceberg staging: data files land before the manifest
         # publish; a crash orphans them harmlessly) — one job does double
         # duty, and the commit phase later only records the path.
-        n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         raw_events = (
-            cand.repartition(n_shuffle, "host")
+            cand.repartition(self._n_shuffle, "host")
             .sortWithinPartitions(*walk_sort)
             .mapInArrow(walk_stream, EVENT_SCHEMA)
         )
@@ -1027,13 +1024,14 @@ class FrontierEngine:
         # by vectorized concat, and Python touches only the messy-link
         # minority plus one PSL walk per DISTINCT host.
         #
-        # MEASURED DECISIONS (r5, tools/bench_discovery_ab.py +
+        # MEASURED (SURVEY §4 "outlink resolver"; exactness against the
+        # per-link loop resolve_outlinks_arr_udf is pinned in
         # tests/test_discovery_ab_parity.py):
-        #  - JVM array HOFs (the r4 verdict's directive-#1 sketch, two
-        #    variants) are exact but 35-75% SLOWER than the per-link Arrow
-        #    loop (HOF lambdas evaluate interpreted, outside codegen);
+        #  - JVM array-HOF re-expressions are exact but 35-75% SLOWER than
+        #    the per-link Arrow loop (HOF lambdas evaluate interpreted,
+        #    outside codegen);
         #  - this flat Arrow-native pass is exact and ~2.8x FASTER than
-        #    that loop (8M links at 16 cores: 3.3-3.8 s -> 1.2-1.4 s,
+        #    that loop (8M links at 16 cores: 3.0-3.8 s -> 1.2-1.4 s,
         #    ~6M links/s) because the clean majority never materializes
         #    Python objects at all.
         # All variants are narrow per-partition ops (zero shuffle, linear

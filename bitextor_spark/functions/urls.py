@@ -232,22 +232,6 @@ _CLEAN_ABS_RE = re.compile(
     r"/(?:(?!\.)[A-Za-z0-9._~-]+/)*(?!\.)[A-Za-z0-9._~-]*$"
 )
 
-# The same patterns as JVM-side regex strings (Java and Python regex agree
-# on this syntax subset: alternation, character classes, lookahead). Used
-# by tools/bench_discovery_ab.py, which races JVM array-HOF variants of the
-# discovery resolver against the Arrow loop below — measured outcome: the
-# HOF variants are exact but 35-75% slower (HOF lambdas evaluate
-# interpreted, outside whole-stage codegen), so the engine ships the Arrow
-# loop (see engine.py discovery comment).
-CLEAN_ABS_PATTERN = _CLEAN_ABS_RE.pattern
-
-# Plain-filename relative link: no scheme/slash/query/fragment/escape/
-# space/leading dot. For these urljoin+canonicalize == base_dir + link
-# EXACTLY when the base is already canonical (the engine always resolves
-# against url_canon): no dot segments to normalize, nothing to strip or
-# re-encode, and the base's dir prefix is canonical by construction.
-CLEAN_REL_PATTERN = r"^(?!\.)[A-Za-z0-9._~-]+$"
-
 # registered_domain is a pure function of the host and hosts repeat heavily
 # across a crawl's outlinks (thousands of hosts vs millions of links per
 # epoch), so the PSL walk is memoized per executor process. Bounded cache:
@@ -275,23 +259,6 @@ def canonicalize_full_udf(urls: pd.Series) -> pd.DataFrame:
     host = canon.map(lambda u: host_of(u) if u else None)
     reg = host.map(lambda h: _reg_domain_cached(h) if h else None)
     return pd.DataFrame({"url_canon": canon, "host": host, "reg_domain": reg})
-
-
-@pandas_udf(ArrayType(StringType()))
-def reg_domains_arr_udf(hosts: pd.Series) -> pd.Series:
-    """registered_domain over a page's DISTINCT outlink hosts — the only
-    Python the JVM fast path still needs (the PSL walk has no codegen
-    form). Python cost is O(distinct hosts per page), not O(links): the
-    caller maps hosts→reg_domains back onto every link JVM-side via
-    map_from_arrays + element_at."""
-    reg = _reg_domain_cached
-    return pd.Series(
-        [
-            [] if hs is None else [reg(h) if h else None for h in hs]
-            for hs in hosts
-        ],
-        dtype=object,
-    )
 
 
 _RESOLVE_ARR_TYPE = ArrayType(_RESOLVE_FULL_TYPE)
@@ -356,6 +323,11 @@ _ABS_BROAD_RE2 = (
     r"^(?:http|https)://(?P<h>[a-z0-9-]+(?:\.[a-z0-9-]+)+)"
     r"(?P<p>/[A-Za-z0-9._~/-]*)$"
 )
+# Plain-filename relative link: no scheme/slash/query/fragment/escape/
+# space/leading dot. For these urljoin+canonicalize == base_dir + link
+# EXACTLY when the base is already canonical (the engine always resolves
+# against url_canon): no dot segments to normalize, nothing to strip or
+# re-encode, and the base's dir prefix is canonical by construction.
 _REL_RE2 = r"^[A-Za-z0-9_~-][A-Za-z0-9._~-]*$"
 
 
@@ -425,7 +397,7 @@ def make_flat_resolver(
         ) & consider
 
         # clean-relative fast path: plain filename against a canonical,
-        # percent-free base -> base_dir + link (see CLEAN_REL_PATTERN note)
+        # percent-free base -> base_dir + link (see the _REL_RE2 note)
         base_pct = (
             pc.match_substring(base, "%")
             .fill_null(False)

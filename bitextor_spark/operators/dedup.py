@@ -225,10 +225,11 @@ def simhash_signatures(
     Same signature as :func:`simhash_col` (bit b set iff Σ±1 over distinct
     token hashes' bit b is positive; empty/null token set → sh=0), but in
     ONE codegen pass instead of `bits` interpreted ``F.aggregate`` walks of
-    the token array per row — the interpreted-HOF trap measured in
-    tools/bench_discovery_ab.py. The groupBy is a map-side partial
-    aggregate; the shuffle carries one `bits`-column row per doc per input
-    partition."""
+    the token array per row (3.81 s vs 4.59 s median; SURVEY §4 "simhash
+    vs minhash kernels"). One sum per bit stays: packing three bit
+    counters into each 64-bit sum did not separate from it (SURVEY §4
+    "simhash agg width"). The groupBy is a map-side partial aggregate; the
+    shuffle carries one `bits`-column row per doc per input partition."""
     ex = _spread(df).select(
         F.col(id_col).alias("doc"),
         # explode_outer keeps empty/null-token docs (one null-hash row);
@@ -253,59 +254,6 @@ def simhash_signatures(
     return cnt.select("doc", total.cast("bigint").alias("sh"))
 
 
-def simhash_signatures_packed(
-    df: DataFrame, id_col: str, text_col: str, bits: int
-) -> DataFrame:
-    """SWAR re-expression of :func:`simhash_signatures`: pack 3 per-bit
-    set-counters into each 64-bit sum (21-bit lanes: lane j of sum_k counts
-    bit ``k + j*ceil(bits/3)``), so the codegen hash-agg updates
-    ``ceil(bits/3)+1`` buffer slots per token instead of ``bits``. A lane
-    saturates only past 2^21-1 distinct tokens per doc — two orders of
-    magnitude beyond any real document. The sign test recovers the
-    Σ±1 form exactly: sign_b = (2*cnt_set_b − n_tokens) > 0.
-
-    MEASURED: no separation from the per-bit form beyond noise at
-    sf0.1/32c (tools/bench_simhash_ab.py — the agg buffer width is not
-    the cost; tokenize/md5/explode volume is). The simpler per-bit form
-    stays shipped; this one is retained as the raced alternative, pinned
-    bit-identical in tests/test_dedup_forms.py."""
-    stride = (bits + 2) // 3  # lanes per sum; bit b lives in sum_{b % stride}
-    ex = _spread(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode_outer(token_hashes(F.col(text_col))).alias("h"),
-    )
-    aggs = []
-    for k in range(stride):
-        lanes = [b for b in (k, k + stride, k + 2 * stride) if b < bits]
-        packed = None
-        for j, b in enumerate(lanes):
-            lane = (
-                F.shiftrightunsigned("h", b)
-                .bitwiseAND(F.lit(1))
-                .cast("long")
-            )
-            shifted = F.shiftleft(lane, 21 * j) if j else lane
-            packed = shifted if packed is None else packed + shifted
-        aggs.append(
-            F.sum(
-                F.when(F.col("h").isNull(), F.lit(0)).otherwise(packed)
-            ).alias(f"s{k}")
-        )
-    aggs.append(F.count("h").alias("n"))  # count skips nulls
-    cnt = ex.groupBy("doc").agg(*aggs)
-    total = F.lit(0)
-    mask = (1 << 21) - 1
-    for b in range(bits):
-        k, j = b % stride, b // stride
-        c = F.shiftrightunsigned(F.col(f"s{k}"), 21 * j).bitwiseAND(
-            F.lit(mask)
-        )
-        total = total + F.when(
-            c * 2 > F.col("n"), F.lit(1 << b)
-        ).otherwise(F.lit(0))
-    return cnt.select("doc", total.cast("bigint").alias("sh"))
-
-
 def simhash_pairs(
     df: DataFrame, id_col: str, text_col: str, bits: int = 32, max_dist: int = 4
 ) -> DataFrame:
@@ -313,62 +261,6 @@ def simhash_pairs(
     end over :func:`hamming_pairs`)."""
     sh = simhash_signatures(df, id_col, text_col, bits)
     return hamming_pairs(sh, bits, max_dist)
-
-
-def ngram_jaccard_pairs_carried(
-    df: DataFrame,
-    id_col: str,
-    shingle_col: Column,
-    threshold: float,
-) -> DataFrame:
-    """Carried-size formulation of :func:`ngram_jaccard_pairs` (same exact
-    output): ``arr = array_distinct(shingles)`` is projected ONCE (the
-    multi-referenced non-cheap alias keeps CollapseProject from inlining
-    it), ``sz = size(arr)`` rides the exploded rows as one int, and the
-    pair aggregation recovers sza/szb with ``max()`` — eliminating the
-    separate sizes branch and its two paste joins.
-
-    MEASURED SLOWER ~4x than :func:`ngram_jaccard_pairs` at sf0.1/32c
-    (tools/bench_ngram_ab.py: median 9.95 s vs 2.55 s, outputs checksum-
-    identical): the multi-referenced ``arr`` alias under the Generate
-    defeats codegen subexpression handling, while v0's "duplicated" sizes
-    branch is a cheap independent codegen job whose paste joins AQE
-    broadcasts. Retained as the raced alternative (the registry uses v0);
-    forms pinned bit-identical in tests/test_dedup_forms.py."""
-    base = _spread(df).select(
-        F.col(id_col).alias("doc"),
-        F.array_distinct(shingle_col).alias("arr"),
-    )
-    ex = base.select(
-        "doc",
-        F.size("arr").cast("int").alias("sz"),
-        F.explode("arr").alias("sh_str"),
-    ).select("doc", "sz", h64(F.col("sh_str")).alias("sh"))
-    exd = ex.dropDuplicates(["doc", "sh"])
-    inter = (
-        exd.alias("l")
-        .join(
-            exd.alias("r"),
-            (F.col("l.sh") == F.col("r.sh"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .groupBy(F.col("l.doc").alias("doc_a"), F.col("r.doc").alias("doc_b"))
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.max(F.col("l.sz")).alias("sza"),
-            F.max(F.col("r.sz")).alias("szb"),
-        )
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 4
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
 
 def ngram_jaccard_pairs(
@@ -381,7 +273,9 @@ def ngram_jaccard_pairs(
     explode distinct shingles → self-join on shingle → |∩| per pair →
     J = |∩| / (|A|+|B|−|∩|) ≥ threshold. The join key is the 60-bit
     shingle hash, not the shingle string — 8-byte shuffle/compare keys
-    (collision odds over a shingle vocabulary are ~2^-60·|V|², nil)."""
+    (collision odds over a shingle vocabulary are ~2^-60·|V|², nil).
+    The separate sizes branch beat carrying each doc's size through the
+    explode ~4x (SURVEY §4 "ngram-Jaccard sizes")."""
     ex = _spread(df).select(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(shingle_col)).alias("sh_str"),

@@ -10,15 +10,16 @@ Path extraction (r5 rewrite, measured): ``parse_url`` is CodegenFallback —
 one boxed ``java.net.URI`` construction per call per row — and in Spark 4
 it THROWS on invalid URLs (a raw space or a stray ``|`` in a discovered
 link would kill the epoch job). The scope chain needed it 4× per row plus
-higher-order functions (interpreted per path segment), together ~4 s of
-the 12 s discovery materialization at 16 cores on the fat bench epoch.
-``url_path_col`` replaces all of it: one compiled-regex fast path for the
-RFC-3986 ASCII common case (codegen, never throws) with a
-``try_parse_url`` fallback for the residue (unicode paths, IPv6 hosts,
-invalid URLs → NULL); segment depth becomes split-arithmetic and the
+higher-order functions (interpreted per path segment). ``url_path_col``
+replaces all of it: one compiled-regex fast path for the RFC-3986 ASCII
+common case (codegen, never throws) with a ``try_parse_url`` fallback
+for the residue (unicode paths, IPv6 hosts, invalid URLs → NULL); segment depth becomes split-arithmetic and the
 pathological-repeat rule becomes a single backreference regex. Exact
-parity with the parse_url/HOF originals (kept below as ``*_hof`` twins)
-is asserted in tests/test_scope_fast.py over adversarial URL corpora.
+parity with ``try_parse_url`` + HOF reference columns, built in
+tests/test_scope_fast.py, is asserted there over adversarial URL corpora.
+In situ the rewrite measured perf-neutral (~12 s either way for the fat
+bench epoch's discovery materialization at 16 cores); it stays because
+it cannot throw (SURVEY §4 "scope-rule rewrite").
 """
 
 from __future__ import annotations
@@ -62,7 +63,7 @@ def url_path_col(url_col: Column) -> Column:
 def _depth_of_path(path_col: Column) -> Column:
     """Non-empty path segment count from a PATH column, split-arithmetic
     only: strip boundary slashes, split on slash runs. '' → 0; NULL flows
-    through exactly like the HOF original (size of a null array)."""
+    through exactly like the HOF reference (size of a null array)."""
     trimmed = F.regexp_replace(path_col, r"^/+|/+$", "")
     return F.when(trimmed == "", F.lit(0)).otherwise(
         F.size(F.split(trimmed, "/+"))
@@ -84,50 +85,9 @@ def _has_repeat_run_col(path_col: Column, max_repetitions: int) -> Column:
     return path_col.rlike(pat)
 
 
-def path_segments(url_col: Column) -> Column:
-    return F.filter(
-        F.split(F.parse_url(url_col, F.lit("PATH")), "/"), lambda s: s != ""
-    )
-
-
 def path_depth_col(url_col: Column) -> Column:
     """Non-empty path segment count of a URL (fast path extraction)."""
     return _depth_of_path(url_path_col(url_col))
-
-
-def path_depth_hof_col(url_col: Column) -> Column:
-    """The original parse_url + HOF-filter depth — kept as the reference
-    twin for tests/test_scope_fast.py (throws on invalid URLs)."""
-    return F.size(path_segments(url_col))
-
-
-def max_run_hof_col(url_col: Column) -> Column:
-    """Longest run of identical adjacent path segments — the original HOF
-    aggregate, kept as the reference twin for the parity test.
-
-    aggregate(segments, (prev, run, best), ...) — the 'pathological repeats'
-    rule (maxRepetitions, crawler-beans.cxml:168-171) without a UDF.
-    """
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-    )
-
-    def step(acc, seg):
-        new_run = F.when(seg == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            seg.alias("prev"),
-            new_run.alias("run"),
-            F.greatest(acc["best"], new_run).alias("best"),
-        )
-
-    return F.aggregate(path_segments(url_col), init, step, lambda acc: acc["best"])
-
-
-# the public name keeps the original (reference) semantics; scope itself
-# only ever needs the boolean, which the regex answers without a HOF
-max_run_col = max_run_hof_col
 
 
 def blacklist_col(host_col: Column, cfg: CrawlConfig) -> Column:
@@ -153,17 +113,6 @@ def regex_reject_col(url_col: Column, cfg: CrawlConfig) -> Column:
     for pat in cfg.reject_url_regexes:
         out = out | url_col.rlike(pat)
     return out
-
-
-def prerequisite_col(url_col: Column, cfg: CrawlConfig) -> Column:
-    """Prerequisite URIs (robots.txt-style) are always fetchable."""
-    path = F.coalesce(url_path_col(url_col), F.lit("/"))
-    return path.isin(*cfg.prerequisite_paths)
-
-
-def robots_disallowed_col(url_col: Column, prefixes_col: Column) -> Column:
-    path = F.coalesce(url_path_col(url_col), F.lit("/"))
-    return _robots_disallowed_of_path(path, prefixes_col)
 
 
 def _robots_disallowed_of_path(path_col: Column, prefixes_col: Column) -> Column:

@@ -14,10 +14,8 @@ from pyspark.sql import functions as F
 from bitextor_spark.functions.text import shingles
 from bitextor_spark.operators.dedup import (
     ngram_jaccard_pairs,
-    ngram_jaccard_pairs_carried,
     simhash_col,
     simhash_signatures,
-    simhash_signatures_packed,
 )
 
 DOCS = [
@@ -46,13 +44,6 @@ def test_simhash_forms_identical(spark):
             for r in simhash_signatures(df, "doc_id", "text", bits).collect()
         }
         assert agg == per_row, f"bits={bits}: {agg} != {per_row}"
-        packed = {
-            r["doc"]: r["sh"]
-            for r in simhash_signatures_packed(
-                df, "doc_id", "text", bits
-            ).collect()
-        }
-        assert packed == per_row, f"bits={bits}: {packed} != {per_row}"
     # the edge rows land at 0, dup docs collide
     assert agg[3] == agg[4] == agg[5] == 0
     assert agg[1] == agg[7] != 0
@@ -73,18 +64,16 @@ NGRAM_DOCS = [
 ]
 
 
-def test_ngram_jaccard_forms_identical(spark):
-    """The carried-size re-expression (sz rides the exploded rows; pair agg
-    recovers it with max) must emit the exact row set of the reference
-    sizes-branch form, including edge rows that explode drops."""
+def test_ngram_jaccard_edge_rows(spark):
+    """The sizes-branch form's pairs on the edge rows explode drops: exact
+    dups score 1.0, near dups score below it, and docs with no shingles
+    (empty, NULL, fewer than n tokens) never pair."""
     df = spark.createDataFrame(NGRAM_DOCS, "doc_id bigint, text string")
     kw = dict(id_col="doc_id", shingle_col=shingles(F.col("text"), 3),
               threshold=0.05)
-    v0 = sorted(map(tuple, ngram_jaccard_pairs(df, **kw).collect()))
-    v1 = sorted(map(tuple, ngram_jaccard_pairs_carried(df, **kw).collect()))
-    assert v0 == v1
-    pairs = {(a, b): j for a, b, j in v0}
+    rows = sorted(map(tuple, ngram_jaccard_pairs(df, **kw).collect()))
+    pairs = {(a, b): j for a, b, j in rows}
     assert pairs[(1, 3)] == 1.0 and pairs[(9, 10)] == 1.0
     assert (4, 5) in pairs and pairs[(4, 5)] < 1.0
-    flat = [d for a, b, _ in v0 for d in (a, b)]
+    flat = [d for a, b, _ in rows for d in (a, b)]
     assert not {6, 7, 8} & set(flat)
