@@ -192,7 +192,7 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
             # write is pure non-scaling fixed cost. Cadence is a cost
             # knob, not a semantics knob (cadence-invariance parity test
             # in tests/test_frontier_parity.py); the 3-epoch delta log
-            # stays far under delta_broadcast_rows.
+            # stays far under the engine's DELTA_BROADCAST_ROWS.
             compact_delta_ratio=3.0,
         )
         root = tempfile.mkdtemp(prefix=f"crawl_bench_{cpus}_")

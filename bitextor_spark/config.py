@@ -146,10 +146,6 @@ class CrawlConfig:
     # manifest.
     compact_delta_ratio: float = 0.2
     frontier_compact_epochs: int = 64
-    # MOR reads broadcast the delta key set into the base anti-join while
-    # the tracked delta row count stays under this gate (8 B hashes →
-    # ~32 MB at the default); past it the merge becomes a shuffle join
-    delta_broadcast_rows: int = 4_000_000
 
     # The per-host k_cap rank before the politeness walk is a pure
     # volume cap (the walk's prefix masks enforce budget + window

@@ -37,8 +37,10 @@ Frontier state lives in snapshot tables (sources/snapshots.py): a
 single-version base plus a per-epoch delta log. The log's latest version
 per URL is the read itself while it holds one append, and one latest-wins
 groupBy (_latest_wins, the same fold compaction runs) once it holds more.
-Every epoch is resumable (kill → rerun uncommitted epoch, identical by
-the virtual clock).
+An epoch loads the catalog's manifest once and resolves every state read,
+cache key and regime decision against it; the commit publishes the next
+one. Every epoch is resumable (kill → rerun uncommitted epoch, identical
+by the virtual clock).
 """
 
 from __future__ import annotations
@@ -64,6 +66,8 @@ from bitextor_spark.functions.urls import (
 from bitextor_spark.session import unpin
 from bitextor_spark.sources.snapshots import SnapshotCatalog
 
+Manifest = dict[str, Any]
+
 FRONTIER_SCHEMA = (
     "url_hash long, url_canon string, host string, hop int, seed_id int, "
     "state string, retry_count int, not_before_ms long, discovered_epoch int, "
@@ -78,6 +82,10 @@ EVENT_SCHEMA = (
 HOST_STATE_SCHEMA = "host string, next_allowed_ms long"
 _CONSTRAINT_PROPAGATION = "spark.sql.constraintPropagation.enabled"
 ROBOTS_STATE_SCHEMA = "host string, crawl_delay_s int, fetched_ms long"
+# MOR reads broadcast the delta key set into the base anti-join while the
+# manifest's tracked delta row count stays under this gate (8 B hashes →
+# ~32 MB); past it the merge becomes a shuffle join (SURVEY §4)
+DELTA_BROADCAST_ROWS = 4_000_000
 
 
 def _codegen_compiles(spark: SparkSession) -> int | None:
@@ -206,7 +214,7 @@ class FrontierEngine:
         # materialize the fetch-target cache here, outside the crawl loop:
         # synthesizing/caching the world is setup, not crawl work
         self.pages.count()
-        if self.catalog.latest_snapshot_id() is not None:
+        if self.catalog.load_manifest() is not None:
             return
         cfg = self.cfg
         # materialize the (tiny) seed pipeline once: every downstream action
@@ -337,6 +345,9 @@ class FrontierEngine:
         "robots_state_delta": ROBOTS_STATE_SCHEMA,
         "seed_domains": "reg_domain string",
         "fetch_log": EVENT_SCHEMA + ", epoch int",
+        "fetch_verify": (
+            "url_hash long, bytes_ok boolean, caption_ok boolean, epoch int"
+        ),
         "metrics": (
             "epoch int, host string, fetched bigint, errors bigint, "
             "failed bigint, skipped_seen bigint, skipped_scope bigint, "
@@ -344,12 +355,14 @@ class FrontierEngine:
         ),
     }
 
-    def _load(self, name: str) -> DataFrame:
+    def _read(self, m: Manifest, name: str) -> DataFrame | None:
+        """State table ``name`` as manifest ``m`` pins it; None when the
+        manifest does not list it (a delta log after compaction, the
+        robots cache before the first TTL-mode epoch)."""
         df = self.catalog.read(
-            self.spark, name, schema=self._TABLE_SCHEMAS.get(name)
+            self.spark, name, m, schema=self._TABLE_SCHEMAS[name]
         )
-        assert df is not None, f"missing state table {name}"
-        if name == "frontier":
+        if df is not None and name == "frontier":
             # forward migration: snapshots committed before the trans_hops/
             # priority columns existed read them as NULL under the explicit
             # schema — resume with the schema defaults
@@ -376,25 +389,22 @@ class FrontierEngine:
     # The frontier is stored as a compacted BASE (replace table) plus     #
     # per-epoch DELTAS (append table) holding only changed+new rows       #
     # stamped with updated_epoch. Nothing ever rewrites O(frontier) per   #
-    # epoch; reads resolve latest-wins. State transitions are monotone    #
+    # epoch; reads resolve latest-wins. Every view reads the one          #
+    # manifest its epoch loaded. State transitions are monotone           #
     # (QUEUED -> terminal, never back), which the views exploit:          #
     #  - presence (the URL-seen anti-join) needs NO merge: any version    #
     #    proves membership;                                               #
     #  - the base is single-version by construction (compaction output),  #
     #    so latest-wins only ever runs over the DELTA LOG — the big side  #
     #    contributes one anti-join against the deltas' key set, which is  #
-    #    broadcast while the tracked delta row count stays under          #
-    #    cfg.delta_broadcast_rows (no AQE dependence), shuffle beyond;    #
+    #    broadcast while the manifest's delta_rows stays under            #
+    #    DELTA_BROADCAST_ROWS (no AQE dependence), shuffled beyond: one   #
+    #    decision per epoch, from its manifest (_delta_keys);             #
     #  - host politeness cursors only grow, so the host view is a plain   #
     #    max() — a CRDT-style merge, no versioning needed.                #
-    # Every cfg.frontier_compact_epochs the base is rewritten and the     #
-    # deltas dropped, bounding read amplification.                        #
+    # Compaction rewrites the base and drops the deltas (adaptive, capped #
+    # at cfg.frontier_compact_epochs), bounding read amplification.       #
     # ------------------------------------------------------------------ #
-
-    def _deltas(self, name: str) -> DataFrame | None:
-        return self.catalog.read(
-            self.spark, name, schema=self._TABLE_SCHEMAS[name]
-        )
 
     @staticmethod
     def _latest_wins(df: DataFrame) -> DataFrame:
@@ -408,18 +418,20 @@ class FrontierEngine:
             .select("url_hash", "_w.*")
         )
 
-    def _delta_hint(self, df: DataFrame) -> DataFrame:
-        """Broadcast hint for delta-derived key sets, gated by the row
-        count the commits track in the manifest meta (reset at compaction)
-        — explicit, so it holds with AQE off; dropped past the gate so a
-        10^10-scale delta backlog becomes a shuffle join, never a
-        multi-GB driver broadcast."""
-        n = int(self.meta().get("delta_rows", 0))
-        if n <= self.cfg.delta_broadcast_rows:
-            return F.broadcast(df)
-        return df
+    @staticmethod
+    def _delta_keys(m: Manifest, latest: DataFrame) -> DataFrame:
+        """The changed-key set of ``latest``, with a broadcast hint while
+        the row count the commits track in ``m``'s meta (reset at
+        compaction) stays under DELTA_BROADCAST_ROWS — explicit, so it
+        holds with AQE off; dropped past the gate so a 10^10-scale delta
+        backlog becomes a shuffle join, never a multi-GB driver
+        broadcast."""
+        keys = latest.select("url_hash")
+        if int(m["meta"].get("delta_rows", 0)) <= DELTA_BROADCAST_ROWS:
+            return F.broadcast(keys)
+        return keys
 
-    def _delta_latest(self) -> DataFrame | None:
+    def _delta_latest(self, m: Manifest) -> DataFrame | None:
         """Latest version per changed url_hash, or None when no delta log
         exists. run_epoch pins this once (it is O(changes since last
         compaction)) and threads it through every view below — it feeds
@@ -433,16 +445,13 @@ class FrontierEngine:
           and the read is returned as is;
         - two or more: one _latest_wins groupBy over the whole log, the
           same fold compaction runs."""
-        m = self.catalog.load_manifest()
-        if m is None or "frontier_delta" not in m.get("tables", {}):
-            return None
-        deltas = self._deltas("frontier_delta")
-        if len(m["tables"]["frontier_delta"]["paths"]) <= 1:
+        deltas = self._read(m, "frontier_delta")
+        if deltas is None or len(m["tables"]["frontier_delta"]["paths"]) <= 1:
             return deltas
         return self._latest_wins(deltas)
 
     def _merge_latest(
-        self, base: DataFrame, latest: DataFrame | None
+        self, m: Manifest, base: DataFrame, latest: DataFrame | None
     ) -> DataFrame:
         """base (single-version) merged with the latest delta versions.
         The wide groupBy already ran on the (small) delta side; the base
@@ -450,22 +459,20 @@ class FrontierEngine:
         if latest is None:
             return base
         unchanged = base.join(
-            self._delta_hint(latest.select("url_hash")),
-            "url_hash", "left_anti",
+            self._delta_keys(m, latest), "url_hash", "left_anti"
         )
         return unchanged.unionByName(latest)
 
     def _base_cached(
-        self, name: str, build: Callable[[], DataFrame]
+        self, m: Manifest, name: str, build: Callable[[], DataFrame]
     ) -> DataFrame:
-        """``build()`` persisted ACROSS epochs, keyed by the frontier base
-        paths: the base is immutable between compactions, so a layout
+        """``build()`` persisted ACROSS epochs, keyed by ``m``'s frontier
+        base paths: the base is immutable between compactions, so a layout
         derived from it must not pay an O(frontier) exchange every epoch.
         Rebuilt when the manifest's base paths change (compaction or
         resume); recomputable lineage (persist, not checkpoint), so
         executor loss re-reads parquet instead of failing the epoch."""
-        m = self.catalog.load_manifest()
-        key = tuple(m["tables"]["frontier"]["paths"]) if m else None
+        key = tuple(m["tables"]["frontier"]["paths"])
         cached = self._base_caches.get(name)
         if cached is not None and cached[0] == key:
             return cached[1]
@@ -475,22 +482,22 @@ class FrontierEngine:
         self._base_caches[name] = (key, df)
         return df
 
-    def _queued_base(self) -> DataFrame:
+    def _queued_base(self, m: Manifest) -> DataFrame:
         """Base-frontier QUEUED rows, hash-partitioned + sorted on
         URL_CANON — the SAME key the (static, cached) pages table is laid
         out on — so the per-epoch fetch join is exchange-free and
         sort-free on BOTH sides; the delta anti-join on url_hash rides the
-        broadcast hint (delta_broadcast_rows gate), which preserves this
+        broadcast hint (DELTA_BROADCAST_ROWS gate), which preserves this
         layout. Past the gate (compaction-overdue delta backlog) it
         degrades to one shuffle — the regime compaction resets."""
-        return self._base_cached("queued", lambda: (
-            self._load("frontier")
+        return self._base_cached(m, "queued", lambda: (
+            self._read(m, "frontier")
             .filter(F.col("state") == "QUEUED")
             .repartition(self._n_shuffle, "url_canon")
             .sortWithinPartitions("url_canon")
         ))
 
-    def _base_host_counts(self) -> DataFrame:
+    def _base_host_counts(self, m: Manifest) -> DataFrame:
         """Per-host row count of the QUEUED base — the hot-host bound's
         base-side term, aggregated ONCE per compaction (O(distinct hosts)
         rows) so the per-epoch gate scans only the O(delta) side instead
@@ -499,38 +506,37 @@ class FrontierEngine:
         host's count, preserving the gate's hot ⊇ true-hot upper-bound
         invariant (a false-positive hot host pays one redundant rank; a
         miss stays impossible)."""
-        return self._base_cached("host_counts", lambda: (
-            self._queued_base()
+        return self._base_cached(m, "host_counts", lambda: (
+            self._queued_base(m)
             .groupBy("host")
             .agg(F.count(F.lit(1)).alias("_n"))
         ))
 
-    def _base_urls(self) -> DataFrame:
+    def _base_urls(self, m: Manifest) -> DataFrame:
         """url_hash set of the frontier BASE, hash-partitioned + sorted
         within partitions: the URL-seen sort-merge anti-join reuses this
         layout, so only the small candidate side shuffles."""
-        return self._base_cached("urls", lambda: (
-            self._load("frontier")
+        return self._base_cached(m, "urls", lambda: (
+            self._read(m, "frontier")
             .select("url_hash")
             .repartition(self._n_shuffle, "url_hash")
             .sortWithinPartitions("url_hash")
         ))
 
     def _state_parts(
-        self, name: str, new: DataFrame | None
+        self, m: Manifest, name: str, new: DataFrame | None
     ) -> list[DataFrame]:
         """A per-host state table's base, its delta log and ``new`` (this
         epoch's rows, when compaction folds them in), whichever exist."""
-        base = self.catalog.read(
-            self.spark, name, schema=self._TABLE_SCHEMAS[name]
-        )
-        return [p for p in (base, self._deltas(f"{name}_delta"), new)
-                if p is not None]
+        parts = (self._read(m, name), self._read(m, f"{name}_delta"), new)
+        return [p for p in parts if p is not None]
 
-    def _host_state_view(self, new: DataFrame | None = None) -> DataFrame:
+    def _host_state_view(
+        self, m: Manifest, new: DataFrame | None = None
+    ) -> DataFrame:
         """Per-host politeness cursor. Cursors only grow, so the merge of
         base ∪ deltas ∪ ``new`` is a plain max()."""
-        parts = self._state_parts("host_state", new)
+        parts = self._state_parts(m, "host_state", new)
         if len(parts) == 1:
             return parts[0]
         return (
@@ -540,13 +546,13 @@ class FrontierEngine:
         )
 
     def _robots_state_view(
-        self, new: DataFrame | None = None
+        self, m: Manifest, new: DataFrame | None = None
     ) -> DataFrame | None:
         """Per-host robots cache (crawl_delay_s, fetched_ms) — MOR like
         host_state: fetch timestamps only grow, so latest-wins is a
         max_by over base ∪ deltas ∪ ``new``. None until the first
         TTL-mode epoch."""
-        parts = self._state_parts("robots_state", new)
+        parts = self._state_parts(m, "robots_state", new)
         if not parts:
             return None
         return (
@@ -561,7 +567,7 @@ class FrontierEngine:
         )
 
     def _effective_robots(
-        self, active_hosts: DataFrame, epoch_start: int
+        self, m: Manifest, active_hosts: DataFrame, epoch_start: int
     ) -> DataFrame:
         """TTL-mode effective Crawl-delay per active host, plus the
         refresh decision (robotsValidityDurationSeconds, crawler-beans
@@ -579,7 +585,7 @@ class FrontierEngine:
                 F.max_by("crawl_delay_s", "valid_from_ms").alias("_cur_delay")
             )
         )
-        state = self._robots_state_view()
+        state = self._robots_state_view(m)
         j = active_hosts.join(cur, "host", "left")
         if state is not None:
             j = j.join(state, "host", "left")
@@ -619,7 +625,10 @@ class FrontierEngine:
             _t["_start"] = now
 
         cfg = self.cfg
-        meta = self.meta()
+        # the epoch's one manifest load: every state read, base-cache key
+        # and broadcast decision below resolves against it
+        m = self.catalog.load_manifest()
+        meta = m["meta"]
         epoch = int(meta["epoch"])
         # label the epoch's jobs: the per-epoch Spark-job count (fixed cost,
         # the scaling-efficiency driver) is then measurable by bench
@@ -631,8 +640,8 @@ class FrontierEngine:
         epoch_start = epoch * cfg.epoch_window_ms
         epoch_end = epoch_start + cfg.epoch_window_ms
 
-        host_state = self._host_state_view()
-        seed_domains = self._load("seed_domains")
+        host_state = self._host_state_view(m)
+        seed_domains = self._read(m, "seed_domains")
 
         # one materialization of the delta-latest table per epoch (pinned,
         # O(changes since compaction)); every MOR view this epoch reads it.
@@ -641,9 +650,11 @@ class FrontierEngine:
         # anti-joins/broadcast build, host+not_before for the hot-host
         # bound) and an RDD-backed checkpoint cannot column-prune, while
         # the InMemoryRelation serves pruned batches.
-        latest = self._delta_latest()
+        latest = self._delta_latest(m)
+        delta_keys = None
         if latest is not None:
             latest = self._pin(latest, columnar=True)
+            delta_keys = self._delta_keys(m, latest)
         mark('pin_delta')
 
         # not_before/priority filters run AFTER the latest-wins merge (a
@@ -679,12 +690,9 @@ class FrontierEngine:
                 "left",
             )
 
-        qb = self._queued_base()
+        qb = self._queued_base(m)
         if latest is not None:
-            qb = qb.join(
-                self._delta_hint(latest.select("url_hash")),
-                "url_hash", "left_anti",
-            )
+            qb = qb.join(delta_keys, "url_hash", "left_anti")
         queued = prep(qb)
         if latest is not None:
             queued = queued.unionByName(
@@ -711,7 +719,7 @@ class FrontierEngine:
         if ttl_mode:
             robots_eff = self._pin(
                 self._effective_robots(
-                    queued.select("host").distinct(), epoch_start
+                    m, queued.select("host").distinct(), epoch_start
                 )
             )
 
@@ -735,7 +743,7 @@ class FrontierEngine:
         # scan per epoch. Every relaxation (not_before ignored, changed
         # base rows counted on both sides) inflates counts, so a stale
         # count can only force a redundant rank, never an undersized one.
-        bound = self._base_host_counts()
+        bound = self._base_host_counts(m)
         if latest is not None:
             bound = bound.unionByName(
                 latest.filter(F.col("state") == "QUEUED")
@@ -906,7 +914,7 @@ class FrontierEngine:
             .sortWithinPartitions(*walk_sort)
             .mapInArrow(walk_stream, EVENT_SCHEMA)
         )
-        events_path = self.catalog.stage_path("fetch_log", kind="append")
+        events_path = self.catalog.stage_path("fetch_log", "append", m)
         # persist-through-write: the parquet write is still the one
         # materializing action (and the committed fetch_log delta), but it
         # now ALSO populates the cache, so downstream consumers read the
@@ -1138,13 +1146,10 @@ class FrontierEngine:
         # branch off it — unpinned they would each re-run both anti-joins.
         # The per-host dupe/unique counters read the pinned aggregate.
         admitted = grouped.drop("n_disc").join(
-            self._base_urls(), "url_hash", "left_anti"
+            self._base_urls(m), "url_hash", "left_anti"
         )
         if latest is not None:
-            admitted = admitted.join(
-                self._delta_hint(latest.select("url_hash")),
-                "url_hash", "left_anti",
-            )
+            admitted = admitted.join(delta_keys, "url_hash", "left_anti")
         # the admission counter rides the pin's materialization (the other
         # half of the former metrics-write observation)
         obs_ad = Observation()
@@ -1252,13 +1257,15 @@ class FrontierEngine:
             if latest is not None:
                 all_d = all_d.unionByName(latest)
             replace["frontier"] = self._merge_latest(
-                self._load("frontier"), self._latest_wins(all_d)
+                m, self._read(m, "frontier"), self._latest_wins(all_d)
             )
-            replace["host_state"] = self._host_state_view(host_state_delta)
+            replace["host_state"] = self._host_state_view(
+                m, host_state_delta
+            )
             drop = ["frontier_delta", "host_state_delta"]
             if ttl_mode:
                 replace["robots_state"] = self._robots_state_view(
-                    robots_refreshed
+                    m, robots_refreshed
                 )
                 drop.append("robots_state_delta")
         else:
@@ -1291,7 +1298,7 @@ class FrontierEngine:
                 "queued": queued_remaining,
                 "frontier_rows": prev_frontier_rows + n_new,
                 # true delta-log row count (attempts + admissions) —
-                # powers the _delta_hint broadcast gate with no count() job
+                # powers the _delta_keys broadcast gate with no count() job
                 "delta_rows": 0 if compact else pending,
                 "done": queued_remaining == 0
                 or total_fetched + n_fetched >= cfg.max_fetches,
@@ -1340,11 +1347,9 @@ class FrontierEngine:
         ``plans.ordering.global_row_number`` instead. Payload
         verification results (when enabled) live in the fetch_verify side
         table and join back here by (url_hash, epoch)."""
-        df = self._load("fetch_log").drop("new_next_allowed")
-        verify = self.catalog.read(
-            self.spark, "fetch_verify",
-            schema="url_hash long, bytes_ok boolean, caption_ok boolean, epoch int",
-        )
+        m = self.catalog.load_manifest()
+        df = self._read(m, "fetch_log").drop("new_next_allowed")
+        verify = self._read(m, "fetch_verify")
         if verify is not None:
             df = df.join(verify, ["url_hash", "epoch"], "left")
         w = Window.orderBy("epoch", "fetch_start_ms", "host", "url_canon")
@@ -1352,10 +1357,13 @@ class FrontierEngine:
 
     def frontier(self) -> DataFrame:
         """Current frontier (merged MOR view: base latest-wins deltas)."""
-        return self._merge_latest(self._load("frontier"), self._delta_latest())
+        m = self.catalog.load_manifest()
+        return self._merge_latest(
+            m, self._read(m, "frontier"), self._delta_latest(m)
+        )
 
     def metrics(self) -> DataFrame:
-        return self._load("metrics")
+        return self._read(self.catalog.load_manifest(), "metrics")
 
     def flush_pending_metrics(self) -> None:
         """No-op: each epoch's metrics commit with the epoch. Kept because

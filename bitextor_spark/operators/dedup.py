@@ -26,17 +26,7 @@ from pyspark.sql import functions as F
 
 from bitextor_spark.functions.hashes import MINHASH_SALTS, h64
 from bitextor_spark.functions.text import tokens
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's shuffle parallelism before
-    an expensive narrow stage. Two jobs at once: (a) single-file dev inputs
-    (one row group = one scan task) fan out across all cores; (b) the
-    Exchange is a materialization boundary, so per-row signatures are
-    computed ONCE below it instead of being projection-collapsed into a
-    self-join filter and re-evaluated per candidate pair."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return df.repartition(n)
+from bitextor_spark.session import spread
 
 
 def first_per_group(
@@ -91,7 +81,7 @@ def minhash_lsh_pairs(
     the extra full exchange + 16-column hash-agg the explode form adds.
     """
     r = n_hashes // n_bands
-    sig = _spread(df).select(
+    sig = spread(df).select(
         F.col(id_col).alias("doc"),
         minhash_signature(F.col(text_col), n_hashes).alias("sig"),
     )
@@ -230,7 +220,7 @@ def simhash_signatures(
     counters into each 64-bit sum did not separate from it (SURVEY §4
     "simhash agg width"). The groupBy is a map-side partial aggregate; the
     shuffle carries one `bits`-column row per doc per input partition."""
-    ex = _spread(df).select(
+    ex = spread(df).select(
         F.col(id_col).alias("doc"),
         # explode_outer keeps empty/null-token docs (one null-hash row);
         # the null-guard below makes that row contribute 0 to every bit
@@ -276,7 +266,7 @@ def ngram_jaccard_pairs(
     (collision odds over a shingle vocabulary are ~2^-60·|V|², nil).
     The separate sizes branch beat carrying each doc's size through the
     explode ~4x (SURVEY §4 "ngram-Jaccard sizes")."""
-    ex = _spread(df).select(
+    ex = spread(df).select(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(shingle_col)).alias("sh_str"),
     ).select("doc", h64(F.col("sh_str")).alias("sh"))

@@ -15,14 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's shuffle parallelism: fans a
-    single-row-group scan across all cores and pins a materialization
-    boundary below the pair join, so the per-pair cosine work parallelizes
-    with the stream side instead of running in one scan task."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return df.repartition(n)
+from bitextor_spark.session import spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -47,7 +40,7 @@ def cosine_topk(
     Norms are precomputed per row below the join exchange (once per vector,
     not once per pair) — same float expression, so oracle parity holds."""
     q = queries.withColumn("qn", F.sqrt(dot(F.col("qvec"), F.col("qvec"))))
-    c = _spread(corpus).select(
+    c = spread(corpus).select(
         "cid", "cvec", F.sqrt(dot(F.col("cvec"), F.col("cvec"))).alias("cn")
     )
     scored = q.crossJoin(c).select(
@@ -82,7 +75,7 @@ def bucketed_ann_topk(df: DataFrame, id_col: str, vec_col: str, k: int,
                       n_dims: int = 8) -> DataFrame:
     """Within-bucket exact top-k — candidates only from the same sign
     bucket (equi-join on bucket, no cross product across buckets)."""
-    b = _spread(df).select(
+    b = spread(df).select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("v"),
         sign_bucket(F.col(vec_col), n_dims).alias("bucket"),
@@ -150,7 +143,7 @@ def embedding_neardup_pairs(
     cosine 0.9 with the defaults, degrading for far pairs — the documented
     LSH trade. The oracle mirrors the same candidate predicate, so the
     result set is deterministic and engine-comparable."""
-    base = _spread(df).select(
+    base = spread(df).select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("v"),
         F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("vn"),
@@ -289,7 +282,7 @@ def ivf_cosine_topk(
             .select(id_col, vec_col, F.col("cent_id").alias(out))
         )
 
-    assigned = nearest(_spread(corpus), "cid", "cvec", 1, "list_id")
+    assigned = nearest(spread(corpus), "cid", "cvec", 1, "list_id")
     probes = nearest(queries, "qid", "qvec", n_probe, "probe_id")
     cand = probes.join(
         assigned, probes.probe_id == assigned.list_id

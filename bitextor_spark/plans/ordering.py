@@ -48,7 +48,7 @@ def _ranked(
 ) -> tuple[DataFrame, "F.Column", int]:
     """(joined ranged df, 0-based global seq column expr, total rows)."""
     spark = df.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = df.repartitionByRange(nparts, *keys).withColumn(
         "_pid", F.spark_partition_id()
     )

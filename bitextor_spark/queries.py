@@ -656,7 +656,7 @@ def tfidf_similarity(spark, sf_dir):
     """,
 )
 def t1_jaccard_overlap(spark, sf_dir):
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     docs = T(spark, sf_dir, "documents").repartition(n).select(
         "doc_id", "source", F.array_distinct(tokens(F.col("text"))).alias("toks")
     )

@@ -3,7 +3,8 @@
 Tuned per SURVEY.md §4: AQE on (runtime re-plan ≈ the reference's Snakemake
 checkpoint re-evaluation), skew-join handling, Arrow for all pandas UDF
 exchange, and shuffle partitions sized to the core count (overridable via
-SPARK_GRAFT_SHUFFLE_PARTITIONS for cluster runs). ``unpin`` frees the
+SPARK_GRAFT_SHUFFLE_PARTITIONS for cluster runs). ``spread`` fans a
+DataFrame out to the session's shuffle parallelism; ``unpin`` frees the
 blocks of pinned (localCheckpoint or persisted) DataFrames.
 """
 
@@ -52,6 +53,17 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to the session's shuffle parallelism before
+    an expensive narrow stage. Two jobs at once: (a) single-file dev inputs
+    (one row group = one scan task) fan out across all cores; (b) the
+    Exchange is a materialization boundary, so per-row work (signatures,
+    vectors) is computed ONCE below it instead of being projection-collapsed
+    into a pair-join filter and re-evaluated per candidate pair."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n)
 
 
 def unpin(dfs: list[DataFrame]) -> None:

@@ -1,11 +1,11 @@
-"""Catalog-table flavors of the SnapshotCatalog seam (C14 resume model).
+"""Catalog-table backends of the manifest protocol (C14 resume model).
 
-``SnapshotCatalog`` (sources/snapshots.py) implements Iceberg's
-manifest/commit protocol on a plain filesystem. The classes here implement
-the SAME interface (latest_snapshot_id / load_manifest / stage_path /
-commit / read / history) on top of Spark *catalog tables*, so swapping the
-engine's storage layer is a constructor argument, not an engine change —
-the promise the snapshots module makes in its module docstring.
+``ManifestCatalog`` (sources/snapshots.py) is the one implementation of
+the protocol: numbering, carry-forward, replace / append / pre_written /
+drop bookkeeping, manifest assembly, ``read`` and ``history``. The
+backends here supply its physical operations on top of Spark *catalog
+tables*, so swapping the engine's storage layer is a constructor argument,
+not an engine change.
 
 Two flavors:
 
@@ -21,16 +21,21 @@ Two flavors:
   point (the append to the ``__commits__`` table) is atomic, giving the
   same crash-consistency as the filesystem manifests.
 
-Layout mirrors the filesystem catalog exactly:
+Physical operations:
 
-- each ``replace`` commit writes table ``{ns}.{name}__s{snap:06d}``;
-- each ``append`` commit writes delta table ``{ns}.{name}__d{snap:06d}``;
-- the manifest rows live in ``{ns}.__commits__`` (snapshot_id, parent,
-  committed_at, meta JSON, tables JSON) — appended LAST, so a crash
-  beforehand leaves only orphan tables no manifest references, and the
-  retrying epoch's ``createOrReplace`` overwrites them idempotently
-  (the same property the FS catalog gets from ``mode("overwrite")`` on
-  stage paths).
+- write: each ``replace`` commit writes table ``{ns}.{name}__s{snap:06d}``,
+  each ``append`` commit writes delta table ``{ns}.{name}__d{snap:06d}``;
+  the refs in the manifest are these identifiers;
+- adopt: a catalog cannot hand out an in-table write path before the
+  commit, so staged data lands as plain parquet under a local staging
+  root and the commit imports it into its delta table (Iceberg's
+  ``add_files`` pattern, at the cost of one extra read+write);
+- publish: the manifest is one row of ``{ns}.__commits__`` (snapshot_id,
+  parent, committed_at, meta JSON, tables JSON) — appended LAST, so a
+  crash beforehand leaves only orphan tables no manifest references, and
+  the retrying epoch's overwrite replaces them idempotently (the same
+  property the FS catalog gets from ``mode("overwrite")`` on stage paths);
+- load: one Spark job over ``__commits__``.
 """
 
 from __future__ import annotations
@@ -39,23 +44,32 @@ import json
 import os
 import re
 import tempfile
-import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bitextor_spark.sources.snapshots import ManifestCatalog
 
-class TableCatalog:
-    """SnapshotCatalog interface over Spark session-catalog parquet tables."""
+_COMMIT_SCHEMA = T.StructType([
+    T.StructField("snapshot_id", T.LongType()),
+    T.StructField("parent", T.LongType()),
+    T.StructField("committed_at", T.DoubleType()),
+    T.StructField("meta", T.StringType()),
+    T.StructField("tables", T.StringType()),
+])
+
+
+class TableCatalog(ManifestCatalog):
+    """The manifest protocol over Spark session-catalog parquet tables."""
 
     format: str = "parquet"
 
     def __init__(self, spark: SparkSession, namespace: str):
         self.spark = spark
         self.ns = namespace
-        self._staging_root = tempfile.mkdtemp(prefix=f"stage_{namespace}_")
+        self.stage_root = tempfile.mkdtemp(prefix=f"stage_{namespace}_")
         self._create_namespace()
 
     # -- flavor hooks --------------------------------------------------------
@@ -73,29 +87,26 @@ class TableCatalog:
             f"{self.ns}.__commits__"
         )
 
-    # -- manifest resolution -------------------------------------------------
+    # -- backend operations --------------------------------------------------
 
     def _commits(self) -> DataFrame | None:
         if not self.spark.catalog.tableExists(f"{self.ns}.__commits__"):
             return None
         return self.spark.table(f"{self.ns}.__commits__")
 
-    def latest_snapshot_id(self) -> int | None:
+    def load_manifest(
+        self, snapshot_id: int | None = None
+    ) -> dict[str, Any] | None:
         c = self._commits()
         if c is None:
             return None
-        row = c.agg(F.max("snapshot_id").alias("m")).collect()[0]
-        return None if row.m is None else int(row.m)
-
-    def load_manifest(self, snapshot_id: int | None = None) -> dict[str, Any] | None:
-        c = self._commits()
-        if c is None:
-            return None
+        # one job either way: the latest row is a top-1 (one takeOrdered
+        # pass), a given snapshot is a filtered scan
         if snapshot_id is None:
-            snapshot_id = self.latest_snapshot_id()
-            if snapshot_id is None:
-                return None
-        rows = c.filter(F.col("snapshot_id") == snapshot_id).collect()
+            c = c.orderBy(F.col("snapshot_id").desc()).limit(1)
+        else:
+            c = c.filter(F.col("snapshot_id") == snapshot_id)
+        rows = c.collect()
         if not rows:
             return None
         r = rows[0]
@@ -107,124 +118,31 @@ class TableCatalog:
             "parent": None if r.parent is None or r.parent < 0 else int(r.parent),
         }
 
-    # -- commit --------------------------------------------------------------
-
-    def _ident(self, name: str, kind: str, snap_id: int) -> str:
+    def _write(self, df: DataFrame, name: str, kind: str, snap_id: int) -> str:
         label = "s" if kind == "replace" else "d"
-        return f"{self.ns}.{name}__{label}{snap_id:06d}"
+        ident = f"{self.ns}.{name}__{label}{snap_id:06d}"
+        self._write_table(df, ident)
+        return ident
 
-    def stage_path(self, name: str, kind: str = "append") -> str:
-        """Filesystem staging dir for write-fused epoch intermediates.
+    def _adopt(self, name: str, kind: str, snap_id: int) -> str:
+        staged = os.path.join(self.stage_root, self._rel(name, kind, snap_id))
+        return self._write(self.spark.read.parquet(staged), name, kind, snap_id)
 
-        Catalog flavors cannot hand out an in-table write path before the
-        commit, so staged data lands as plain parquet here and ``commit``
-        imports it into a delta table (Iceberg's ``add_files`` pattern,
-        at the cost of one extra read+write of the staged delta)."""
-        prev = self.load_manifest()
-        snap_id = (prev["snapshot_id"] + 1) if prev else 0
-        return os.path.join(self._staging_root, f"{name}-{snap_id:06d}")
+    def _publish(self, manifest: dict[str, Any]) -> None:
+        parent = manifest["parent"]
+        self._append_commit_row(self.spark.createDataFrame(
+            [(manifest["snapshot_id"], -1 if parent is None else parent,
+              manifest["committed_at"], json.dumps(manifest["meta"]),
+              json.dumps(manifest["tables"]))],
+            _COMMIT_SCHEMA,
+        ).coalesce(1))
 
-    def commit(
-        self,
-        replace: dict[str, DataFrame] | None = None,
-        append: dict[str, DataFrame] | None = None,
-        meta: dict[str, Any] | None = None,
-        pre_written: dict[str, str] | None = None,
-        drop: list[str] | None = None,
-    ) -> int:
-        prev = self.load_manifest()
-        snap_id = (prev["snapshot_id"] + 1) if prev else 0
-        tables: dict[str, dict[str, Any]] = (
-            {k: dict(v) for k, v in prev["tables"].items()} if prev else {}
-        )
-
-        jobs: list[tuple[str, str, DataFrame]] = []
-        for name, df in (replace or {}).items():
-            jobs.append(("replace", name, df))
-        for name, df in (append or {}).items():
-            jobs.append(("append", name, df))
-        for name, kind in (pre_written or {}).items():
-            staged = os.path.join(self._staging_root, f"{name}-{snap_id:06d}")
-            jobs.append((kind, name, self.spark.read.parquet(staged)))
-
-        for kind, name, df in jobs:
-            ident = self._ident(name, kind, snap_id)
-            self._write_table(df, ident)
-            if kind == "replace":
-                tables[name] = {"kind": "replace", "paths": [ident]}
-            else:
-                entry = tables.get(name, {"kind": "append", "paths": []})
-                entry["paths"] = list(entry["paths"]) + [ident]
-                tables[name] = entry
-
-        # drop = manifest-entry removal ONLY (FS-catalog parity): the
-        # backing tables survive as unreferenced orphans, so (a) a crash
-        # before the __commits__ append below leaves the previous snapshot
-        # fully readable, and (b) read(snapshot_id=older) time travel keeps
-        # working. Storage reclamation is gc_unreferenced(), post-publish.
-        for name in drop or []:
-            tables.pop(name, None)
-
-        schema = T.StructType([
-            T.StructField("snapshot_id", T.LongType()),
-            T.StructField("parent", T.LongType()),
-            T.StructField("committed_at", T.DoubleType()),
-            T.StructField("meta", T.StringType()),
-            T.StructField("tables", T.StringType()),
-        ])
-        row = self.spark.createDataFrame(
-            [(snap_id, prev["snapshot_id"] if prev else -1, time.time(),
-              json.dumps(meta or {}), json.dumps(tables))],
-            schema,
-        ).coalesce(1)
-        self._append_commit_row(row)  # the commit point
-        return snap_id
-
-    def gc_unreferenced(self) -> list[str]:
-        """Post-publish GC: physically drop catalog tables no manifest in
-        history references. Safe at any time — runs strictly after commit
-        publication, so a crash mid-GC only leaves fewer orphans."""
-        c = self._commits()
-        if c is None:
-            return []
-        referenced: set[str] = set()
-        for r in c.select("tables").collect():
-            for entry in json.loads(r.tables).values():
-                referenced.update(entry["paths"])
-        dropped = []
-        # only tables THIS catalog created are GC candidates: the _ident()
-        # pattern is <name>__[sd]<6-digit snapshot id>; a user table that
-        # merely contains '__' in the same namespace must never be dropped
-        own = re.compile(r"^.+__[sd]\d{6}$")
-        for t in self.spark.catalog.listTables(self.ns):
-            ident = f"{self.ns}.{t.name}"
-            if t.name == "__commits__" or ident in referenced:
-                continue
-            if own.match(t.name):
-                self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-                dropped.append(ident)
-        return dropped
-
-    # -- read ----------------------------------------------------------------
-
-    def read(
-        self,
-        spark: SparkSession,
-        name: str,
-        snapshot_id: int | None = None,
-        schema: str | None = None,
-    ) -> DataFrame | None:
-        manifest = self.load_manifest(snapshot_id)
-        if manifest is None or name not in manifest["tables"]:
-            return None
-        parts = [spark.table(i) for i in manifest["tables"][name]["paths"]]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-        return self._cast_schema(df, schema)
-
-    @staticmethod
-    def _cast_schema(df: DataFrame, schema: str | None) -> DataFrame:
+    def _read_refs(
+        self, spark: SparkSession, refs: list[str], schema: str | None
+    ) -> DataFrame:
+        df = spark.table(refs[0])
+        for ref in refs[1:]:
+            df = df.unionByName(spark.table(ref), allowMissingColumns=True)
         if not schema:
             return df
         # parity with the FS catalog's explicit-schema parquet read:
@@ -240,18 +158,30 @@ class TableCatalog:
             for f in want.fields
         ])
 
-    def history(self) -> list[dict[str, Any]]:
+    def gc_unreferenced(self) -> list[str]:
+        """Post-publish GC: physically drop catalog tables no manifest in
+        history references. Safe at any time — runs strictly after commit
+        publication, so a crash mid-GC only leaves fewer orphans."""
         c = self._commits()
         if c is None:
             return []
-        out = []
-        for r in c.orderBy("snapshot_id").collect():
-            out.append({
-                "snapshot_id": int(r.snapshot_id),
-                "meta": json.loads(r.meta),
-                "parent": None if r.parent < 0 else int(r.parent),
-            })
-        return out
+        referenced: set[str] = set()
+        for r in c.select("tables").collect():
+            for entry in json.loads(r.tables).values():
+                referenced.update(entry["paths"])
+        dropped = []
+        # only tables THIS catalog created are GC candidates: the _write()
+        # pattern is <name>__[sd]<6-digit snapshot id>; a user table that
+        # merely contains '__' in the same namespace must never be dropped
+        own = re.compile(r"^.+__[sd]\d{6}$")
+        for t in self.spark.catalog.listTables(self.ns):
+            ident = f"{self.ns}.{t.name}"
+            if t.name == "__commits__" or ident in referenced:
+                continue
+            if own.match(t.name):
+                self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
+                dropped.append(ident)
+        return dropped
 
 
 class IcebergCatalog(TableCatalog):

@@ -1,26 +1,31 @@
 """Snapshot-table catalog: atomic, resumable state for the crawl engine.
 
-Iceberg-style semantics on a plain filesystem: every epoch commits a
-*manifest* (JSON, written atomically via ``os.replace``) that pins, for each
-state table, the exact set of parquet paths composing it. Readers resolve
-the latest committed manifest — a crashed/killed run leaves at most orphan
-data files that no manifest references, so resume simply re-runs the
-uncommitted epoch deterministically (virtual clock ⇒ identical schedule, no
-politeness violation, no double-fetch of *committed* work). This mirrors
-the reference's resume models: Heritrix CheckpointService
+Iceberg-style semantics: every epoch commits a *manifest* that pins, for
+each state table, the exact set of data refs composing it. Readers resolve
+a committed manifest — a crashed/killed run leaves at most orphan data
+that no manifest references, so resume simply re-runs the uncommitted
+epoch deterministically (virtual clock ⇒ identical schedule, no politeness
+violation, no double-fetch of *committed* work). This mirrors the
+reference's resume models: Heritrix CheckpointService
 (crawler-beans.cxml:541-547) and Snakemake's file-existence resume
 (Snakefile:602-632).
 
-Two table flavors:
-- ``replace`` tables (frontier, host_state): each commit rewrites the full
-  table; the manifest points at the newest snapshot directory only.
-- ``append`` tables (fetch_log, metrics): each commit adds one delta
-  directory; the manifest lists all deltas, read as a union.
+``ManifestCatalog`` is the one implementation of the protocol: snapshot
+numbering, carry-forward of unmentioned tables, the replace / append /
+pre_written / drop bookkeeping, manifest assembly, ``read`` and
+``history``. Two table flavors:
 
-On a cluster with the Iceberg runtime jar this class is swapped for real
-Iceberg tables (``df.writeTo(...).append()`` / ``.createOrReplace()``); the
-manifest/commit semantics here are deliberately the same shape so the swap
-is a connector change, not an engine change.
+- ``replace`` tables (frontier, host_state): each commit rewrites the full
+  table; the manifest points at the newest snapshot only.
+- ``append`` tables (fetch_log, metrics): each commit adds one delta; the
+  manifest lists all deltas, read as a union.
+
+A backend supplies only its physical operations: write one table, adopt a
+staged write, publish a manifest, load a manifest and read a list of
+refs. ``SnapshotCatalog`` here is the filesystem backend (parquet
+directories, JSON manifests published with tmp file + fsync +
+``os.replace``); sources/catalogs.py holds the catalog-table backends, so
+swapping the engine's storage is a constructor argument.
 """
 
 from __future__ import annotations
@@ -28,45 +33,65 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-class SnapshotCatalog:
-    def __init__(self, root: str):
-        self.root = root
-        self.manifest_dir = os.path.join(root, "_manifests")
-        self.data_dir = os.path.join(root, "data")
-        os.makedirs(self.manifest_dir, exist_ok=True)
-        os.makedirs(self.data_dir, exist_ok=True)
+class ManifestCatalog:
+    """The manifest protocol over a backend's physical operations.
 
-    # -- manifest resolution -------------------------------------------------
+    A manifest is ``{snapshot_id, committed_at, tables, meta, parent}``;
+    ``tables`` maps each name to ``{"kind": "replace"|"append", "paths":
+    [ref, ...]}`` in the backend's ref format. Staged data lands under
+    ``stage_root``, at the same relative layout for every backend."""
 
-    def _manifest_ids(self) -> list[int]:
-        ids = []
-        for f in os.listdir(self.manifest_dir):
-            if f.startswith("manifest-") and f.endswith(".json"):
-                ids.append(int(f[len("manifest-"):-len(".json")]))
-        return sorted(ids)
+    stage_root: str
 
-    def latest_snapshot_id(self) -> int | None:
-        ids = self._manifest_ids()
-        return ids[-1] if ids else None
+    # -- backend hooks -------------------------------------------------------
 
-    def load_manifest(self, snapshot_id: int | None = None) -> dict[str, Any] | None:
-        if snapshot_id is None:
-            snapshot_id = self.latest_snapshot_id()
-        if snapshot_id is None:
-            return None
-        path = os.path.join(self.manifest_dir, f"manifest-{snapshot_id}.json")
-        with open(path) as fh:
-            return json.load(fh)
+    def load_manifest(
+        self, snapshot_id: int | None = None
+    ) -> dict[str, Any] | None:
+        """The manifest of ``snapshot_id`` (None: the latest), or None."""
+        raise NotImplementedError
 
-    # -- commit --------------------------------------------------------------
+    def _write(self, df: DataFrame, name: str, kind: str, snap_id: int) -> str:
+        """Write one table of snapshot ``snap_id``; return its ref."""
+        raise NotImplementedError
 
-    def stage_path(self, name: str, kind: str = "append") -> str:
-        """Absolute path where the NEXT commit's data for `name` belongs.
+    def _adopt(self, name: str, kind: str, snap_id: int) -> str:
+        """Make the data staged at ``stage_path`` part of snapshot
+        ``snap_id``; return its ref."""
+        raise NotImplementedError
+
+    def _publish(self, manifest: dict[str, Any]) -> None:
+        """Make ``manifest`` the latest, atomically: the commit point."""
+        raise NotImplementedError
+
+    def _read_refs(
+        self, spark: SparkSession, refs: list[str], schema: str | None
+    ) -> DataFrame:
+        """One DataFrame over the union of ``refs``."""
+        raise NotImplementedError
+
+    # -- protocol ------------------------------------------------------------
+
+    @staticmethod
+    def _next_id(prev: dict[str, Any] | None) -> int:
+        return prev["snapshot_id"] + 1 if prev else 0
+
+    @staticmethod
+    def _rel(name: str, kind: str, snap_id: int) -> str:
+        label = "snap" if kind == "replace" else "delta"
+        return f"{name}/{label}-{snap_id:06d}"
+
+    def stage_path(
+        self, name: str, kind: str, manifest: dict[str, Any] | None
+    ) -> str:
+        """Absolute path where the data for `name` in the snapshot after
+        ``manifest`` belongs.
 
         Iceberg staging model: a caller may write data files here *before*
         committing (e.g. to fuse the write with the computation that
@@ -74,10 +99,9 @@ class SnapshotCatalog:
         ``commit(pre_written=...)``. A crash before the manifest publish
         leaves only orphan files that no manifest references.
         """
-        prev = self.load_manifest()
-        snap_id = (prev["snapshot_id"] + 1) if prev else 0
-        label = "snap" if kind == "replace" else "delta"
-        return os.path.join(self.data_dir, f"{name}/{label}-{snap_id:06d}")
+        return os.path.join(
+            self.stage_root, self._rel(name, kind, self._next_id(manifest))
+        )
 
     def commit(
         self,
@@ -87,106 +111,142 @@ class SnapshotCatalog:
         pre_written: dict[str, str] | None = None,
         drop: list[str] | None = None,
     ) -> int:
-        """Write data files, then atomically publish the manifest.
+        """Write data, then atomically publish the manifest.
 
         Tables not mentioned carry forward from the previous manifest.
         ``replace`` and ``append`` tables are written concurrently.
         ``pre_written`` maps table name -> kind ("replace"/"append") for
-        tables whose data files were already staged at this snapshot's
-        ``stage_path`` — the commit only records them in the manifest (no
-        write job). ``drop`` removes tables from the manifest (their data
-        files become unreferenced — e.g. delta logs folded into a
-        compacted base). ``meta`` is the run metadata the manifest
-        carries (the engine's epoch counters).
+        tables whose data was already staged at this snapshot's
+        ``stage_path`` — the commit only adopts it. ``drop`` removes tables
+        from the manifest (their data becomes unreferenced — e.g. delta
+        logs folded into a compacted base — and older manifests still read
+        it). ``meta`` is the run metadata the manifest carries (the
+        engine's epoch counters).
         """
         prev = self.load_manifest()
-        snap_id = (prev["snapshot_id"] + 1) if prev else 0
+        snap_id = self._next_id(prev)
         tables: dict[str, dict[str, Any]] = (
             {k: dict(v) for k, v in prev["tables"].items()} if prev else {}
         )
+        for name in drop or []:
+            tables.pop(name, None)
+
+        jobs: list[tuple[str, str, DataFrame | None]] = [
+            *(("replace", n, df) for n, df in (replace or {}).items()),
+            *(("append", n, df) for n, df in (append or {}).items()),
+            *((kind, n, None) for n, kind in (pre_written or {}).items()),
+        ]
+
+        def land(job) -> str:
+            kind, name, df = job
+            if df is None:
+                return self._adopt(name, kind, snap_id)
+            return self._write(df, name, kind, snap_id)
 
         # Submit all table writes as CONCURRENT Spark jobs (driver threads):
         # the scheduler interleaves their tasks, so commit wall time is the
         # max of the writes, not the sum — per-epoch fixed cost is the
         # scaling-efficiency killer at high core counts.
-        jobs: list[tuple[str, str, str, DataFrame]] = []
-        for name, df in (replace or {}).items():
-            jobs.append(("replace", name, f"{name}/snap-{snap_id:06d}", df))
-        for name, df in (append or {}).items():
-            jobs.append(("append", name, f"{name}/delta-{snap_id:06d}", df))
+        with ThreadPoolExecutor(max_workers=max(len(jobs), 1)) as pool:
+            refs = list(pool.map(land, jobs))
 
-        def write(job):
-            _, _, rel, df = job
-            df.write.mode("overwrite").parquet(os.path.join(self.data_dir, rel))
-
-        if len(jobs) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-                list(pool.map(write, jobs))
-        else:
-            for job in jobs:
-                write(job)
-
-        for name in drop or []:
-            tables.pop(name, None)
-
-        label = {"replace": "snap", "append": "delta"}
-        for name, kind in (pre_written or {}).items():
-            rel = f"{name}/{label[kind]}-{snap_id:06d}"
-            jobs.append((kind, name, rel, None))
-
-        for kind, name, rel, _df in jobs:
+        for (kind, name, _df), ref in zip(jobs, refs):
             if kind == "replace":
-                tables[name] = {"kind": "replace", "paths": [rel]}
+                tables[name] = {"kind": "replace", "paths": [ref]}
             else:
                 entry = tables.get(name, {"kind": "append", "paths": []})
-                entry["paths"] = list(entry["paths"]) + [rel]
-                tables[name] = entry
+                tables[name] = {"kind": "append",
+                                "paths": list(entry["paths"]) + [ref]}
 
-        manifest = {
+        self._publish({
             "snapshot_id": snap_id,
             "committed_at": time.time(),
             "tables": tables,
             "meta": meta or {},
             "parent": prev["snapshot_id"] if prev else None,
-        }
+        })
+        return snap_id
+
+    def read(
+        self,
+        spark: SparkSession,
+        name: str,
+        manifest: dict[str, Any] | None = None,
+        schema: str | None = None,
+    ) -> DataFrame | None:
+        """Read a table as ``manifest`` pins it (None: the latest
+        manifest); None when it does not list the table. Pass `schema` (DDL
+        string) when the caller knows it: the read returns exactly those
+        fields and types, and the filesystem backend otherwise pays one
+        footer-inference Spark job per read — a fixed per-epoch cost that
+        never parallelizes (the engine reads 5+ state tables every
+        epoch)."""
+        if manifest is None:
+            manifest = self.load_manifest()
+        if manifest is None or name not in manifest["tables"]:
+            return None
+        return self._read_refs(spark, manifest["tables"][name]["paths"], schema)
+
+    def history(self) -> list[dict[str, Any]]:
+        """Every snapshot, oldest first: the latest manifest's parent
+        chain."""
+        out = []
+        m = self.load_manifest()
+        while m is not None:
+            out.append({"snapshot_id": m["snapshot_id"], "meta": m["meta"],
+                        "parent": m["parent"]})
+            m = None if m["parent"] is None else self.load_manifest(m["parent"])
+        return out[::-1]
+
+
+class SnapshotCatalog(ManifestCatalog):
+    """Filesystem backend: tables are parquet directories under
+    ``data_dir`` (refs are paths relative to it), manifests are
+    ``_manifests/manifest-<id>.json``. Staged data is written in place, so
+    adopting it is free."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self.manifest_dir = os.path.join(root, "_manifests")
+        self.data_dir = self.stage_root = os.path.join(root, "data")
+        os.makedirs(self.manifest_dir, exist_ok=True)
+        os.makedirs(self.data_dir, exist_ok=True)
+
+    def load_manifest(
+        self, snapshot_id: int | None = None
+    ) -> dict[str, Any] | None:
+        if snapshot_id is None:
+            ids = [
+                int(f[len("manifest-"):-len(".json")])
+                for f in os.listdir(self.manifest_dir)
+                if f.startswith("manifest-") and f.endswith(".json")
+            ]
+            if not ids:
+                return None
+            snapshot_id = max(ids)
+        path = os.path.join(self.manifest_dir, f"manifest-{snapshot_id}.json")
+        with open(path) as fh:
+            return json.load(fh)
+
+    def _write(self, df: DataFrame, name: str, kind: str, snap_id: int) -> str:
+        rel = self._rel(name, kind, snap_id)
+        df.write.mode("overwrite").parquet(os.path.join(self.data_dir, rel))
+        return rel
+
+    def _adopt(self, name: str, kind: str, snap_id: int) -> str:
+        return self._rel(name, kind, snap_id)
+
+    def _publish(self, manifest: dict[str, Any]) -> None:
+        snap_id = manifest["snapshot_id"]
         tmp = os.path.join(self.manifest_dir, f".manifest-{snap_id}.json.tmp")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(tmp, os.path.join(self.manifest_dir, f"manifest-{snap_id}.json"))
-        return snap_id
 
-    # -- read ----------------------------------------------------------------
-
-    def read(
-        self,
-        spark: SparkSession,
-        name: str,
-        snapshot_id: int | None = None,
-        schema: str | None = None,
-    ) -> DataFrame | None:
-        """Read a table at a snapshot. Pass `schema` (DDL string) when the
-        caller knows it: schema inference otherwise costs one footer-read
-        Spark job per read — a fixed per-epoch cost that never parallelizes
-        (the engine reads 5+ state tables every epoch)."""
-        manifest = self.load_manifest(snapshot_id)
-        if manifest is None or name not in manifest["tables"]:
-            return None
-        paths = [
-            os.path.join(self.data_dir, rel)
-            for rel in manifest["tables"][name]["paths"]
-        ]
+    def _read_refs(
+        self, spark: SparkSession, refs: list[str], schema: str | None
+    ) -> DataFrame:
         reader = spark.read.schema(schema) if schema else spark.read
-        return reader.parquet(*paths)
-
-    def history(self) -> list[dict[str, Any]]:
-        out = []
-        for sid in self._manifest_ids():
-            m = self.load_manifest(sid)
-            out.append(
-                {"snapshot_id": sid, "meta": m["meta"], "parent": m["parent"]}
-            )
-        return out
+        return reader.parquet(*[os.path.join(self.data_dir, r) for r in refs])

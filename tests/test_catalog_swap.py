@@ -148,13 +148,13 @@ def test_table_catalog_drop_keeps_time_travel(spark):
         # latest manifest no longer lists it ...
         assert cat.read(spark, "delta") is None
         # ... but time travel to the pre-drop snapshot still reads the data
-        tt = cat.read(spark, "delta", snapshot_id=s0)
+        tt = cat.read(spark, "delta", cat.load_manifest(s0))
         assert tt is not None and tt.count() == 5
         # post-publish GC physically drops only unreferenced tables: the
         # dropped delta is still referenced by snapshot s0's manifest
         assert cat.gc_unreferenced() == []
-        assert cat.read(spark, "delta", snapshot_id=s0).count() == 5
-        assert cat.read(spark, "other", snapshot_id=s1).count() == 3
+        assert cat.read(spark, "delta", cat.load_manifest(s0)).count() == 5
+        assert cat.read(spark, "other", cat.load_manifest(s1)).count() == 3
     finally:
         _drop_namespace(spark, "swap_droptt")
 
@@ -174,3 +174,73 @@ def test_table_catalog_read_casts_drifted_types(spark):
         assert got.count() == 4
     finally:
         _drop_namespace(spark, "swap_cast")
+
+
+def test_table_catalog_load_manifest_is_one_job(spark):
+    """One `load_manifest()` on a catalog-table backend runs one Spark job,
+    whether it resolves the latest snapshot or a given one."""
+    cat = TableCatalog(spark, "swap_load_jobs")
+    sc = spark.sparkContext
+    try:
+        cat.commit(replace={"t": spark.range(3).selectExpr("id")},
+                   meta={"e": 0})
+        cat.commit(append={"log": spark.range(2).selectExpr("id")},
+                   meta={"e": 1})
+        for snapshot_id, want_e in ((None, 1), (0, 0)):
+            group = f"swap-load-{snapshot_id}"
+            sc.setJobGroup(group, "one manifest load")
+            try:
+                m = cat.load_manifest(snapshot_id)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert m["meta"]["e"] == want_e
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert n_jobs <= 1, (snapshot_id, n_jobs)
+    finally:
+        _drop_namespace(spark, "swap_load_jobs")
+
+
+@pytest.mark.parametrize("backend", ["fs", "table"])
+def test_epoch_loads_the_manifest_at_most_three_times(
+    spark, no_aqe, monkeypatch, backend
+):
+    """A crawl epoch resolves all its state against the manifest it loads
+    once; its commit loads the parent once more. Counted at the class
+    level, because the catalogs call `load_manifest` on themselves. Runs
+    with compaction every epoch (ratio 0.0) and with none (ratio 3.0)."""
+    import dataclasses
+
+    from bitextor_spark.sources.snapshots import SnapshotCatalog
+
+    loads = []
+    for cls in (SnapshotCatalog, TableCatalog):
+        def counted(self, *args, _load=cls.load_manifest, **kwargs):
+            loads.append(1)
+            return _load(self, *args, **kwargs)
+        monkeypatch.setattr(cls, "load_manifest", counted)
+
+    for ratio in (0.0, 3.0):
+        cfg = dataclasses.replace(CFG, compact_delta_ratio=ratio)
+        root = tempfile.mkdtemp(prefix="cat_loads_")
+        ns = f"swap_loads_{int(ratio)}"
+        cat = root if backend == "fs" else TableCatalog(spark, ns)
+        try:
+            dfs = world_to_dfs(spark, small_world(WORLD_CFG))
+            eng = FrontierEngine(
+                spark, cfg, cat, dfs["pages"], dfs["robots"], dfs["seeds"],
+            )
+            eng.bootstrap()
+            per_epoch = []
+            for _ in range(3):
+                loads.clear()
+                eng.run_epoch()
+                per_epoch.append(len(loads))
+            compacted = "frontier_delta" not in eng.catalog.load_manifest()[
+                "tables"]
+            assert compacted == (ratio == 0.0)
+            assert max(per_epoch) <= 3, (ratio, per_epoch)
+            eng.close()
+        finally:
+            if backend == "table":
+                _drop_namespace(spark, ns)
+            shutil.rmtree(root, ignore_errors=True)

@@ -98,3 +98,25 @@ def test_per_key_topk_passthrough_matches_naive(spark):
     # the hot key was actually truncated (the test exercises the rank path)
     n_mega_kept = sum(1 for r in g if r[0] == "mega" and not r[2])
     assert n_mega_kept == k
+
+
+def test_partition_counts_follow_the_session(spark):
+    """`spread` and the range-partitioned rank size themselves from the
+    session's shuffle partitions, Spark's default when the conf is unset,
+    not from a fallback of their own."""
+    from bitextor_spark.plans import ordering
+    from bitextor_spark.session import spread
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        want = int(spark.conf.get(key))
+        assert want != int(prev)
+        df = _fixture(spark)
+        assert spread(df).rdd.getNumPartitions() == want
+        global_row_number(df, [F.col("id")]).count()
+        assert ordering._DEFAULT_PINS[-1].rdd.getNumPartitions() == want
+    finally:
+        release_pins()
+        spark.conf.set(key, prev)

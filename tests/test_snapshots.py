@@ -13,7 +13,7 @@ def test_commit_read_carry_append(spark):
     root = tempfile.mkdtemp(prefix="snapcat_")
     try:
         cat = SnapshotCatalog(root)
-        assert cat.latest_snapshot_id() is None
+        assert cat.load_manifest() is None
         df1 = spark.range(5).withColumnRenamed("id", "x")
         sid0 = cat.commit(replace={"t": df1}, append={"log": df1}, meta={"e": 0})
         assert sid0 == 0
@@ -24,7 +24,7 @@ def test_commit_read_carry_append(spark):
         # append table unions both deltas
         assert cat.read(spark, "log").count() == 10
         # time travel to snapshot 0
-        assert cat.read(spark, "log", snapshot_id=0).count() == 5
+        assert cat.read(spark, "log", cat.load_manifest(0)).count() == 5
         assert [h["meta"]["e"] for h in cat.history()] == [0, 1]
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -1,11 +1,13 @@
 """The repo's scripts must keep importing what the library still has.
 
-``tools/*.py``, ``jobs/*.py`` and ``bench.py`` run outside the test suite,
-most of their imports sit inside functions, and nothing else executes
-them, so a library deletion could break one silently. This walks each
-script's AST and checks that every ``from bitextor_spark... import name``
-names a module attribute or a submodule, and that every
-``import bitextor_spark...`` names a module. No Spark session starts."""
+``tools/*.py``, ``jobs/*.py``, ``perfbench/*.py`` and ``bench.py`` run
+outside the test suite, most of their imports sit inside functions, and
+nothing else executes them, so a library deletion or rename could break
+one silently (``perfbench/`` changes only with the benchmark, so there it
+would show only when the benchmark runs). This walks each script's AST
+and checks that every ``from bitextor_spark... import name`` names a
+module attribute or a submodule, and that every ``import
+bitextor_spark...`` names a module. No Spark session starts."""
 
 from __future__ import annotations
 
@@ -17,9 +19,10 @@ from pathlib import Path
 import pytest
 
 ROOT = Path(__file__).resolve().parents[1]
-SCRIPTS = sorted(
-    [*ROOT.glob("tools/*.py"), *ROOT.glob("jobs/*.py"), ROOT / "bench.py"]
-)
+SCRIPTS = sorted([
+    *ROOT.glob("tools/*.py"), *ROOT.glob("jobs/*.py"),
+    *ROOT.glob("perfbench/*.py"), ROOT / "bench.py",
+])
 
 
 def _library_imports(path: Path):
