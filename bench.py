@@ -155,17 +155,13 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
     from bitextor_spark.frontier.world import spark_world
     from bitextor_spark.session import get_spark
 
-    # AQE knob (A/B, see BENCH/BASELINE.md): the drained-epoch profile is
-    # dominated by many small 32-task shuffle stages; adaptive partition
-    # coalescing can collapse those waves, or its re-planning can add
-    # driver latency — measured, not assumed.
-    aqe = os.environ.get("SPARK_GRAFT_CRAWL_AQE", "0") == "1"
     spark = get_spark(
         app_name=f"crawl-bench-{cpus}",
         master=f"local[{cpus}]",
         # 2x cores: straggler absorption for the skewed host groups
         shuffle_partitions=2 * cpus,
-        extra_conf={"spark.sql.adaptive.enabled": "true" if aqe else "false"},
+        # AQE off: on vs off was a wash for the crawl epochs (SURVEY §4)
+        extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     try:
         if warmup:
@@ -476,7 +472,7 @@ def write_report(result: dict) -> None:
             "",
             "cand-phase = pin_delta + topk_gate + plan_candidates marks "
             "(everything from epoch start to the materialized politeness "
-            "walk / events write — the r4 'candidate phase < 5 s at 16 "
+            "walk / events pin — the r4 'candidate phase < 5 s at 16 "
             "cores' target). Its min tracks what the code costs on a calm "
             "box; the spread to max co-moves with the steal column (the "
             "walk exchange is O(queued), but the mark also absorbs driver "
@@ -640,7 +636,7 @@ def main() -> None:
             )
             # candidate-phase wall per epoch (r4 directive #4 evidence):
             # pin_delta + topk_gate + plan_candidates, i.e. everything
-            # between epoch start and the materialized walk/events write.
+            # between epoch start and the materialized walk/events pin.
             # Reported as min/median/max so a steal episode shows up as
             # dispersion next to its own steal column, not as a silently
             # inflated single number.

@@ -5,6 +5,7 @@ One epoch = one Spark job pipeline:
   queued frontier ──(per-host top-k prefix)──► schedulable candidates
      ⋈ pages (status/duration)  ⋈ robots (broadcast)  ⋈ host_state
      ──repartition(host)+sort, mapInArrow(politeness walk)──► fetch events
+     (pinned once; the commit writes them as the fetch_log delta)
      ──window(order by start,host,url)──► fetch_log seq (exact order)
      events ⋈ pages.outlinks ──mapInArrow flat resolver──► raw links
      (RE2-classified in-batch: resolve+canonicalize+explode+page dedup)
@@ -14,8 +15,9 @@ One epoch = one Spark job pipeline:
      layout + the gated delta-key anti-join──►
      admitted (pinned once; the commit writes branch off it)
      ──► frontier ∪ admitted ; snapshot commit (atomic manifest) that
-     writes the deltas and the epoch's per-host metrics (one tagged-union
-     agg) concurrently, so a committed epoch carries its own metrics
+     writes the fetch log, the deltas and the epoch's per-host metrics
+     (one tagged-union agg) concurrently, so a committed epoch carries its
+     own fetch log and metrics
 
 Parallelism-independence: every nondeterministic boundary is closed by an
 explicit total order — per-host queue order (hop, url_canon), global fetch
@@ -52,7 +54,7 @@ from typing import Any, Callable
 import numpy as np
 import pandas as pd
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bitextor_spark.config import CrawlConfig
@@ -289,7 +291,7 @@ class FrontierEngine:
         self.catalog.commit(
             replace={"frontier": frontier, "host_state": host_state,
                      "seed_domains": seed_domains},
-            meta={"epoch": 0, "total_fetched": 0, "seq_offset": 0,
+            meta={"epoch": 0, "total_fetched": 0,
                   "queued": (n_seeds := frontier.count()),
                   "frontier_rows": n_seeds, "done": False},
         )
@@ -635,7 +637,6 @@ class FrontierEngine:
         job_group = f"epoch-{id(self):x}-{epoch}"
         self.spark.sparkContext.setJobGroup(job_group, "crawl epoch")
         compiles0 = _codegen_compiles(self.spark)
-        seq_offset = int(meta["seq_offset"])
         total_fetched = int(meta["total_fetched"])
         epoch_start = epoch * cfg.epoch_window_ms
         epoch_end = epoch_start + cfg.epoch_window_ms
@@ -903,31 +904,19 @@ class FrontierEngine:
                 if out is not None:
                     yield from out.to_batches()
 
-        # eager materialization: every downstream consumer (host_state,
-        # frontier transitions, discovery, metrics) reads the walk output
-        # exactly once from storage. The materialization IS the fetch_log
-        # delta write (Iceberg staging: data files land before the manifest
-        # publish; a crash orphans them harmlessly) — one job does double
-        # duty, and the commit phase later only records the path.
+        # eager materialization: every downstream consumer (the fetch_log
+        # write in the commit, host_state, frontier transitions, discovery,
+        # metrics) reads the walk output once from the pin. Columnar: most
+        # consumers read a few of its columns. The epoch's outcome counters
+        # ride the pin as an observation, so the commit's meta never waits
+        # on a commit-pool write.
         raw_events = (
             cand.repartition(self._n_shuffle, "host")
             .sortWithinPartitions(*walk_sort)
             .mapInArrow(walk_stream, EVENT_SCHEMA)
         )
-        events_path = self.catalog.stage_path("fetch_log", "append", m)
-        # persist-through-write: the parquet write is still the one
-        # materializing action (and the committed fetch_log delta), but it
-        # now ALSO populates the cache, so downstream consumers read the
-        # InMemoryRelation instead of paying a parquet read-back round
-        # trip per epoch. Released with the epoch's other pins post-commit.
-        events = raw_events.persist()
-        self._epoch_pins.append(events)
-        # the epoch's outcome counters ride THIS write as an observation,
-        # so the commit's meta never waits on the metrics write
-        from pyspark.sql import Observation
-
         obs_ev = Observation()
-        events.observe(
+        events = self._pin(raw_events.observe(
             obs_ev,
             F.sum(
                 F.when(F.col("outcome") == "FETCHED", 1).otherwise(0)
@@ -938,9 +927,7 @@ class FrontierEngine:
             F.sum(
                 F.when(F.col("outcome") != "FETCHED", 1).otherwise(0)
             ).alias("e"),
-        ).withColumn("epoch", F.lit(epoch)).write.mode(
-            "overwrite"
-        ).parquet(events_path)
+        ), columnar=True)
 
         mark('plan_candidates')
         ev = obs_ev.get
@@ -1237,11 +1224,13 @@ class FrontierEngine:
         )
         mark('metrics_dag')
 
-        # --- commit: MOR deltas, adaptive compaction (`compact` was
-        # decided right after the events write, where the attempt count
+        # --- commit: fetch log, MOR deltas, adaptive compaction (`compact`
+        # was decided right after the events pin, where the attempt count
         # first became known) ---
         replace: dict[str, DataFrame] = {}
-        append: dict[str, DataFrame] = {}
+        append: dict[str, DataFrame] = {
+            "fetch_log": events.withColumn("epoch", F.lit(epoch))
+        }
         drop: list[str] = []
         if ttl_mode:
             robots_refreshed = robots_eff.filter("_refreshed").select(
@@ -1280,8 +1269,8 @@ class FrontierEngine:
         # the deltas, so the epoch's manifest lists its own metrics
         append["metrics"] = metrics
 
-        # the observations were materialized by the events write and the
-        # admitted pin, so the whole meta is known before the commit starts
+        # the observations were materialized by the events and admitted
+        # pins, so the whole meta is known before the commit starts
         n_new = int(obs_ad.get["q"] or 0)
         # queued' = queued − terminal attempts + newly admitted
         queued_remaining = int(meta["queued"]) - n_fetched - n_failed + n_new
@@ -1290,10 +1279,8 @@ class FrontierEngine:
             replace=replace or None,
             append=append,
             drop=drop or None,
-            pre_written={"fetch_log": "append"},
             meta={
                 "epoch": epoch + 1,
-                "seq_offset": seq_offset + n_attempts,
                 "total_fetched": total_fetched + n_fetched,
                 "queued": queued_remaining,
                 "frontier_rows": prev_frontier_rows + n_new,
@@ -1370,9 +1357,11 @@ class FrontierEngine:
         perfbench/crawl.py and perfbench/make_digests.py still call it."""
 
     def close(self) -> None:
-        """Hand the session back as the engine found it: free the per-base
-        caches and restore constraint propagation. The catalog readers
-        still work afterwards."""
+        """Hand the session back as the engine found it: free the pins of
+        an epoch that raised before its commit, the per-base caches, and
+        restore constraint propagation. The catalog readers still work
+        afterwards."""
+        self._release_pins()
         for _, df in self._base_caches.values():
             df.unpersist()
         self._base_caches.clear()

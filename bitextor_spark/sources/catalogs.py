@@ -1,8 +1,8 @@
 """Catalog-table backends of the manifest protocol (C14 resume model).
 
 ``ManifestCatalog`` (sources/snapshots.py) is the one implementation of
-the protocol: numbering, carry-forward, replace / append / pre_written /
-drop bookkeeping, manifest assembly, ``read`` and ``history``. The
+the protocol: numbering, carry-forward, replace / append / drop
+bookkeeping, manifest assembly, ``read`` and ``history``. The
 backends here supply its physical operations on top of Spark *catalog
 tables*, so swapping the engine's storage layer is a constructor argument,
 not an engine change.
@@ -25,25 +25,22 @@ Physical operations:
 
 - write: each ``replace`` commit writes table ``{ns}.{name}__s{snap:06d}``,
   each ``append`` commit writes delta table ``{ns}.{name}__d{snap:06d}``;
-  the refs in the manifest are these identifiers;
-- adopt: a catalog cannot hand out an in-table write path before the
-  commit, so staged data lands as plain parquet under a local staging
-  root and the commit imports it into its delta table (Iceberg's
-  ``add_files`` pattern, at the cost of one extra read+write);
+  the refs in the manifest are these identifiers; the commit writes all
+  of an epoch's tables, the fetch log included, on one thread pool;
 - publish: the manifest is one row of ``{ns}.__commits__`` (snapshot_id,
   parent, committed_at, meta JSON, tables JSON) — appended LAST, so a
   crash beforehand leaves only orphan tables no manifest references, and
   the retrying epoch's overwrite replaces them idempotently (the same
-  property the FS catalog gets from ``mode("overwrite")`` on stage paths);
-- load: one Spark job over ``__commits__``.
+  property the FS catalog gets from ``mode("overwrite")`` on its data
+  paths);
+- load: one Spark job over ``__commits__``;
+- read: the union of a table's ref identifiers.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import re
-import tempfile
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,7 +66,6 @@ class TableCatalog(ManifestCatalog):
     def __init__(self, spark: SparkSession, namespace: str):
         self.spark = spark
         self.ns = namespace
-        self.stage_root = tempfile.mkdtemp(prefix=f"stage_{namespace}_")
         self._create_namespace()
 
     # -- flavor hooks --------------------------------------------------------
@@ -123,10 +119,6 @@ class TableCatalog(ManifestCatalog):
         ident = f"{self.ns}.{name}__{label}{snap_id:06d}"
         self._write_table(df, ident)
         return ident
-
-    def _adopt(self, name: str, kind: str, snap_id: int) -> str:
-        staged = os.path.join(self.stage_root, self._rel(name, kind, snap_id))
-        return self._write(self.spark.read.parquet(staged), name, kind, snap_id)
 
     def _publish(self, manifest: dict[str, Any]) -> None:
         parent = manifest["parent"]

@@ -12,20 +12,22 @@ reference's resume models: Heritrix CheckpointService
 
 ``ManifestCatalog`` is the one implementation of the protocol: snapshot
 numbering, carry-forward of unmentioned tables, the replace / append /
-pre_written / drop bookkeeping, manifest assembly, ``read`` and
-``history``. Two table flavors:
+drop bookkeeping, manifest assembly, ``read`` and ``history``. Two table
+flavors:
 
 - ``replace`` tables (frontier, host_state): each commit rewrites the full
   table; the manifest points at the newest snapshot only.
 - ``append`` tables (fetch_log, metrics): each commit adds one delta; the
   manifest lists all deltas, read as a union.
 
-A backend supplies only its physical operations: write one table, adopt a
-staged write, publish a manifest, load a manifest and read a list of
-refs. ``SnapshotCatalog`` here is the filesystem backend (parquet
-directories, JSON manifests published with tmp file + fsync +
-``os.replace``); sources/catalogs.py holds the catalog-table backends, so
-swapping the engine's storage is a constructor argument.
+A commit writes every table it lists on one thread pool, then publishes
+the manifest, so a crash before the publish leaves only orphan data. A
+backend supplies only its physical operations: write one table, publish
+a manifest, load a manifest and read a list of refs. ``SnapshotCatalog``
+here is the filesystem backend (parquet directories, JSON manifests
+published with tmp file + fsync + ``os.replace``); sources/catalogs.py
+holds the catalog-table backends, so swapping the engine's storage is a
+constructor argument.
 """
 
 from __future__ import annotations
@@ -44,10 +46,7 @@ class ManifestCatalog:
 
     A manifest is ``{snapshot_id, committed_at, tables, meta, parent}``;
     ``tables`` maps each name to ``{"kind": "replace"|"append", "paths":
-    [ref, ...]}`` in the backend's ref format. Staged data lands under
-    ``stage_root``, at the same relative layout for every backend."""
-
-    stage_root: str
+    [ref, ...]}`` in the backend's ref format."""
 
     # -- backend hooks -------------------------------------------------------
 
@@ -59,11 +58,6 @@ class ManifestCatalog:
 
     def _write(self, df: DataFrame, name: str, kind: str, snap_id: int) -> str:
         """Write one table of snapshot ``snap_id``; return its ref."""
-        raise NotImplementedError
-
-    def _adopt(self, name: str, kind: str, snap_id: int) -> str:
-        """Make the data staged at ``stage_path`` part of snapshot
-        ``snap_id``; return its ref."""
         raise NotImplementedError
 
     def _publish(self, manifest: dict[str, Any]) -> None:
@@ -82,27 +76,6 @@ class ManifestCatalog:
     def _next_id(prev: dict[str, Any] | None) -> int:
         return prev["snapshot_id"] + 1 if prev else 0
 
-    @staticmethod
-    def _rel(name: str, kind: str, snap_id: int) -> str:
-        label = "snap" if kind == "replace" else "delta"
-        return f"{name}/{label}-{snap_id:06d}"
-
-    def stage_path(
-        self, name: str, kind: str, manifest: dict[str, Any] | None
-    ) -> str:
-        """Absolute path where the data for `name` in the snapshot after
-        ``manifest`` belongs.
-
-        Iceberg staging model: a caller may write data files here *before*
-        committing (e.g. to fuse the write with the computation that
-        materializes an epoch intermediate) and then pass the name via
-        ``commit(pre_written=...)``. A crash before the manifest publish
-        leaves only orphan files that no manifest references.
-        """
-        return os.path.join(
-            self.stage_root, self._rel(name, kind, self._next_id(manifest))
-        )
-
     def commit(
         self,
         replace: dict[str, DataFrame] | None = None,
@@ -115,14 +88,18 @@ class ManifestCatalog:
 
         Tables not mentioned carry forward from the previous manifest.
         ``replace`` and ``append`` tables are written concurrently.
-        ``pre_written`` maps table name -> kind ("replace"/"append") for
-        tables whose data was already staged at this snapshot's
-        ``stage_path`` — the commit only adopts it. ``drop`` removes tables
-        from the manifest (their data becomes unreferenced — e.g. delta
-        logs folded into a compacted base — and older manifests still read
-        it). ``meta`` is the run metadata the manifest carries (the
-        engine's epoch counters).
+        ``drop`` removes tables from the manifest (their data becomes
+        unreferenced — e.g. delta logs folded into a compacted base — and
+        older manifests still read it). ``meta`` is the run metadata the
+        manifest carries (the engine's epoch counters). ``pre_written``
+        must be empty: it is kept because perfbench/crawl.py's
+        ``TimedCatalog`` still forwards it on every commit.
         """
+        if pre_written:
+            raise ValueError(
+                "pre_written must be empty: pass the table in `append` "
+                "or `replace`"
+            )
         prev = self.load_manifest()
         snap_id = self._next_id(prev)
         tables: dict[str, dict[str, Any]] = (
@@ -131,16 +108,13 @@ class ManifestCatalog:
         for name in drop or []:
             tables.pop(name, None)
 
-        jobs: list[tuple[str, str, DataFrame | None]] = [
+        jobs: list[tuple[str, str, DataFrame]] = [
             *(("replace", n, df) for n, df in (replace or {}).items()),
             *(("append", n, df) for n, df in (append or {}).items()),
-            *((kind, n, None) for n, kind in (pre_written or {}).items()),
         ]
 
         def land(job) -> str:
             kind, name, df = job
-            if df is None:
-                return self._adopt(name, kind, snap_id)
             return self._write(df, name, kind, snap_id)
 
         # Submit all table writes as CONCURRENT Spark jobs (driver threads):
@@ -202,13 +176,12 @@ class ManifestCatalog:
 class SnapshotCatalog(ManifestCatalog):
     """Filesystem backend: tables are parquet directories under
     ``data_dir`` (refs are paths relative to it), manifests are
-    ``_manifests/manifest-<id>.json``. Staged data is written in place, so
-    adopting it is free."""
+    ``_manifests/manifest-<id>.json``."""
 
     def __init__(self, root: str):
         self.root = root
         self.manifest_dir = os.path.join(root, "_manifests")
-        self.data_dir = self.stage_root = os.path.join(root, "data")
+        self.data_dir = os.path.join(root, "data")
         os.makedirs(self.manifest_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
 
@@ -228,13 +201,15 @@ class SnapshotCatalog(ManifestCatalog):
         with open(path) as fh:
             return json.load(fh)
 
+    @staticmethod
+    def _rel(name: str, kind: str, snap_id: int) -> str:
+        label = "snap" if kind == "replace" else "delta"
+        return f"{name}/{label}-{snap_id:06d}"
+
     def _write(self, df: DataFrame, name: str, kind: str, snap_id: int) -> str:
         rel = self._rel(name, kind, snap_id)
         df.write.mode("overwrite").parquet(os.path.join(self.data_dir, rel))
         return rel
-
-    def _adopt(self, name: str, kind: str, snap_id: int) -> str:
-        return self._rel(name, kind, snap_id)
 
     def _publish(self, manifest: dict[str, Any]) -> None:
         snap_id = manifest["snapshot_id"]

@@ -14,6 +14,7 @@ Reference resume model: Heritrix CheckpointService
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -104,6 +105,26 @@ def test_table_catalog_resume(spark, fs_run, no_aqe):
         assert _log_tuples(eng2) == _log_tuples(fs_run)
     finally:
         _drop_namespace(spark, "swap_resume")
+
+
+def _stage_entries() -> list[str]:
+    tmp = tempfile.gettempdir()
+    return [f for f in os.listdir(tmp) if f.startswith("stage_")]
+
+
+def test_table_catalog_crawl_leaves_no_staging_files(spark, no_aqe):
+    """A catalog-table crawl writes its fetch log into the catalog only:
+    nothing is staged in the system temp directory, so a 3-epoch crawl
+    leaves as many ``stage_*`` entries there as it found."""
+    before = len(_stage_entries())
+    cat = TableCatalog(spark, "swap_nostage")
+    try:
+        eng = _run_with_catalog(spark, cat, max_epochs=3)
+        epochs = {r.epoch for r in eng.fetch_log().select("epoch").collect()}
+        assert epochs == {0, 1, 2}
+    finally:
+        _drop_namespace(spark, "swap_nostage")
+    assert len(_stage_entries()) == before
 
 
 def _iceberg_available(spark) -> bool:

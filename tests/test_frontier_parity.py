@@ -8,6 +8,7 @@ tests/common.sh:27-60).
 from __future__ import annotations
 
 import collections
+import contextlib
 import os
 import shutil
 import tempfile
@@ -221,41 +222,90 @@ def test_priority_queue_parity(spark, no_aqe):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_compaction_cadence_invariance(spark, world, sim, no_aqe):
+@contextlib.contextmanager
+def _session_confs(spark, confs):
+    """Set session confs for the block, then put back each one's value (or
+    absence)."""
+    prev = {k: spark.conf.getAll.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_compaction_cadence_invariance(spark, world, sim, no_aqe,
+                                       monkeypatch):
     """MOR frontier storage: the crawl is byte-identical whatever the
     compaction cadence, including a resume that lands between two
     compactions (the resumed engine reads base + delta logs). At cadence
     4 the resume point holds three delta appends, so the resumed epoch
     and the final frontier read both take the multi-append latest-wins
-    merge."""
+    merge.
+
+    The third input runs the physical regimes a small local crawl never
+    reaches: the shuffled (non-broadcast) delta-key anti-join, the
+    cluster-mode persist + count pins, and 3-row Arrow batches, so the
+    walk carries host groups across batch boundaries and the flat
+    resolver sees many batches. After each crawl's ``close()`` the session
+    holds no persisted RDD the crawl made."""
     import dataclasses
 
+    from bitextor_spark.frontier import engine as engine_mod
+
+    cluster_confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+    }
     # (cadence, frontier_delta appends at the epoch-3 resume point,
-    # delta log left after epoch 6); the ratio trigger is off (it would
-    # compact every epoch at this scale and never leave a delta log
-    # standing): cadence-only compaction here
-    for cadence, n_appends, delta_left in ((2, 1, False), (4, 3, True)):
+    # delta log left after epoch 6, cluster regimes); the ratio trigger is
+    # off (it would compact every epoch at this scale and never leave a
+    # delta log standing): cadence-only compaction here
+    for cadence, n_appends, delta_left, cluster in (
+        (2, 1, False, False), (4, 3, True, False), (5, 3, True, True),
+    ):
         cfg_c = dataclasses.replace(
             CFG, frontier_compact_epochs=cadence,
             compact_delta_ratio=float("inf"),
         )
         dfs = world_to_dfs(spark, world)
         root = tempfile.mkdtemp(prefix="frontier_compact_")
+        if cluster:
+            monkeypatch.setattr(engine_mod, "DELTA_BROADCAST_ROWS", -1)
+
+        def crawl(max_epochs):
+            eng = FrontierEngine(
+                spark, cfg_c, root, dfs["pages"], dfs["robots"],
+                dfs["seeds"],
+            )
+            if cluster:
+                eng._is_local = False
+            eng.pages.count()
+            eng.robots.count()
+            before = _persisted_ids(spark)
+            eng.run(max_epochs=max_epochs)
+            eng.close()
+            # every pin and per-base cache the crawl took is freed
+            assert _persisted_ids(spark) <= before
+            return eng
+
         try:
-            eng1 = FrontierEngine(
-                spark, cfg_c, root, dfs["pages"], dfs["robots"],
-                dfs["seeds"],
-            )
-            eng1.run(max_epochs=3)
-            m = eng1.catalog.load_manifest()
-            assert len(m["tables"]["frontier_delta"]["paths"]) == n_appends
-            # the URL-seen check is the exact anti-join alone: no blooms
-            assert not {"blooms", "bloom_pending"} & set(m["tables"])
-            eng2 = FrontierEngine(
-                spark, cfg_c, root, dfs["pages"], dfs["robots"],
-                dfs["seeds"],
-            )
-            eng2.run(max_epochs=N_EPOCHS)
+            with _session_confs(spark, cluster_confs if cluster else {}):
+                eng1 = crawl(3)
+                m = eng1.catalog.load_manifest()
+                assert len(m["tables"]["frontier_delta"]["paths"]) == n_appends
+                # the URL-seen check is the exact anti-join alone: no blooms
+                assert not {"blooms", "bloom_pending"} & set(m["tables"])
+                eng2 = crawl(N_EPOCHS)
             assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
             seen = {r.url_canon
                     for r in eng2.frontier().select("url_canon").collect()}
@@ -264,6 +314,7 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe):
             assert ("frontier_delta" in m["tables"]) == delta_left
             assert not {"blooms", "bloom_pending"} & set(m["tables"])
         finally:
+            monkeypatch.undo()
             shutil.rmtree(root, ignore_errors=True)
 
 
@@ -322,6 +373,81 @@ def test_run_flushes_metrics_when_an_epoch_raises(spark, world):
         ).count()
         assert log_fetched > 0 and fetched == log_fetched
     finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize("backend", ["fs", "table"])
+def test_crash_inside_the_commit_pool(spark, world, sim, no_aqe, monkeypatch,
+                                      backend):
+    """A write that fails inside the commit pool publishes nothing: the
+    previous manifest stays the latest, the epoch's other tables (the
+    fetch log among them) are orphans no manifest lists, and a new engine
+    reruns the epoch to the simulator's exact crawl, seen set and per-host
+    metrics. The failure is injected at the class level of both catalog
+    backends: the third epoch's metrics write raises. ``close()`` frees
+    the pins the failed epoch left."""
+    from bitextor_spark.sources.catalogs import TableCatalog
+    from bitextor_spark.sources.snapshots import SnapshotCatalog
+
+    for cls in (SnapshotCatalog, TableCatalog):
+        def failing(self, df, name, kind, snap_id, _write=cls._write):
+            if name == "metrics" and snap_id == 3:
+                raise RuntimeError("injected commit-pool failure")
+            return _write(self, df, name, kind, snap_id)
+        monkeypatch.setattr(cls, "_write", failing)
+
+    dfs = world_to_dfs(spark, world)
+    root = tempfile.mkdtemp(prefix="frontier_pool_crash_")
+    ns = "pool_crash"
+    cat = root if backend == "fs" else TableCatalog(spark, ns)
+    try:
+        eng1 = FrontierEngine(
+            spark, CFG, cat, dfs["pages"], dfs["robots"], dfs["seeds"],
+        )
+        eng1.pages.count()
+        eng1.robots.count()
+        before = _persisted_ids(spark)
+        eng1.bootstrap()
+        eng1.run_epoch()
+        eng1.run_epoch()
+        with pytest.raises(RuntimeError, match="injected commit-pool"):
+            eng1.run_epoch()
+        # close() frees the failed epoch's pins with the per-base caches
+        eng1.close()
+        assert _persisted_ids(spark) <= before
+        m = eng1.catalog.load_manifest()
+        assert m["snapshot_id"] == 2 and m["meta"]["epoch"] == 2
+
+        # the failed epoch's fetch log was written beside the failing
+        # write; no manifest lists it
+        if backend == "fs":
+            ref = "fetch_log/delta-{:06d}".format
+            orphan = spark.read.parquet(os.path.join(root, "data", ref(3)))
+        else:
+            ref = f"{ns}.fetch_log__d{{:06d}}".format
+            orphan = spark.table(ref(3))
+        assert orphan.filter("epoch = 2").count() > 0
+        assert m["tables"]["fetch_log"]["paths"] == [ref(1), ref(2)]
+        history = eng1.catalog.history()
+        assert [h["snapshot_id"] for h in history] == [0, 1, 2]
+        for h in history:
+            listed = eng1.catalog.load_manifest(h["snapshot_id"])["tables"]
+            assert not any(ref(3) in t["paths"] for t in listed.values())
+
+        monkeypatch.undo()
+        eng2 = FrontierEngine(
+            spark, CFG, cat, dfs["pages"], dfs["robots"], dfs["seeds"],
+        )
+        eng2.run(max_epochs=N_EPOCHS)
+        assert _log_tuples_engine(eng2) == _log_tuples_sim(sim)
+        seen = {r.url_canon
+                for r in eng2.frontier().select("url_canon").collect()}
+        assert seen == sim.seen
+        _assert_metrics_parity(eng2, sim)
+    finally:
+        monkeypatch.undo()
+        if backend == "table":
+            spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
         shutil.rmtree(root, ignore_errors=True)
 
 
