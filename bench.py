@@ -551,10 +551,11 @@ def write_report(result: dict) -> None:
         lines += [
             "Fixed cost per epoch is bounded by design: the engine runs a "
             "constant Spark-job count per epoch regardless of data volume "
-            "(pinned intermediates, one single-row counter collect, "
-            "parallel commit writes, plus one narrow "
-            "hot-host gate job that skips the rank's two full exchanges "
-            "of the queued set while the over-cap volume is small) — see "
+            "(pinned intermediates whose observations carry the epoch "
+            "counters, so no driver collect, and parallel commit writes; "
+            "the rank gate reads the manifest's queued count, so skipping "
+            "the rank's two full exchanges of the queued set costs no "
+            "job) — see "
             "the jobs/epoch column, measured via per-epoch job groups. "
             "Epoch phases in BENCH/last_run.json: "
             "pin_delta + topk_gate + plan_candidates together are the "

@@ -147,17 +147,6 @@ class CrawlConfig:
     compact_delta_ratio: float = 0.2
     frontier_compact_epochs: int = 64
 
-    # The per-host k_cap rank before the politeness walk is a pure
-    # volume cap (the walk's prefix masks enforce budget + window
-    # exactly, so walking a host's WHOLE queue is always correct).
-    # Skip the rank — one consumption of the queued set instead of the
-    # skew-proof rank's two window exchanges — while the total
-    # over-cap volume (Σ max(rows − k_cap, 0) over hot hosts, an upper
-    # bound from the gate's count pass) stays under this many rows;
-    # past it (mega-host regime) the rank pays for itself by shrinking
-    # the walk exchange.
-    rank_excess_rows: int = 2_000_000
-
     # Bloom shard layout. The crawl does not read either field (its
     # URL-seen check is the exact base + delta anti-join); they stay so
     # existing configs, including perfbench/workloads.py, keep working.

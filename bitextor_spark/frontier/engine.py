@@ -30,9 +30,10 @@ Skew: the per-host top-k prefix bounds any mega-host's contribution to an
 epoch at the politeness ceiling (window_ms / min_delay + retries), so the
 walk's host segment for the hottest host is O(hundreds) of rows no matter
 how many billions of its URLs are queued. The prefix is a volume cap, not
-a correctness step, so it has two outcomes: while the gate's over-cap
-excess stays under cfg.rank_excess_rows the whole queued set flows to the
-walk in one consumption; past it every host is ranked by the skew-proof
+a correctness step, so it has two outcomes: while the manifest's queued
+count (an upper bound on the over-cap excess) stays under
+RANK_QUEUED_ROWS the whole queued set flows to the walk in one
+consumption; past it every host is ranked by the skew-proof
 per_key_topk_passthrough.
 
 Frontier state lives in snapshot tables (sources/snapshots.py): a
@@ -88,6 +89,11 @@ ROBOTS_STATE_SCHEMA = "host string, crawl_delay_s int, fetched_ms long"
 # manifest's tracked delta row count stays under this gate (8 B hashes →
 # ~32 MB); past it the merge becomes a shuffle join (SURVEY §4)
 DELTA_BROADCAST_ROWS = 4_000_000
+# the pre-walk k_cap rank runs once the manifest's queued count passes
+# this gate: the queued count bounds Σ max(rows − k_cap, 0) over hosts,
+# and under it walking the over-cap rows costs less than the rank's two
+# window exchanges (SURVEY §4 "rank gate bound")
+RANK_QUEUED_ROWS = 2_000_000
 
 
 def _codegen_compiles(spark: SparkSession) -> int | None:
@@ -137,17 +143,25 @@ class FrontierEngine:
             if isinstance(catalog_root, str)
             else catalog_root
         )
-        self.robots = robots.cache()
+        # the caches taken here, freed by close(); a table the caller had
+        # already cached stays the caller's to free
+        self._own_caches: list[DataFrame] = []
+
+        def cached(df: DataFrame | None) -> DataFrame | None:
+            if df is None or df.is_cached:
+                return df
+            self._own_caches.append(df.cache())
+            return df
+
+        self.robots = cached(robots)
         # versioned robots timeline (host, valid_from_ms, crawl_delay_s)
         # for TTL-mode crawls; per-epoch reads are semi-joined down to the
         # epoch's active hosts, never scanned whole into the driver
-        self.robots_versions = (
-            robots_versions.cache() if robots_versions is not None else None
-        )
+        self.robots_versions = cached(robots_versions)
         self.seeds = seeds
         # image+caption payload table (input_hint shape); verified per fetch
         # wave in Arrow batches when verify_payloads is on (M4 invariant)
-        self.images = images.cache() if images is not None else None
+        self.images = cached(images)
         self.verify_payloads = verify_payloads and images is not None
         # one partition count for every layout the engine builds (pages,
         # queued base, base urls, the walk's host partitions), read once:
@@ -159,10 +173,9 @@ class FrontierEngine:
         # this cached layout — no exchange and no re-sort of the (static,
         # world-sized) pages side per epoch; only the O(candidates) probe
         # side shuffles.
-        self.pages = (
+        self.pages = cached(
             pages.repartition(self._n_shuffle, "url_canon")
             .sortWithinPartitions("url_canon")
-            .cache()
         )
         self._is_local = spark.sparkContext.master.startswith("local")
         # Catalyst constraint propagation is superlinear in plan width and
@@ -361,25 +374,9 @@ class FrontierEngine:
         """State table ``name`` as manifest ``m`` pins it; None when the
         manifest does not list it (a delta log after compaction, the
         robots cache before the first TTL-mode epoch)."""
-        df = self.catalog.read(
+        return self.catalog.read(
             self.spark, name, m, schema=self._TABLE_SCHEMAS[name]
         )
-        if df is not None and name == "frontier":
-            # forward migration: snapshots committed before the trans_hops/
-            # priority columns existed read them as NULL under the explicit
-            # schema — resume with the schema defaults
-            df = (
-                df.withColumn(
-                    "trans_hops",
-                    F.coalesce("trans_hops", F.lit(0)).cast("int"),
-                )
-                .withColumn("priority", F.coalesce("priority", F.lit(1.0)))
-                .withColumn(
-                    "updated_epoch",
-                    F.coalesce("updated_epoch", F.lit(0)).cast("int"),
-                )
-            )
-        return df
 
     def meta(self) -> dict[str, Any]:
         m = self.catalog.load_manifest()
@@ -497,21 +494,6 @@ class FrontierEngine:
             .filter(F.col("state") == "QUEUED")
             .repartition(self._n_shuffle, "url_canon")
             .sortWithinPartitions("url_canon")
-        ))
-
-    def _base_host_counts(self, m: Manifest) -> DataFrame:
-        """Per-host row count of the QUEUED base — the hot-host bound's
-        base-side term, aggregated ONCE per compaction (O(distinct hosts)
-        rows) so the per-epoch gate scans only the O(delta) side instead
-        of re-aggregating the whole queued base every epoch. The counts
-        ignore not_before and changed keys — both only ever INFLATE a
-        host's count, preserving the gate's hot ⊇ true-hot upper-bound
-        invariant (a false-positive hot host pays one redundant rank; a
-        miss stays impossible)."""
-        return self._base_cached(m, "host_counts", lambda: (
-            self._queued_base(m)
-            .groupBy("host")
-            .agg(F.count(F.lit(1)).alias("_n"))
         ))
 
     def _base_urls(self, m: Manifest) -> DataFrame:
@@ -647,10 +629,9 @@ class FrontierEngine:
         # one materialization of the delta-latest table per epoch (pinned,
         # O(changes since compaction)); every MOR view this epoch reads it.
         # persist (columnar cache), NOT localCheckpoint: most consumers of
-        # this wide table read 1-2 columns (the url_hash key set for the
-        # anti-joins/broadcast build, host+not_before for the hot-host
-        # bound) and an RDD-backed checkpoint cannot column-prune, while
-        # the InMemoryRelation serves pruned batches.
+        # this wide table read one column (the url_hash key set for the
+        # anti-joins/broadcast build) and an RDD-backed checkpoint cannot
+        # column-prune, while the InMemoryRelation serves pruned batches.
         latest = self._delta_latest(m)
         delta_keys = None
         if latest is not None:
@@ -736,29 +717,11 @@ class FrontierEngine:
         # than the cap — at web scale that is the mega-domain tail, not the
         # typical host — and the walk's prefix masks enforce budget +
         # window exactly on a host's whole queue, so the rank is a volume
-        # cap, never a correctness step. It is gated on an UPPER-BOUND
-        # over-cap volume: the bound's base-side term is the
-        # per-compaction cached host-count table (O(hosts), see
-        # _base_host_counts) and its per-epoch work is one groupBy over
-        # the pinned delta projection — O(changes), never an O(queued)
-        # scan per epoch. Every relaxation (not_before ignored, changed
-        # base rows counted on both sides) inflates counts, so a stale
-        # count can only force a redundant rank, never an undersized one.
-        bound = self._base_host_counts(m)
-        if latest is not None:
-            bound = bound.unionByName(
-                latest.filter(F.col("state") == "QUEUED")
-                .groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-            )
-        # one aggregate job (NOT limit().collect(): CollectLimit executes
-        # as incremental scale-up jobs — 5+ jobs for an empty result)
-        excess = int(
-            bound.groupBy("host").agg(F.sum("_n").alias("_n"))
-            .filter(F.col("_n") > k_cap)
-            .agg(F.sum(F.col("_n") - k_cap)).collect()[0][0] or 0
-        )
+        # cap, never a correctness step. The manifest's queued count
+        # bounds the over-cap volume from above, so the gate runs no job
+        # and can only force a redundant rank, never skip a needed one.
         mark('topk_gate')
-        if excess <= cfg.rank_excess_rows:
+        if int(meta["queued"]) <= RANK_QUEUED_ROWS:
             # the over-cap volume is cheaper to walk than to rank: the
             # whole queued set flows to the walk in ONE consumption, no
             # window exchanges; the extra walk volume is the excess itself
@@ -1358,13 +1321,18 @@ class FrontierEngine:
 
     def close(self) -> None:
         """Hand the session back as the engine found it: free the pins of
-        an epoch that raised before its commit, the per-base caches, and
+        an epoch that raised before its commit, the per-base caches, the
+        caches ``__init__`` took (the pages layout, and the robots,
+        robots_versions and images tables the caller had not cached), and
         restore constraint propagation. The catalog readers still work
         afterwards."""
         self._release_pins()
         for _, df in self._base_caches.values():
             df.unpersist()
         self._base_caches.clear()
+        for df in self._own_caches:
+            df.unpersist()
+        self._own_caches.clear()
         if self._prev_constraint_propagation is None:
             self.spark.conf.unset(_CONSTRAINT_PROPAGATION)
         else:

@@ -198,8 +198,11 @@ class SnapshotCatalog(ManifestCatalog):
                 return None
             snapshot_id = max(ids)
         path = os.path.join(self.manifest_dir, f"manifest-{snapshot_id}.json")
-        with open(path) as fh:
-            return json.load(fh)
+        try:
+            with open(path) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return None
 
     @staticmethod
     def _rel(name: str, kind: str, snap_id: int) -> str:

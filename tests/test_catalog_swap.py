@@ -222,6 +222,26 @@ def test_table_catalog_load_manifest_is_one_job(spark):
 
 
 @pytest.mark.parametrize("backend", ["fs", "table"])
+def test_load_manifest_of_an_unpublished_id_is_none(spark, backend):
+    """Every backend answers None for a snapshot id it never published,
+    on an empty catalog and past its latest snapshot."""
+    from bitextor_spark.sources.snapshots import SnapshotCatalog
+
+    root = tempfile.mkdtemp(prefix="cat_unpublished_")
+    ns = "swap_unpublished"
+    cat = SnapshotCatalog(root) if backend == "fs" else TableCatalog(spark, ns)
+    try:
+        assert cat.load_manifest(3) is None
+        cat.commit(replace={"t": spark.range(2).selectExpr("id")})
+        assert cat.load_manifest(0)["snapshot_id"] == 0
+        assert cat.load_manifest(3) is None
+    finally:
+        if backend == "table":
+            _drop_namespace(spark, ns)
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize("backend", ["fs", "table"])
 def test_epoch_loads_the_manifest_at_most_three_times(
     spark, no_aqe, monkeypatch, backend
 ):

@@ -503,8 +503,10 @@ def test_steady_state_epoch_reuses_generated_code(tmp_path):
 
 
 def test_close_restores_session(spark, world):
-    """close() after run() frees the per-base caches and leaves the
-    session's confs as they were."""
+    """close() after run() frees the per-base caches and the caches the
+    engine took when it was built (the pages layout, the robots table),
+    so the session holds no persisted RDD it did not hold before the
+    engine, and leaves the session's confs as they were."""
     from bitextor_spark.frontier.engine import _CONSTRAINT_PROPAGATION
 
     # as in a fresh session, so close() has an override to undo
@@ -513,6 +515,7 @@ def test_close_restores_session(spark, world):
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="frontier_close_")
     try:
+        before = _persisted_ids(spark)
         eng = FrontierEngine(
             spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
         )
@@ -522,6 +525,7 @@ def test_close_restores_session(spark, world):
         eng.close()
         assert dict(spark.conf.getAll) == confs
         assert not any(df.is_cached for df in base_caches)
+        assert _persisted_ids(spark) <= before
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -639,13 +643,24 @@ def test_politeness_overlay_parity(spark, no_aqe):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_rank_regime_parity(spark, world, no_aqe):
+def test_rank_regime_parity(spark, world, no_aqe, monkeypatch):
     """The pre-walk k_cap rank is a volume cap, never a correctness step:
-    both gate regimes — excess-gated single consumption (default) and the
-    skew-proof full rank (rank_excess_rows=0) — must reproduce the
+    both gate regimes — single consumption of the queued set (default) and
+    the skew-proof full rank (RANK_QUEUED_ROWS=0) — must reproduce the
     reference simulator byte-for-byte on a world whose per-host queues
-    exceed k_cap."""
+    exceed k_cap. A call counter on the rank shows which regime ran."""
     import dataclasses
+
+    from bitextor_spark.frontier import engine as engine_mod
+
+    ranks = []
+    real_rank = engine_mod.per_key_topk_passthrough
+
+    def counted_rank(*args, **kwargs):
+        ranks.append(1)
+        return real_rank(*args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "per_key_topk_passthrough", counted_rank)
 
     # k_cap = replenish_per_epoch = 4 << per-host queue depth (~25): every
     # host is hot and the walk sees over-cap queues in the single-pass
@@ -653,19 +668,33 @@ def test_rank_regime_parity(spark, world, no_aqe):
     hot_cfg = dataclasses.replace(CFG, replenish_per_epoch=4)
     ref = _log_tuples_sim(simulate(world, hot_cfg))
 
-    def run(cfg):
+    def run():
+        """(fetch log, epochs that started with queued rows)."""
+        ranks.clear()
         dfs = world_to_dfs(spark, world)
         root = tempfile.mkdtemp(prefix="frontier_rank_")
         try:
             eng = FrontierEngine(
-                spark, cfg, root, dfs["pages"], dfs["robots"], dfs["seeds"],
+                spark, hot_cfg, root, dfs["pages"], dfs["robots"],
+                dfs["seeds"],
             )
             eng.run(max_epochs=N_EPOCHS)
-            return _log_tuples_engine(eng)
+            # every snapshot but the latest started an epoch
+            started = eng.catalog.history()[:-1]
+            n_queued = sum(1 for h in started if h["meta"]["queued"] > 0)
+            log = _log_tuples_engine(eng)
+            eng.close()
+            return log, n_queued
         finally:
             shutil.rmtree(root, ignore_errors=True)
 
-    # default: excess (~hundreds of rows) is under the gate -> single pass
-    assert run(hot_cfg) == ref
-    # any over-cap volume -> the full rank
-    assert run(dataclasses.replace(hot_cfg, rank_excess_rows=0)) == ref
+    # default: the queued count (~hundreds of rows) is under the gate ->
+    # single pass, no rank
+    log, _ = run()
+    assert log == ref
+    assert ranks == []
+    # any queued row -> the full rank, once per epoch that has queued rows
+    monkeypatch.setattr(engine_mod, "RANK_QUEUED_ROWS", 0)
+    log, n_queued = run()
+    assert log == ref
+    assert n_queued > 0 and len(ranks) == n_queued
