@@ -479,10 +479,10 @@ def write_report(result: dict) -> None:
             "scheduling gaps under contention). Read the min row ACROSS "
             "core counts: on a calm box it is nearly identical at every "
             "parallelism level, i.e. the residual is driver-side latency "
-            "(Catalyst planning of the epoch DAG, job submission, the one "
-            "gate collect) rather than executor compute — a per-wave "
-            "constant that amortizes as waves grow toward production "
-            "size, not a term that scales with frontier volume.",
+            "(Catalyst planning of the epoch DAG, job submission) rather "
+            "than executor compute — a per-wave constant that amortizes "
+            "as waves grow toward production size, not a term that "
+            "scales with frontier volume.",
         ]
         for c in pairs:
             lines += [

@@ -5,7 +5,8 @@ One epoch = one Spark job pipeline:
   queued frontier ──(per-host top-k prefix)──► schedulable candidates
      ⋈ pages (status/duration)  ⋈ robots (broadcast)  ⋈ host_state
      ──repartition(host)+sort, mapInArrow(politeness walk)──► fetch events
-     (pinned once; the commit writes them as the fetch_log delta)
+     (pinned once; the commit writes them as the fetch_log delta, with
+     the payload-verification columns joined in when verification is on)
      ──window(order by start,host,url)──► fetch_log seq (exact order)
      events ⋈ pages.outlinks ──mapInArrow flat resolver──► raw links
      (RE2-classified in-batch: resolve+canonicalize+explode+page dedup)
@@ -37,9 +38,12 @@ consumption; past it every host is ranked by the skew-proof
 per_key_topk_passthrough.
 
 Frontier state lives in snapshot tables (sources/snapshots.py): a
-single-version base plus a per-epoch delta log. The log's latest version
-per URL is the read itself while it holds one append, and one latest-wins
-groupBy (_latest_wins, the same fold compaction runs) once it holds more.
+single-version base plus a per-epoch delta log, for the frontier and for
+host_state, the one per-host record (the politeness cursor and, in TTL
+mode, the robots cache, as in Heritrix's per-host queue state). The
+frontier log's latest version per URL is the read itself while it holds
+one append, and one latest-wins groupBy (_latest_wins, the same fold
+compaction runs) once it holds more.
 An epoch loads the catalog's manifest once and resolves every state read,
 cache key and regime decision against it; the commit publishes the next
 one. Every epoch is resumable (kill → rerun uncommitted epoch, identical
@@ -82,9 +86,12 @@ EVENT_SCHEMA = (
     "outcome string, new_next_allowed long, trans_hops int, priority double, "
     "not_before_ms long, discovered_epoch int"
 )
-HOST_STATE_SCHEMA = "host string, next_allowed_ms long"
+# per-host state: the politeness cursor and the TTL-mode robots cache
+# (crawl_delay_s, fetched_ms), null until the host's first refresh
+HOST_STATE_SCHEMA = (
+    "host string, next_allowed_ms long, crawl_delay_s int, fetched_ms long"
+)
 _CONSTRAINT_PROPAGATION = "spark.sql.constraintPropagation.enabled"
-ROBOTS_STATE_SCHEMA = "host string, crawl_delay_s int, fetched_ms long"
 # MOR reads broadcast the delta key set into the base anti-join while the
 # manifest's tracked delta row count stays under this gate (8 B hashes →
 # ~32 MB); past it the merge becomes a shuffle join (SURVEY §4)
@@ -356,12 +363,11 @@ class FrontierEngine:
         "frontier_delta": FRONTIER_SCHEMA,
         "host_state": HOST_STATE_SCHEMA,
         "host_state_delta": HOST_STATE_SCHEMA,
-        "robots_state": ROBOTS_STATE_SCHEMA,
-        "robots_state_delta": ROBOTS_STATE_SCHEMA,
         "seed_domains": "reg_domain string",
-        "fetch_log": EVENT_SCHEMA + ", epoch int",
-        "fetch_verify": (
-            "url_hash long, bytes_ok boolean, caption_ok boolean, epoch int"
+        # bytes_ok/caption_ok: payload verification, null unless the crawl
+        # verifies payloads (the read fills columns a file lacks with null)
+        "fetch_log": (
+            EVENT_SCHEMA + ", epoch int, bytes_ok boolean, caption_ok boolean"
         ),
         "metrics": (
             "epoch int, host string, fetched bigint, errors bigint, "
@@ -372,8 +378,7 @@ class FrontierEngine:
 
     def _read(self, m: Manifest, name: str) -> DataFrame | None:
         """State table ``name`` as manifest ``m`` pins it; None when the
-        manifest does not list it (a delta log after compaction, the
-        robots cache before the first TTL-mode epoch)."""
+        manifest does not list it (a delta log after compaction)."""
         return self.catalog.read(
             self.spark, name, m, schema=self._TABLE_SCHEMAS[name]
         )
@@ -399,8 +404,8 @@ class FrontierEngine:
     #    broadcast while the manifest's delta_rows stays under            #
     #    DELTA_BROADCAST_ROWS (no AQE dependence), shuffled beyond: one   #
     #    decision per epoch, from its manifest (_delta_keys);             #
-    #  - host politeness cursors only grow, so the host view is a plain   #
-    #    max() — a CRDT-style merge, no versioning needed.                #
+    #  - per-host cursors and robots fetch times only grow, so the host   #
+    #    view is a max() and a max_by — a CRDT-style merge, no versions.  #
     # Compaction rewrites the base and drops the deltas (adaptive, capped #
     # at cfg.frontier_compact_epochs), bounding read amplification.       #
     # ------------------------------------------------------------------ #
@@ -507,51 +512,37 @@ class FrontierEngine:
             .sortWithinPartitions("url_hash")
         ))
 
-    def _state_parts(
-        self, m: Manifest, name: str, new: DataFrame | None
-    ) -> list[DataFrame]:
-        """A per-host state table's base, its delta log and ``new`` (this
-        epoch's rows, when compaction folds them in), whichever exist."""
-        parts = (self._read(m, name), self._read(m, f"{name}_delta"), new)
-        return [p for p in parts if p is not None]
-
     def _host_state_view(
         self, m: Manifest, new: DataFrame | None = None
     ) -> DataFrame:
-        """Per-host politeness cursor. Cursors only grow, so the merge of
-        base ∪ deltas ∪ ``new`` is a plain max()."""
-        parts = self._state_parts(m, "host_state", new)
+        """Per-host state (HOST_STATE_SCHEMA) merged over base ∪ deltas ∪
+        ``new`` (this epoch's rows, when compaction folds them in). Cursors
+        and robots fetch times only grow, so both merge by max(); the
+        cached delay is the one of the latest fetch (max_by, which like
+        max skips the rows that carry only a cursor). A host's fetch
+        times are distinct: one refresh per epoch at most."""
+        parts = [
+            p for p in (self._read(m, "host_state"),
+                        self._read(m, "host_state_delta"), new)
+            if p is not None
+        ]
         if len(parts) == 1:
             return parts[0]
         return (
-            reduce(DataFrame.unionByName, parts)
-            .groupBy("host")
-            .agg(F.max("next_allowed_ms").alias("next_allowed_ms"))
-        )
-
-    def _robots_state_view(
-        self, m: Manifest, new: DataFrame | None = None
-    ) -> DataFrame | None:
-        """Per-host robots cache (crawl_delay_s, fetched_ms) — MOR like
-        host_state: fetch timestamps only grow, so latest-wins is a
-        max_by over base ∪ deltas ∪ ``new``. None until the first
-        TTL-mode epoch."""
-        parts = self._state_parts(m, "robots_state", new)
-        if not parts:
-            return None
-        return (
-            reduce(DataFrame.unionByName, parts)
+            reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+            )
             .groupBy("host")
             .agg(
-                F.max_by(
-                    F.struct("crawl_delay_s", "fetched_ms"), "fetched_ms"
-                ).alias("_w")
+                F.max("next_allowed_ms").alias("next_allowed_ms"),
+                F.max_by("crawl_delay_s", "fetched_ms").alias("crawl_delay_s"),
+                F.max("fetched_ms").alias("fetched_ms"),
             )
-            .select("host", "_w.*")
         )
 
     def _effective_robots(
-        self, m: Manifest, active_hosts: DataFrame, epoch_start: int
+        self, host_state: DataFrame, active_hosts: DataFrame,
+        epoch_start: int,
     ) -> DataFrame:
         """TTL-mode effective Crawl-delay per active host, plus the
         refresh decision (robotsValidityDurationSeconds, crawler-beans
@@ -559,7 +550,8 @@ class FrontierEngine:
         rule). O(hosts with schedulable work), never O(all hosts): the
         versions table is semi-joined down to the epoch's active hosts
         before its latest-version groupBy, and all joins shuffle on host —
-        the same key the politeness groupBy clusters on."""
+        the same key the politeness groupBy clusters on. ``host_state`` is
+        the epoch's per-host view, which carries the cache."""
         cfg = self.cfg
         cur = (
             self.robots_versions.join(active_hosts, "host", "left_semi")
@@ -569,14 +561,10 @@ class FrontierEngine:
                 F.max_by("crawl_delay_s", "valid_from_ms").alias("_cur_delay")
             )
         )
-        state = self._robots_state_view(m)
-        j = active_hosts.join(cur, "host", "left")
-        if state is not None:
-            j = j.join(state, "host", "left")
-        else:
-            j = j.withColumn(
-                "crawl_delay_s", F.lit(None).cast("int")
-            ).withColumn("fetched_ms", F.lit(None).cast("long"))
+        j = active_hosts.join(cur, "host", "left").join(
+            host_state.select("host", "crawl_delay_s", "fetched_ms"),
+            "host", "left",
+        )
         expired = F.col("fetched_ms").isNull() | (
             F.lit(epoch_start) - F.col("fetched_ms")
             >= F.lit(cfg.robots_ttl_ms)
@@ -693,7 +681,7 @@ class FrontierEngine:
         # for this epoch's active hosts (hosts with schedulable work — the
         # exact set the simulator's by_host loop visits). One pinned
         # O(active-hosts) table feeds both the delay join below and the
-        # robots_state delta in the commit pool. Static mode: zero cost.
+        # host_state delta in the commit pool. Static mode: zero cost.
         ttl_mode = (
             cfg.robots_ttl_ms is not None and self.robots_versions is not None
         )
@@ -701,7 +689,7 @@ class FrontierEngine:
         if ttl_mode:
             robots_eff = self._pin(
                 self._effective_robots(
-                    m, queued.select("host").distinct(), epoch_start
+                    host_state, queued.select("host").distinct(), epoch_start
                 )
             )
 
@@ -749,7 +737,7 @@ class FrontierEngine:
                 "left",
             )
             .withColumn("crawl_delay_s", F.coalesce("crawl_delay_s", F.lit(0)))
-            .join(host_state, "host", "left")
+            .join(host_state.select("host", "next_allowed_ms"), "host", "left")
             .withColumn("next_allowed_ms",
                         F.coalesce("next_allowed_ms", F.lit(0)))
         )
@@ -779,12 +767,7 @@ class FrontierEngine:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        walk_sort = (
-            [F.col("host"), F.col("priority").desc(), F.col("hop"),
-             F.col("url_canon")]
-            if priority_mode
-            else [F.col("host"), F.col("hop"), F.col("url_canon")]
-        )
+        walk_sort = [F.col("host"), *order_cols]
 
         def _walk_hosts(t: "pa.Table") -> "pa.Table | None":
             """Walk every host segment of a sorted table (each segment
@@ -808,8 +791,8 @@ class FrontierEngine:
             cd = t.column("crawl_delay_s").to_numpy(zero_copy_only=False)
             idx_parts, start_parts, out_parts, cur_parts = [], [], [], []
             for s, e in zip(starts, ends):
+                # rows arrive in the host's queue order (walk_sort)
                 picked, fstart, outc, cursor = schedule_host_arrays(
-                    np.arange(e - s),  # rows arrive pre-sorted per host
                     nb[s:e], st[s:e], fm[s:e], rc[s:e],
                     int(na[s]), int(cd[s]), epoch_start, epoch_end, cfg,
                     politeness=cfg.politeness_for(host_arr[s].as_py()),
@@ -905,33 +888,26 @@ class FrontierEngine:
         # count is left out of the trigger — compaction timing is a pure
         # cost knob (any cadence is exact, per the cadence-invariance
         # parity test), and the recorded delta_rows below uses it.
-        prev_frontier_rows = int(
-            meta.get("frontier_rows", meta.get("queued", 0))
-        )
+        prev_frontier_rows = int(meta["frontier_rows"])
         compact = (
             int(meta.get("delta_rows", 0)) + n_attempts
             >= cfg.compact_delta_ratio * max(prev_frontier_rows, 1)
             or (epoch + 1) % max(cfg.frontier_compact_epochs, 1) == 0
         )
-        # fetch_log stores events only (incl. the politeness cursor as
-        # lineage); the exact global sequence is DERIVED at read time from
-        # the total order (epoch, fetch_start_ms, host, url_canon) —
-        # materializing it per epoch costs jobs, stores nothing the sort
-        # key doesn't already encode.
-        fetch_log_extra = None
-        if self.verify_payloads:
-            # verification results append as a side table keyed by url_hash
-            # + epoch; fetch_log() joins them at read time
-            fetch_log_extra = self._verify_payloads(events).withColumn(
-                "epoch", F.lit(epoch)
-            )
         # --- host_state delta: this epoch's politeness cursors ---
         # cursors only ever grow, so the delta is just the active hosts'
         # new values; the view merges by max() (hosts without a row default
         # to 0 through the left-join coalesce above). Never O(hosts)/epoch.
+        # TTL mode adds the refreshed robots caches as rows of their own
+        # (null cursor), which the view's max_by picks up.
         host_state_delta = events.groupBy("host").agg(
             F.max("new_next_allowed").alias("next_allowed_ms")
         )
+        if ttl_mode:
+            host_state_delta = host_state_delta.unionByName(
+                robots_eff.filter("_refreshed").drop("_refreshed"),
+                allowMissingColumns=True,
+            )
 
         # --- frontier delta: attempted rows, reconstructed from events ---
         # MOR: no join against the frontier at all — the event carries the
@@ -1190,15 +1166,20 @@ class FrontierEngine:
         # --- commit: fetch log, MOR deltas, adaptive compaction (`compact`
         # was decided right after the events pin, where the attempt count
         # first became known) ---
-        replace: dict[str, DataFrame] = {}
-        append: dict[str, DataFrame] = {
-            "fetch_log": events.withColumn("epoch", F.lit(epoch))
-        }
-        drop: list[str] = []
-        if ttl_mode:
-            robots_refreshed = robots_eff.filter("_refreshed").select(
-                "host", "crawl_delay_s", "fetched_ms"
+        # fetch_log stores events only (incl. the politeness cursor as
+        # lineage); the exact global sequence is DERIVED at read time from
+        # the total order (epoch, fetch_start_ms, host, url_canon) —
+        # materializing it per epoch costs jobs, stores nothing the sort
+        # key doesn't already encode. Payload verification (url_hash is
+        # unique within an epoch's events) rides the same append.
+        fetch_log = events.withColumn("epoch", F.lit(epoch))
+        if self.verify_payloads:
+            fetch_log = fetch_log.join(
+                self._verify_payloads(events), "url_hash", "left"
             )
+        replace: dict[str, DataFrame] = {}
+        append: dict[str, DataFrame] = {"fetch_log": fetch_log}
+        drop: list[str] = []
         if compact:
             # rewrite the base as the merged view (including this epoch's
             # delta) and drop the delta logs — read amplification resets.
@@ -1215,18 +1196,9 @@ class FrontierEngine:
                 m, host_state_delta
             )
             drop = ["frontier_delta", "host_state_delta"]
-            if ttl_mode:
-                replace["robots_state"] = self._robots_state_view(
-                    m, robots_refreshed
-                )
-                drop.append("robots_state_delta")
         else:
             append["frontier_delta"] = frontier_delta_next
             append["host_state_delta"] = host_state_delta
-            if ttl_mode:
-                append["robots_state_delta"] = robots_refreshed
-        if fetch_log_extra is not None:
-            append["fetch_verify"] = fetch_log_extra
         # per-host metrics are a write-only distributed sink (at 10^8 hosts
         # a driver collect is an OOM): the commit pool writes them beside
         # the deltas, so the epoch's manifest lists its own metrics
@@ -1294,14 +1266,10 @@ class FrontierEngine:
         """Fetch log with the exact global sequence derived from the total
         order (epoch, fetch_start_ms, host, url_canon). Inspection-scale
         reads use one window; bulk exports should rank with
-        ``plans.ordering.global_row_number`` instead. Payload
-        verification results (when enabled) live in the fetch_verify side
-        table and join back here by (url_hash, epoch)."""
+        ``plans.ordering.global_row_number`` instead. ``bytes_ok`` and
+        ``caption_ok`` are null unless the crawl verifies payloads."""
         m = self.catalog.load_manifest()
         df = self._read(m, "fetch_log").drop("new_next_allowed")
-        verify = self._read(m, "fetch_verify")
-        if verify is not None:
-            df = df.join(verify, ["url_hash", "epoch"], "left")
         w = Window.orderBy("epoch", "fetch_start_ms", "host", "url_canon")
         return df.withColumn("seq", F.row_number().over(w) - 1).orderBy("seq")
 

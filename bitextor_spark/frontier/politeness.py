@@ -1,10 +1,11 @@
 """Per-host politeness walk — the sequential core of the scheduler.
 
-THE crawl-semantics contract, shared verbatim by the single-threaded
-reference simulator and the Spark engine's per-host ``applyInPandas``
-groups, exactly as the canonicalizer is shared: the distributed engine is
-then tested for everything distribution can break (ordering, dedup races,
-scope, seen-set maintenance, resume), while the per-host timing rule has a
+THE crawl-semantics contract: the reference simulator runs
+``schedule_host``, the Spark engine its vectorized twin on each host's
+slice of the host-sorted shards it walks with ``mapInArrow``
+(property-tested equal). The distributed engine is then tested for
+everything distribution can break (ordering, dedup races, scope,
+seen-set maintenance, resume), while the per-host timing rule has a
 single definition.
 
 Semantics (cited from the studied reference):
@@ -22,8 +23,8 @@ Semantics (cited from the studied reference):
   max_retries (crawler-beans.cxml:410-411).
 
 The walk is sequential *by definition* (each fetch's start time depends on
-the previous fetch's duration); it runs inside Arrow-batched per-host
-groups of at most a few hundred rows, never as a row-at-a-time UDF.
+the previous fetch's duration); the engine runs it once per host over
+numpy slices of Arrow batches, never as a row-at-a-time UDF.
 """
 
 from __future__ import annotations
@@ -113,7 +114,6 @@ def schedule_host(
 
 
 def schedule_host_arrays(
-    order: np.ndarray,  # argsort by (hop, url_canon) — caller-provided
     not_before_ms: np.ndarray,
     status: np.ndarray,
     fetch_ms: np.ndarray,
@@ -127,26 +127,26 @@ def schedule_host_arrays(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
     """Vectorized twin of :func:`schedule_host` (same semantics, numpy).
 
-    The cursor recurrence c_{i+1} = max(c_i, nb_i) + d_i is a max-plus
-    scan: with prefix sums S_i = Σ_{j<i} d_j and y_i = c_i − S_i it becomes
+    The arrays hold one host's queue in queue order. The cursor
+    recurrence c_{i+1} = max(c_i, nb_i) + d_i is a max-plus scan: with
+    prefix sums S_i = Σ_{j<i} d_j and y_i = c_i − S_i it becomes
     y_{i+1} = max(y_i, nb_i − S_i), i.e. a ``np.maximum.accumulate``. Both
     stop rules (budget exhausted, window end) are prefix conditions over
-    the (hop, url) order, so the processed set is an AND of prefix masks —
-    no data-dependent loop remains. Equivalence with the reference loop is
+    the queue order, so the processed set is an AND of prefix masks — no
+    data-dependent loop remains. Equivalence with the reference loop is
     property-tested (tests/test_politeness_vec.py).
 
-    Returns (picked_positions_in_sorted_order, fetch_start_ms, outcome_code,
-    new_cursor); outcome codes: 0=FETCHED, 1=RETRY, 2=FAILED.
+    Returns (picked_positions, fetch_start_ms, outcome_code, new_cursor);
+    outcome codes: 0=FETCHED, 1=RETRY, 2=FAILED.
     """
     init = max(int(next_allowed_ms), epoch_start_ms)
-    n = order.size
-    if n == 0:
-        return order, np.empty(0, np.int64), np.empty(0, np.int8), init
+    none = (np.empty(0, np.int64), np.empty(0, np.int64),
+            np.empty(0, np.int8), init)
+    if not_before_ms.size == 0:
+        return none
 
-    nb = not_before_ms[order].astype(np.int64)
-    st = status[order]
-    fm = fetch_ms[order].astype(np.int64)
-    rc = retry_count[order]
+    nb = not_before_ms.astype(np.int64, copy=False)
+    fm = fetch_ms.astype(np.int64, copy=False)
 
     # per-entry post-fetch delay (clamp(factor×dur, min, max) ∨ crawl-delay)
     # — knobs may be overridden per host by an overlay sheet (politeness_for)
@@ -159,7 +159,7 @@ def schedule_host_arrays(
     d = fm + np.maximum(snooze, capped_cd)
 
     # budget prefix: entry i runs only if spend BEFORE it is < replenish
-    cost = np.where(st < 500, 1, cfg.error_penalty).astype(np.int64)
+    cost = np.where(status < 500, 1, cfg.error_penalty).astype(np.int64)
     spent_before = np.concatenate(([0], np.cumsum(cost)[:-1]))
     budget_ok = spent_before < cfg.replenish_per_epoch
 
@@ -173,13 +173,13 @@ def schedule_host_arrays(
     # both are prefix masks in exact arithmetic; AND keeps the prefix
     idx = np.flatnonzero(picked)
     if idx.size == 0:
-        return order[:0], np.empty(0, np.int64), np.empty(0, np.int8), init
+        return none
 
     start = np.maximum(c_before[idx], nb[idx])
-    success = st[idx] < 500
+    success = status[idx] < 500
     outcome = np.where(
-        success, np.int8(0), np.where(rc[idx] + 1 > cfg.max_retries, np.int8(2), np.int8(1))
+        success, np.int8(0), np.where(retry_count[idx] + 1 > cfg.max_retries, np.int8(2), np.int8(1))
     ).astype(np.int8)
     last = idx[-1]
     new_cursor = int(max(c_before[last], nb[last]) + d[last])
-    return order[idx], start, outcome, new_cursor
+    return idx, start, outcome, new_cursor

@@ -915,6 +915,7 @@ def _crawl_wave_impl(spark, cfg_kwargs):
     dfs = world_to_dfs(spark, world)
     root = tempfile.mkdtemp(prefix="crawl_wave_")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    eng = None
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         eng = FrontierEngine(
@@ -926,6 +927,9 @@ def _crawl_wave_impl(spark, cfg_kwargs):
             "status", "outcome",
         ).collect()
     finally:
+        # the rows are collected: hand the session back (confs, caches)
+        if eng is not None:
+            eng.close()
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(

@@ -514,9 +514,9 @@ def p7_langid_trigram(spark, sf_dir):
     # profile is a pluggable artifact (models.load_langid_profile — a
     # cld2/cld3-style exported table); the committed default is the
     # 17-language corpus-derived profile (tools/build_langid_profile.py),
-    # which the oracle SQL replays row-for-row. At 816 rows it takes the
-    # broadcast-join path below; a small env-pointed profile (or the
-    # built-in fallback) takes the shuffle-free codegen path.
+    # which the oracle SQL replays row-for-row. Profiles up to 4096 rows
+    # (the 816-row default included) take the shuffle-free codegen path
+    # below; a larger env-pointed profile takes the broadcast-join path.
     from bitextor_spark.models import load_langid_profile
 
     rows = load_langid_profile(default=_LANG_TRIGRAMS)

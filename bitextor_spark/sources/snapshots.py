@@ -15,10 +15,16 @@ numbering, carry-forward of unmentioned tables, the replace / append /
 drop bookkeeping, manifest assembly, ``read`` and ``history``. Two table
 flavors:
 
-- ``replace`` tables (frontier, host_state): each commit rewrites the full
-  table; the manifest points at the newest snapshot only.
-- ``append`` tables (fetch_log, metrics): each commit adds one delta; the
-  manifest lists all deltas, read as a union.
+- ``replace`` tables (frontier, host_state, seed_domains): each commit
+  rewrites the full table; the manifest points at the newest snapshot
+  only.
+- ``append`` tables (frontier_delta, host_state_delta, fetch_log,
+  metrics): each commit adds one delta; the manifest lists all deltas,
+  read as a union.
+
+The engine keeps no side tables: host_state carries the TTL robots cache
+beside the politeness cursor, and fetch_log carries the payload
+verification columns.
 
 A commit writes every table it lists on one thread pool, then publishes
 the manifest, so a crash before the publish leaves only orphan data. A

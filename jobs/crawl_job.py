@@ -21,7 +21,8 @@ driver and every executor (NFS/Lustre/FUSE mount): SnapshotCatalog manages
 its manifests with local file IO while Spark writes the parquet data files
 through the same path, so both sides must see one filesystem. Object-store
 URIs (s3://...) are rejected — swap SnapshotCatalog for real Iceberg
-tables (sources/snapshots.py docstring) before pointing state at S3.
+tables (``IcebergCatalog``, sources/catalogs.py) before pointing state at
+S3.
 
 The session is taken from spark-submit (no master override here; the one
 conf it defaults is the generated-class cache size, ``session.py``);
@@ -76,8 +77,8 @@ def main(argv=None) -> int:
         raise SystemExit(
             "--catalog-root must be a driver+executor-shared POSIX path; "
             f"got URI {args.catalog_root!r}. SnapshotCatalog manifests use "
-            "local file IO — use the Iceberg swap (sources/snapshots.py) "
-            "for object-store state."
+            "local file IO — use the Iceberg swap (IcebergCatalog, "
+            "sources/catalogs.py) for object-store state."
         )
 
     from pyspark import SparkConf

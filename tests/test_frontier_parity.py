@@ -530,6 +530,21 @@ def test_close_restores_session(spark, world):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_crawl_wave_query_restores_session(spark):
+    """The ``crawl_wave`` query closes its engine: the session's confs and
+    persisted RDDs are as the query found them."""
+    from bitextor_spark.frontier.engine import _CONSTRAINT_PROPAGATION
+    from bitextor_spark.queries import QUERIES
+
+    # as in a fresh session, so the engine has an override to undo
+    spark.conf.unset(_CONSTRAINT_PROPAGATION)
+    confs = dict(spark.conf.getAll)
+    before = _persisted_ids(spark)
+    assert QUERIES["crawl_wave"](spark, None).count() > 0
+    assert dict(spark.conf.getAll) == confs
+    assert _persisted_ids(spark) <= before
+
+
 def test_https_fallback_seed(engine_run, sim):
     """C2: the dead-http seed for the https-only host bootstraps as https
     and gets crawled (utils/common.py:155-181 semantics), identically in
@@ -549,12 +564,17 @@ def test_https_fallback_seed(engine_run, sim):
     assert eng_sec == set(sec)
 
 
-def test_robots_ttl_refresh_parity(spark, no_aqe):
+@pytest.mark.parametrize("compact_delta_ratio", [0.2, 0.0, 1e9])
+def test_robots_ttl_refresh_parity(spark, no_aqe, compact_delta_ratio):
     """Robots freshness (C-robots-TTL, crawler-beans.cxml:239-243): a
     mid-crawl server-side robots change alters the schedule IDENTICALLY in
     the engine and the reference simulator, the TTL cache delays when the
     change is observed, and the per-host robots cache survives a mid-crawl
-    resume from snapshot."""
+    resume from snapshot. The cache lives in host_state, so the crawl
+    commits no table of its own for it. Three compaction cadences: the
+    default ratio (compacts most epochs), 0.0 (every epoch: the cache is
+    always read from a compacted base) and 1e9 (never within the crawl:
+    the cache is read back through the delta log, across the resume)."""
     import dataclasses
 
     from bitextor_spark.frontier.world import server_crawl_delay
@@ -573,6 +593,10 @@ def test_robots_ttl_refresh_parity(spark, no_aqe):
     ttl_cfg = dataclasses.replace(CFG, robots_ttl_ms=2 * w_ms)
 
     ttl_sim = simulate(world, ttl_cfg)
+    # compaction timing is a cost knob: the simulator has none
+    ttl_cfg = dataclasses.replace(
+        ttl_cfg, compact_delta_ratio=compact_delta_ratio
+    )
     static_sim = simulate(world, CFG)
     # the refresh must actually change the crawl, or the test is vacuous
     assert _log_tuples_sim(ttl_sim) != _log_tuples_sim(static_sim)
@@ -589,6 +613,12 @@ def test_robots_ttl_refresh_parity(spark, no_aqe):
         assert _log_tuples_engine(eng2) == _log_tuples_sim(ttl_sim)
         seen = {r.url_canon for r in eng2.frontier().select("url_canon").collect()}
         assert seen == ttl_sim.seen
+        tables = set(eng2.catalog.load_manifest()["tables"])
+        assert not {"robots_state", "robots_state_delta",
+                    "fetch_verify"} & tables
+        if compact_delta_ratio == 1e9:
+            # 6 epochs of delta appends, no compaction
+            assert "host_state_delta" in tables
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

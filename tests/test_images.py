@@ -87,6 +87,8 @@ def test_engine_payload_verification(spark):
             iid = id_of[r.url_canon]
             assert r.bytes_ok == (iid != bad_bytes), (iid, r.bytes_ok)
             assert r.caption_ok == (iid != bad_cap), (iid, r.caption_ok)
+        # the results ride the fetch log: no side table
+        assert "fetch_verify" not in eng.catalog.load_manifest()["tables"]
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
         shutil.rmtree(root, ignore_errors=True)

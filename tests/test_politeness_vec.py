@@ -57,13 +57,14 @@ def test_vectorized_walk_matches_loop(
 
     url = np.array([e.url_canon for e in qentries], dtype=object)
     hop = np.array([e.hop for e in qentries], dtype=np.int64)
+    # the walk takes one host's queue already in (hop, url_canon) order
     order = np.lexsort((url, hop)) if qentries else np.empty(0, np.int64)
+    url, hop = url[order], hop[order]
     picked, start, outcome, cursor = schedule_host_arrays(
-        order,
-        np.array([e.not_before_ms for e in qentries], dtype=np.int64),
-        np.array([e.status for e in qentries], dtype=np.int64),
-        np.array([e.fetch_ms for e in qentries], dtype=np.int64),
-        np.array([e.retry_count for e in qentries], dtype=np.int64),
+        np.array([e.not_before_ms for e in qentries], dtype=np.int64)[order],
+        np.array([e.status for e in qentries], dtype=np.int64)[order],
+        np.array([e.fetch_ms for e in qentries], dtype=np.int64)[order],
+        np.array([e.retry_count for e in qentries], dtype=np.int64)[order],
         next_allowed, crawl_delay, EPOCH_START, EPOCH_END, cfg,
     )
     codes = {0: "FETCHED", 1: "RETRY", 2: "FAILED"}
