@@ -217,8 +217,6 @@ def crawl_bench(cpus: int, n_pages: int, n_hosts: int, n_seeds: int,
                 # attributable to the exact samples it distorted
                 "cpu": cpu_window(cpu0, _cpu_stat()),
             })
-            if st.attempts == 0 and st.queued_remaining == 0:
-                break
         wall = time.time() - t0
         attempts = sum(e["attempts"] for e in epochs)
         shutil.rmtree(root, ignore_errors=True)
@@ -507,7 +505,7 @@ def write_report(result: dict) -> None:
         lines += [
             "",
             "On real dedicated executors the ceiling is ~1.0 and the "
-            "crawl's partitioning (url-hash seen-set layout, per-host "
+            "crawl's partitioning (url_canon base layout, per-host "
             "top-k prefix, parallel snapshot writes) carries its relative "
             "efficiency.",
             "",

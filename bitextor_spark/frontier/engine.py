@@ -12,8 +12,8 @@ One epoch = one Spark job pipeline:
      (RE2-classified in-batch: resolve+canonicalize+explode+page dedup)
      ──scope rules (JVM exprs) + ONE groupBy(url)──► first-discoverer
      winner, in-scope dupe count, per-host reject count (fused pass)
-     ──exact URL-seen anti-join against the persisted base url_hash
-     layout + the gated delta-key anti-join──►
+     ──exact URL-seen merge anti-join on url_canon against the persisted
+     base layout + the gated delta-key anti-join──►
      admitted (pinned once; the commit writes branch off it)
      ──► frontier ∪ admitted ; snapshot commit (atomic manifest) that
      writes the fetch log, the deltas and the epoch's per-host metrics
@@ -54,7 +54,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Callable
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -136,9 +136,15 @@ class FrontierEngine:
         robots: DataFrame,
         seeds: DataFrame,
         images: DataFrame | None = None,
-        verify_payloads: bool = False,
         robots_versions: DataFrame | None = None,
     ):
+        # TTL mode reads both: a TTL without the versions timeline would
+        # crawl with static robots while the simulator applies the TTL
+        if (cfg.robots_ttl_ms is None) != (robots_versions is None):
+            raise ValueError(
+                "robots_ttl_ms and robots_versions go together: TTL mode "
+                "needs both, static robots neither"
+            )
         self.spark = spark
         self.cfg = cfg
         # storage seam: a path gets the filesystem manifest catalog; any
@@ -166,14 +172,13 @@ class FrontierEngine:
         # epoch's active hosts, never scanned whole into the driver
         self.robots_versions = cached(robots_versions)
         self.seeds = seeds
-        # image+caption payload table (input_hint shape); verified per fetch
-        # wave in Arrow batches when verify_payloads is on (M4 invariant)
+        # image+caption payload table (input_hint shape): when given, every
+        # fetch wave is verified in Arrow batches (M4 invariant)
         self.images = cached(images)
-        self.verify_payloads = verify_payloads and images is not None
         # one partition count for every layout the engine builds (pages,
-        # queued base, base urls, the walk's host partitions), read once:
-        # the exchange-free fetch join needs pages and the queued base to
-        # agree on it
+        # the base layout, the walk's host partitions), read once: the
+        # exchange-free fetch join and URL-seen merge join need the layouts
+        # and the discovery aggregate to agree on it
         self._n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # pages is the fetch target: co-partition AND co-sort once by
         # url_canon so the per-epoch fetch/discovery sort-merge joins reuse
@@ -199,8 +204,8 @@ class FrontierEngine:
         except Exception:
             pass
         self._epoch_pins: list[DataFrame] = []
-        # name -> (frontier base paths, persisted df); see _base_cached
-        self._base_caches: dict[str, tuple] = {}
+        # (frontier base paths, persisted df); see _base_layout
+        self._layout: tuple[tuple, DataFrame] | None = None
 
     def _pin(self, df: DataFrame, columnar: bool = False) -> DataFrame:
         """Eagerly materialize an epoch intermediate, tracked for cleanup.
@@ -467,50 +472,39 @@ class FrontierEngine:
         )
         return unchanged.unionByName(latest)
 
-    def _base_cached(
-        self, m: Manifest, name: str, build: Callable[[], DataFrame]
-    ) -> DataFrame:
-        """``build()`` persisted ACROSS epochs, keyed by ``m``'s frontier
-        base paths: the base is immutable between compactions, so a layout
-        derived from it must not pay an O(frontier) exchange every epoch.
-        Rebuilt when the manifest's base paths change (compaction or
-        resume); recomputable lineage (persist, not checkpoint), so
+    def _base_layout(self, m: Manifest) -> DataFrame:
+        """The frontier BASE of ``m``, hash-partitioned + sorted on
+        URL_CANON and persisted ACROSS epochs: the base is immutable
+        between compactions, so its layout must not pay an O(frontier)
+        exchange every epoch. Its two readers keep it:
+
+        - the queued view filters it (a filter keeps the layout), so the
+          fetch join against the pages cache, laid out on the same key, is
+          exchange-free and sort-free on both sides;
+        - the URL-seen anti-join merges the discovery aggregate (its pin
+          keeps the groupBy's url_canon partitioning and sort, at the
+          same partition count) against its url_canon column with no
+          Exchange and no Sort on either side.
+
+        The delta anti-joins on url_hash ride the broadcast hint
+        (DELTA_BROADCAST_ROWS gate), which keeps the layout; past the gate
+        (a compaction-overdue backlog) they shuffle, the regime compaction
+        resets. Rebuilt when the manifest's base paths change (compaction
+        or resume); recomputable lineage (persist, not checkpoint), so
         executor loss re-reads parquet instead of failing the epoch."""
         key = tuple(m["tables"]["frontier"]["paths"])
-        cached = self._base_caches.get(name)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        if cached is not None:
-            unpin([cached[1]])
-        df = build().persist()
-        self._base_caches[name] = (key, df)
-        return df
-
-    def _queued_base(self, m: Manifest) -> DataFrame:
-        """Base-frontier QUEUED rows, hash-partitioned + sorted on
-        URL_CANON — the SAME key the (static, cached) pages table is laid
-        out on — so the per-epoch fetch join is exchange-free and
-        sort-free on BOTH sides; the delta anti-join on url_hash rides the
-        broadcast hint (DELTA_BROADCAST_ROWS gate), which preserves this
-        layout. Past the gate (compaction-overdue delta backlog) it
-        degrades to one shuffle — the regime compaction resets."""
-        return self._base_cached(m, "queued", lambda: (
+        if self._layout is not None:
+            if self._layout[0] == key:
+                return self._layout[1]
+            unpin([self._layout[1]])
+        df = (
             self._read(m, "frontier")
-            .filter(F.col("state") == "QUEUED")
             .repartition(self._n_shuffle, "url_canon")
             .sortWithinPartitions("url_canon")
-        ))
-
-    def _base_urls(self, m: Manifest) -> DataFrame:
-        """url_hash set of the frontier BASE, hash-partitioned + sorted
-        within partitions: the URL-seen sort-merge anti-join reuses this
-        layout, so only the small candidate side shuffles."""
-        return self._base_cached(m, "urls", lambda: (
-            self._read(m, "frontier")
-            .select("url_hash")
-            .repartition(self._n_shuffle, "url_hash")
-            .sortWithinPartitions("url_hash")
-        ))
+            .persist()
+        )
+        self._layout = (key, df)
+        return df
 
     def _host_state_view(
         self, m: Manifest, new: DataFrame | None = None
@@ -660,7 +654,7 @@ class FrontierEngine:
                 "left",
             )
 
-        qb = self._queued_base(m)
+        qb = self._base_layout(m).filter(F.col("state") == "QUEUED")
         if latest is not None:
             qb = qb.join(delta_keys, "url_hash", "left_anti")
         queued = prep(qb)
@@ -682,9 +676,7 @@ class FrontierEngine:
         # exact set the simulator's by_host loop visits). One pinned
         # O(active-hosts) table feeds both the delay join below and the
         # host_state delta in the commit pool. Static mode: zero cost.
-        ttl_mode = (
-            cfg.robots_ttl_ms is not None and self.robots_versions is not None
-        )
+        ttl_mode = cfg.robots_ttl_ms is not None
         robots_eff = None
         if ttl_mode:
             robots_eff = self._pin(
@@ -1064,15 +1056,18 @@ class FrontierEngine:
             .withColumn("url_hash", F.xxhash64("url_canon"))
         )
         # --- seen check: exact anti-join, presence = in base OR in delta ---
-        # The base side reuses the cross-epoch persisted url_hash layout
-        # (_base_urls), so only the candidate side shuffles; the delta side
-        # is the gated broadcast of the pinned delta keys — never a fresh
-        # O(frontier) exchange per epoch. The ADMITTED set pins because two
-        # commit-pool writes (frontier_delta, metrics' queued counter)
-        # branch off it — unpinned they would each re-run both anti-joins.
-        # The per-host dupe/unique counters read the pinned aggregate.
+        # The base side merges against the base layout's url_canon column
+        # (exchange-free, see _base_layout). The merge hint matters:
+        # without it the planner broadcasts the string-keyed base set,
+        # which measured higher peak RSS (SURVEY §4 "one base layout").
+        # The delta side is the gated broadcast of the pinned delta keys.
+        # The ADMITTED set pins because two commit-pool writes
+        # (frontier_delta, metrics' queued counter) branch off it —
+        # unpinned they would each re-run both anti-joins. The per-host
+        # dupe/unique counters read the pinned aggregate.
         admitted = grouped.drop("n_disc").join(
-            self._base_urls(m), "url_hash", "left_anti"
+            self._base_layout(m).select("url_canon").hint("merge"),
+            "url_canon", "left_anti",
         )
         if latest is not None:
             admitted = admitted.join(delta_keys, "url_hash", "left_anti")
@@ -1173,7 +1168,7 @@ class FrontierEngine:
         # key doesn't already encode. Payload verification (url_hash is
         # unique within an epoch's events) rides the same append.
         fetch_log = events.withColumn("epoch", F.lit(epoch))
-        if self.verify_payloads:
+        if self.images is not None:
             fetch_log = fetch_log.join(
                 self._verify_payloads(events), "url_hash", "left"
             )
@@ -1254,10 +1249,7 @@ class FrontierEngine:
             meta = self.meta()
             if meta.get("done") or int(meta["epoch"]) >= limit:
                 break
-            st = self.run_epoch()
-            stats.append(st)
-            if st.attempts == 0 and st.queued_remaining == 0:
-                break
+            stats.append(self.run_epoch())
         return stats
 
     # convenience readers -------------------------------------------------
@@ -1289,15 +1281,15 @@ class FrontierEngine:
 
     def close(self) -> None:
         """Hand the session back as the engine found it: free the pins of
-        an epoch that raised before its commit, the per-base caches, the
+        an epoch that raised before its commit, the base layout, the
         caches ``__init__`` took (the pages layout, and the robots,
         robots_versions and images tables the caller had not cached), and
         restore constraint propagation. The catalog readers still work
         afterwards."""
         self._release_pins()
-        for _, df in self._base_caches.values():
-            df.unpersist()
-        self._base_caches.clear()
+        if self._layout is not None:
+            self._layout[1].unpersist()
+            self._layout = None
         for df in self._own_caches:
             df.unpersist()
         self._own_caches.clear()

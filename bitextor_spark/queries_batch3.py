@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from bitextor_spark.queries import T, q, ts_us
+from bitextor_spark.queries import T, _sql_tokens, q, ts_us
 
 # =========================================================================
 # S5 — prevertical format parsing (regex extraction over a text source)
@@ -387,8 +387,6 @@ def warc_roundtrip_stats(spark, sf_dir):
 # tag) on BOTH engines; the distance/ratio math is the reference's.
 # =========================================================================
 
-from bitextor_spark.queries import _sql_tokens as _toks_sql  # noqa: E402
-
 
 @q(
     "f6_structure_distance",
@@ -396,7 +394,7 @@ from bitextor_spark.queries import _sql_tokens as _toks_sql  # noqa: E402
     WITH s AS (
       SELECT doc_id,
              'hb' || array_to_string(
-               list_transform({_toks_sql('text')},
+               list_transform({_sql_tokens('text')},
                               t -> ['p','d','s'][strlen(t) % 3 + 1]), '')
                   || 'bh' AS struct_str
       FROM documents)

@@ -53,7 +53,8 @@ def parse_args(argv):
                    "disallow_prefixes")
     p.add_argument("--seeds-table", help="parquet path: seed_id, seed_url")
     p.add_argument("--images-table", help="parquet path (input_hint shape): "
-                   "image_id, bytes, w, h, fmt, caption, phash")
+                   "image_id, bytes, w, h, fmt, caption, phash; read only "
+                   "with --verify-payloads")
     p.add_argument("--synthetic-world", type=int, default=0,
                    help="generate a deterministic N-page world instead of "
                    "reading tables (bench/test mode)")
@@ -124,7 +125,7 @@ def main(argv=None) -> int:
         pages = spark.read.parquet(args.pages_table)
         robots = spark.read.parquet(args.robots_table)
         seeds = spark.read.parquet(args.seeds_table)
-        if args.images_table:
+        if args.images_table and args.verify_payloads:
             images = spark.read.parquet(args.images_table)
     if args.verify_payloads and images is None:
         raise SystemExit("--verify-payloads needs an images source "
@@ -132,7 +133,7 @@ def main(argv=None) -> int:
 
     eng = FrontierEngine(
         spark, cfg, args.catalog_root, pages, robots, seeds,
-        images=images, verify_payloads=args.verify_payloads,
+        images=images,
     )
     stats = eng.run(max_epochs=args.max_epochs)
     out = {

@@ -503,10 +503,12 @@ def test_steady_state_epoch_reuses_generated_code(tmp_path):
 
 
 def test_close_restores_session(spark, world):
-    """close() after run() frees the per-base caches and the caches the
+    """close() after run() frees the base layout and the caches the
     engine took when it was built (the pages layout, the robots table),
     so the session holds no persisted RDD it did not hold before the
-    engine, and leaves the session's confs as they were."""
+    engine, and leaves the session's confs as they were. Between epochs
+    the engine holds exactly those three: one base layout serves both
+    the queued view and the URL-seen anti-join."""
     from bitextor_spark.frontier.engine import _CONSTRAINT_PROPAGATION
 
     # as in a fresh session, so close() has an override to undo
@@ -520,14 +522,33 @@ def test_close_restores_session(spark, world):
             spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
         )
         eng.run(max_epochs=2)
-        base_caches = [df for _, df in eng._base_caches.values()]
-        assert base_caches and all(df.is_cached for df in base_caches)
+        layout = eng._layout[1]
+        assert layout.is_cached
+        # the pages layout, the robots cache and the base layout
+        assert len(_persisted_ids(spark) - before) == 3
         eng.close()
         assert dict(spark.conf.getAll) == confs
-        assert not any(df.is_cached for df in base_caches)
+        assert not layout.is_cached
         assert _persisted_ids(spark) <= before
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_robots_ttl_needs_versions(spark, world, tmp_path):
+    """TTL mode needs both of its inputs: a robots TTL without the versions
+    timeline would crawl with static robots while the simulator applies
+    the TTL (the fetch logs would part with no error), and a timeline
+    without a TTL would be cached and never read."""
+    import dataclasses
+
+    dfs = world_to_dfs(spark, world)
+    tables = (dfs["pages"], dfs["robots"], dfs["seeds"])
+    ttl_cfg = dataclasses.replace(CFG, robots_ttl_ms=CFG.epoch_window_ms)
+    with pytest.raises(ValueError, match="TTL mode"):
+        FrontierEngine(spark, ttl_cfg, str(tmp_path), *tables)
+    with pytest.raises(ValueError, match="TTL mode"):
+        FrontierEngine(spark, CFG, str(tmp_path), *tables,
+                       robots_versions=dfs["robots_versions"])
 
 
 def test_crawl_wave_query_restores_session(spark):
