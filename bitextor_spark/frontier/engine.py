@@ -52,25 +52,29 @@ by the virtual clock).
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 from functools import reduce
 from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from bitextor_spark.config import CrawlConfig
 from bitextor_spark.frontier.politeness import schedule_host_arrays
-from bitextor_spark.plans.scope import apply_scope
+from bitextor_spark.plans.scope import apply_scope, is_embed_col
 from bitextor_spark.plans.topk import per_key_topk_passthrough
 from bitextor_spark.functions.urls import (
     canonicalize_full_udf,
     make_flat_resolver,
 )
-from bitextor_spark.session import unpin
+from bitextor_spark.session import drop_zip_finders, unpin
 from bitextor_spark.sources.snapshots import SnapshotCatalog
 
 Manifest = dict[str, Any]
@@ -92,6 +96,12 @@ HOST_STATE_SCHEMA = (
     "host string, next_allowed_ms long, crawl_delay_s int, fetched_ms long"
 )
 _CONSTRAINT_PROPAGATION = "spark.sql.constraintPropagation.enabled"
+# the thread-local properties setJobGroup writes (PySpark has no
+# clearJobGroup): run_epoch restores the caller's values
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
 # MOR reads broadcast the delta key set into the base anti-join while the
 # manifest's tracked delta row count stays under this gate (8 B hashes →
 # ~32 MB); past it the merge becomes a shuffle join (SURVEY §4)
@@ -346,6 +356,7 @@ class FrontierEngine:
         )
 
         def verify(batches):
+            drop_zip_finders()
             for pdf in batches:
                 bo, co = verify_image_batch(
                     pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["caption"],
@@ -581,12 +592,22 @@ class FrontierEngine:
     # ------------------------------------------------------------------ #
 
     def run_epoch(self) -> EpochStats:
-        import time as _time
+        """Run the next epoch and commit it. The caller's job group,
+        description and interrupt flag (the epoch labels its jobs with its
+        own) are put back whether the epoch returns or raises."""
+        sc = self.spark.sparkContext
+        saved = [(k, sc.getLocalProperty(k)) for k in _JOB_GROUP_PROPS]
+        try:
+            return self._run_epoch()
+        finally:
+            for k, v in saved:
+                sc.setLocalProperty(k, v)
 
-        _t = {"_start": _time.time()}
+    def _run_epoch(self) -> EpochStats:
+        _t = {"_start": time.time()}
 
         def mark(name: str) -> None:
-            now = _time.time()
+            now = time.time()
             _t[name] = round(now - _t["_start"], 2)
             _t["_start"] = now
 
@@ -756,9 +777,6 @@ class FrontierEngine:
         # bounded by one host group plus one batch, the same peak as an
         # applyInArrow group. Same schedule_host_arrays core,
         # property-tested against the reference loop.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         walk_sort = [F.col("host"), *order_cols]
 
         def _walk_hosts(t: "pa.Table") -> "pa.Table | None":
@@ -822,6 +840,7 @@ class FrontierEngine:
             })
 
         def walk_stream(batches):
+            drop_zip_finders()
             pending: "pa.Table | None" = None
             for batch in batches:
                 if batch.num_rows == 0:
@@ -971,10 +990,6 @@ class FrontierEngine:
         )
         _passthrough = ["disc_url", "hop", "seed_id", "fetch_start_ms",
                         "disc_host", "parent_trans"]
-        from pyspark.sql.types import (
-            DoubleType, StringType, StructField, StructType,
-        )
-
         raw_links = disc_in.mapInArrow(
             make_flat_resolver(
                 "disc_url", "outlinks", "parent_priority", _passthrough,
@@ -989,8 +1004,6 @@ class FrontierEngine:
                 ]
             ),
         )
-        from bitextor_spark.plans.scope import is_embed_col
-
         candidates = raw_links.select(
             F.col("cand_canon").alias("url_canon"),
             (F.col("hop") + 1).cast("int").alias("hop"),

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from bitextor_spark.config import ALLOWED_SCHEMES, SESSION_PARAMS
+from bitextor_spark.session import drop_zip_finders
 
 _WWW_RE = re.compile(r"^www\d*\.")
 _JSESSIONID_PATH_RE = re.compile(r";jsessionid=[^;?#]*", re.IGNORECASE)
@@ -509,6 +510,7 @@ def make_flat_resolver(
         return pa.RecordBatch.from_arrays(cols, names=names)
 
     def fn(batches):
+        drop_zip_finders()
         for rb in batches:
             out = _one(rb)
             if out is not None:

@@ -6,11 +6,23 @@ exchange, and shuffle partitions sized to the core count (overridable via
 SPARK_GRAFT_SHUFFLE_PARTITIONS for cluster runs). ``spread`` fans a
 DataFrame out to the session's shuffle parallelism; ``unpin`` frees the
 blocks of pinned (localCheckpoint or persisted) DataFrames.
+
+``drop_zip_finders`` keeps a reused Python worker's per-task set-up cheap.
+Before every task the worker calls ``importlib.invalidate_caches()``
+(``pyspark/worker_util.setup_spark_files``). On CPython < 3.13 that makes
+each cached ``zipimporter`` re-read its archive's central directory, and a
+worker caches one per pyspark subpackage it imported from ``pyspark.zip``
+(16, ~21k zip entries parsed per task): about 85 ms of worker CPU per task,
+against 5–8 ms for the crawl's UDF bodies (SURVEY §4 "Python task fixed
+cost"). The crawl's per-epoch Python functions call it first, so the
+worker's next task finds no importer to invalidate.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
@@ -78,3 +90,20 @@ def unpin(dfs: list[DataFrame]) -> None:
                 df._jdf.queryExecution().logical().rdd().unpersist(False)
         except (AttributeError, Py4JError):
             pass  # session already stopped: nothing left to free
+
+
+def drop_zip_finders() -> None:
+    """Forget this process's cached zip importers, so the next
+    ``importlib.invalidate_caches()`` has no archive to re-read.
+
+    A later import from a zip still works: the path finder builds a new
+    importer from ``zipimport``'s directory cache without reading the
+    archive again. The archives a worker imports from never change while
+    it lives (``pyspark.zip`` is static, and Spark refuses to re-add a
+    ``--py-files`` file with other contents), so no stale directory stays
+    in use. On CPython 3.13+, where invalidation is lazy, it saves nothing
+    and costs a scan of a small dict."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)

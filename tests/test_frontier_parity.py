@@ -534,6 +534,31 @@ def test_close_restores_session(spark, world):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_run_restores_the_callers_job_group(spark, world, tmp_path):
+    """Each epoch labels its jobs with its own job group, then hands the
+    caller's back: the job group, description and interrupt flag of the
+    calling thread read the same after run() and close() as before."""
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "the caller's jobs", True)
+    try:
+        before = [sc.getLocalProperty(k) for k in keys]
+        dfs = world_to_dfs(spark, world)
+        eng = FrontierEngine(
+            spark, CFG, str(tmp_path), dfs["pages"], dfs["robots"],
+            dfs["seeds"],
+        )
+        eng.run(max_epochs=1)
+        # the epoch's jobs ran under its own group
+        assert eng.last_timings["n_jobs"] > 0
+        eng.close()
+        assert [sc.getLocalProperty(k) for k in keys] == before
+    finally:
+        for k in keys:
+            sc.setLocalProperty(k, None)
+
+
 def test_robots_ttl_needs_versions(spark, world, tmp_path):
     """TTL mode needs both of its inputs: a robots TTL without the versions
     timeline would crawl with static robots while the simulator applies
