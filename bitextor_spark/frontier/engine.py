@@ -11,14 +11,15 @@ One epoch = one Spark job pipeline:
      events ⋈ pages.outlinks ──mapInArrow flat resolver──► raw links
      (RE2-classified in-batch: resolve+canonicalize+explode+page dedup)
      ──scope rules (JVM exprs) + ONE groupBy(url)──► first-discoverer
-     winner, in-scope dupe count, per-host reject count (fused pass)
-     ──exact URL-seen merge anti-join on url_canon against the persisted
-     base layout + the gated delta-key anti-join──►
-     admitted (pinned once; the commit writes branch off it)
+     winner, in-scope discovery count, reject count (fused pass)
+     ──exact URL-seen check: merge LEFT join on url_canon against the
+     persisted base layout + the gated delta-key LEFT join──►
+     the discovery pin (pinned once, with its `admit` flag: admission
+     filters it, the metrics count over it)
      ──► frontier ∪ admitted ; snapshot commit (atomic manifest) that
      writes the fetch log, the deltas and the epoch's per-host metrics
-     (one tagged-union agg) concurrently, so a committed epoch carries its
-     own fetch log and metrics
+     (one agg over the events ∪ the discovery pin) concurrently, so a
+     committed epoch carries its own fetch log and metrics
 
 Parallelism-independence: every nondeterministic boundary is closed by an
 explicit total order — per-host queue order (hop, url_canon), global fetch
@@ -74,7 +75,7 @@ from bitextor_spark.functions.urls import (
     canonicalize_full_udf,
     make_flat_resolver,
 )
-from bitextor_spark.session import drop_zip_finders, unpin
+from bitextor_spark.session import JOB_GROUP_PROPS, drop_zip_finders, unpin
 from bitextor_spark.sources.snapshots import SnapshotCatalog
 
 Manifest = dict[str, Any]
@@ -96,13 +97,7 @@ HOST_STATE_SCHEMA = (
     "host string, next_allowed_ms long, crawl_delay_s int, fetched_ms long"
 )
 _CONSTRAINT_PROPAGATION = "spark.sql.constraintPropagation.enabled"
-# the thread-local properties setJobGroup writes (PySpark has no
-# clearJobGroup): run_epoch restores the caller's values
-_JOB_GROUP_PROPS = (
-    "spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel",
-)
-# MOR reads broadcast the delta key set into the base anti-join while the
+# MOR reads and the URL-seen check broadcast the delta key set while the
 # manifest's tracked delta row count stays under this gate (8 B hashes →
 # ~32 MB); past it the merge becomes a shuffle join (SURVEY §4)
 DELTA_BROADCAST_ROWS = 4_000_000
@@ -412,7 +407,7 @@ class FrontierEngine:
     # epoch; reads resolve latest-wins. Every view reads the one          #
     # manifest its epoch loaded. State transitions are monotone           #
     # (QUEUED -> terminal, never back), which the views exploit:          #
-    #  - presence (the URL-seen anti-join) needs NO merge: any version    #
+    #  - presence (the URL-seen check) needs NO merge: any version       #
     #    proves membership;                                               #
     #  - the base is single-version by construction (compaction output),  #
     #    so latest-wins only ever runs over the DELTA LOG — the big side  #
@@ -455,7 +450,7 @@ class FrontierEngine:
         """Latest version per changed url_hash, or None when no delta log
         exists. run_epoch pins this once (it is O(changes since last
         compaction)) and threads it through every view below — it feeds
-        two branches of the candidate DAG plus the discovery anti-join, so
+        two branches of the candidate DAG plus the URL-seen check, so
         recomputing it per consumer multiplies the latest-wins cost. Two
         paths, both exact:
 
@@ -492,12 +487,12 @@ class FrontierEngine:
         - the queued view filters it (a filter keeps the layout), so the
           fetch join against the pages cache, laid out on the same key, is
           exchange-free and sort-free on both sides;
-        - the URL-seen anti-join merges the discovery aggregate (its pin
-          keeps the groupBy's url_canon partitioning and sort, at the
-          same partition count) against its url_canon column with no
-          Exchange and no Sort on either side.
+        - the URL-seen check merge-joins the discovery aggregate (the
+          groupBy's own url_canon partitioning and sort, at the same
+          partition count) against its url_canon column with no Exchange
+          and no Sort on either side.
 
-        The delta anti-joins on url_hash ride the broadcast hint
+        The delta-key joins on url_hash ride the broadcast hint
         (DELTA_BROADCAST_ROWS gate), which keeps the layout; past the gate
         (a compaction-overdue backlog) they shuffle, the regime compaction
         resets. Rebuilt when the manifest's base paths change (compaction
@@ -594,9 +589,10 @@ class FrontierEngine:
     def run_epoch(self) -> EpochStats:
         """Run the next epoch and commit it. The caller's job group,
         description and interrupt flag (the epoch labels its jobs with its
-        own) are put back whether the epoch returns or raises."""
+        own) are put back whether the epoch returns or raises: PySpark has
+        no clearJobGroup."""
         sc = self.spark.sparkContext
-        saved = [(k, sc.getLocalProperty(k)) for k in _JOB_GROUP_PROPS]
+        saved = [(k, sc.getLocalProperty(k)) for k in JOB_GROUP_PROPS]
         try:
             return self._run_epoch()
         finally:
@@ -633,8 +629,9 @@ class FrontierEngine:
         # O(changes since compaction)); every MOR view this epoch reads it.
         # persist (columnar cache), NOT localCheckpoint: most consumers of
         # this wide table read one column (the url_hash key set for the
-        # anti-joins/broadcast build) and an RDD-backed checkpoint cannot
-        # column-prune, while the InMemoryRelation serves pruned batches.
+        # key joins and their broadcast build) and an RDD-backed
+        # checkpoint cannot column-prune, while the InMemoryRelation
+        # serves pruned batches.
         latest = self._delta_latest(m)
         delta_keys = None
         if latest is not None:
@@ -1018,23 +1015,31 @@ class FrontierEngine:
             ).otherwise(F.lit(0)).cast("int").alias("trans_hops"),
             F.col("cash").alias("priority"),
         )
-        # --- wave dedup + scope metrics: ONE aggregation consumes the
-        # resolver output. min(struct) over the in-scope rows picks the
-        # first discoverer in global fetch order (identical winner to a
-        # window: the (fetch_start_ms, disc_host, disc_url) key is unique
-        # per candidate URL) while the same pass counts in-scope
-        # discoveries (n_disc, the dupe counter) and out-of-scope rejects
-        # (n_reject, the C17 metric) — host is a pure function of
-        # url_canon, so the reject counter regroups exactly. Partial
-        # map-side aggregation shrinks the shuffle to one row per distinct
-        # URL, and the O(discovered-links) resolver output is never
-        # checkpointed (it used to be the epoch's largest block-store
-        # write, re-scanned again by the metrics write at commit).
+        # --- wave dedup, scope counters and the URL-seen check: ONE
+        # aggregation consumes the resolver output and ONE pin holds the
+        # result, which both admission and the metrics read. min(struct)
+        # over the in-scope rows picks the first discoverer in global fetch
+        # order (identical winner to a window: the (fetch_start_ms,
+        # disc_host, disc_url) key is unique per candidate URL); the same
+        # pass counts in-scope discoveries (n_disc) and out-of-scope
+        # rejects (n_reject, the C17 metric). host is a pure function of
+        # url_canon, so max(host) is the winner's host and the rejects'
+        # host alike. Partial map-side aggregation shrinks the shuffle to
+        # one row per distinct URL, so the O(discovered-links) resolver
+        # output is never materialized.
         scoped = apply_scope(candidates, seed_domains, self.robots, cfg)
-        # pin mode note (r5, interleaved 16-core A/B): a columnar persist
-        # of this aggregate (column pruning for its three consumers) ties
-        # the RDD localCheckpoint within noise — keep the simpler default.
-        grouped_all = self._pin(
+        # Presence = in base OR in delta, as seen flags from LEFT joins
+        # rather than anti-joins, so the pinned rows keep every discovery
+        # for the metrics while `admit` decides the frontier append. The
+        # base side merges against the base layout's url_canon column on
+        # the aggregate's own partitioning and sort: no Exchange and no
+        # Sort on either side (see _base_layout), and no added rows (the
+        # base is unique on url_canon). The merge hint matters: without it
+        # the planner broadcasts the string-keyed base set, which measured
+        # higher peak RSS (SURVEY §4 "one base layout"). The delta side is
+        # the gated broadcast of the pinned delta keys (unique on
+        # url_hash).
+        disc = (
             scoped.groupBy("url_canon")
             .agg(
                 F.min(
@@ -1051,120 +1056,91 @@ class FrontierEngine:
                 F.sum(
                     F.when(~F.col("in_scope"), 1).otherwise(0)
                 ).alias("n_reject"),
-                F.max("host").alias("_any_host"),
+                F.max("host").alias("host"),
             )
-        )
-        mark('discovery_dag')
-        grouped = (
-            grouped_all.filter(F.col("w").isNotNull())
-            .select(
-                "url_canon",
-                F.col("w.host").alias("host"),
-                F.col("w.hop").alias("hop"),
-                F.col("w.seed_id").alias("seed_id"),
-                F.col("w.trans_hops").alias("trans_hops"),
-                F.col("w.priority").alias("priority"),
-                "n_disc",
+            .join(
+                self._base_layout(m)
+                .select("url_canon", F.lit(True).alias("_in_base"))
+                .hint("merge"),
+                "url_canon", "left",
             )
             .withColumn("url_hash", F.xxhash64("url_canon"))
         )
-        # --- seen check: exact anti-join, presence = in base OR in delta ---
-        # The base side merges against the base layout's url_canon column
-        # (exchange-free, see _base_layout). The merge hint matters:
-        # without it the planner broadcasts the string-keyed base set,
-        # which measured higher peak RSS (SURVEY §4 "one base layout").
-        # The delta side is the gated broadcast of the pinned delta keys.
-        # The ADMITTED set pins because two commit-pool writes
-        # (frontier_delta, metrics' queued counter) branch off it —
-        # unpinned they would each re-run both anti-joins. The per-host
-        # dupe/unique counters read the pinned aggregate.
-        admitted = grouped.drop("n_disc").join(
-            self._base_layout(m).select("url_canon").hint("merge"),
-            "url_canon", "left_anti",
-        )
+        admit = F.col("w").isNotNull() & F.col("_in_base").isNull()
         if latest is not None:
-            admitted = admitted.join(delta_keys, "url_hash", "left_anti")
-        # the admission counter rides the pin's materialization (the other
-        # half of the former metrics-write observation)
+            disc = disc.join(
+                delta_keys.withColumn("_in_delta", F.lit(True)),
+                "url_hash", "left",
+            )
+            admit = admit & F.col("_in_delta").isNull()
+        # the admission count rides the pin's materialization, so the
+        # commit's meta is known before the commit starts. A columnar
+        # persist here (column pruning for the two readers) tied the RDD
+        # localCheckpoint within noise (interleaved 16-core A/B): the
+        # simpler default stays.
         obs_ad = Observation()
-        admitted = self._pin(
-            admitted.observe(obs_ad, F.count(F.lit(1)).alias("q"))
+        disc = self._pin(
+            disc.select("url_hash", "url_canon", "host", "w", "n_disc",
+                        "n_reject", admit.alias("admit"))
+            .observe(obs_ad, F.sum(F.col("admit").cast("long")).alias("q"))
         )
+        mark('discovery_dag')
 
-        new_rows = admitted.select(
-            "url_hash", "url_canon", "host", "hop", "seed_id",
+        new_rows = disc.filter("admit").select(
+            "url_hash", "url_canon", "host",
+            F.col("w.hop").alias("hop"),
+            F.col("w.seed_id").alias("seed_id"),
             F.lit("QUEUED").alias("state"),
             F.lit(0).alias("retry_count"),
             F.lit(0).cast("long").alias("not_before_ms"),
             F.lit(epoch + 1).alias("discovered_epoch"),
-            "trans_hops",
-            "priority",
+            F.col("w.trans_hops").alias("trans_hops"),
+            F.col("w.priority").alias("priority"),
             F.lit(epoch + 1).alias("updated_epoch"),
         )
 
         frontier_delta_next = frontier_changed.unionByName(new_rows)
 
         # --- metrics (C17): per-host counters for this epoch ---
-        # ONE aggregation over a tagged union of the four (narrow, already
-        # pinned) sources instead of the former five per-host groupBys
-        # stitched by four FULL OUTER joins: the join chain executed as
-        # four SEQUENTIAL sort-merge stages over tiny per-host tables, and
-        # its ~4 stage latencies made the metrics write the commit pool's
-        # critical path (measured 3.3 s of the 3.4 s commit at 16 cores —
-        # pure fixed cost at any data volume). The union form is depth-2:
-        # partial map-side aggregation collapses every branch to per-host
-        # rows before ONE exchange, and hosts present in any source
-        # survive exactly as with the full joins (absent metrics sum as
-        # the union's zero fillers; every counter is already long).
-        # seen_dupe (candidates already in the frontier) = unique − admitted
-        # per host: arithmetic, not a frontier semi-join — the frontier
-        # never shuffles for metrics.
+        # ONE aggregation over a tagged union of the two pinned sources,
+        # the events and the discovery pin: partial map-side aggregation
+        # collapses each branch to per-host rows before ONE exchange (a
+        # depth-2 plan, where a join per counter would chain sequential
+        # stages), and a host present in either source survives, its
+        # absent counters summing the union's zero fillers. skipped_seen
+        # (in-scope discoveries not admitted: repeats within the wave plus
+        # URLs already in the frontier) is arithmetic over the pin, so the
+        # frontier never shuffles for metrics.
         _z = F.lit(0).cast("long")
+        counters = ("fetched", "errors", "failed", "skipped_scope", "disc",
+                    "queued")
 
-        def _mrow(host_col, **vals):
-            cols = [F.col(host_col).alias("host") if host_col != "host"
-                    else F.col("host")]
-            for c in ("fetched", "errors", "failed", "skipped_scope",
-                      "dupe_seen", "n_unique", "queued"):
-                cols.append(
-                    vals[c].cast("long").alias(c) if c in vals
-                    else _z.alias(c)
-                )
-            return cols
+        def _mrow(**vals):
+            return [F.col("host")] + [
+                vals[c].cast("long").alias(c) if c in vals else _z.alias(c)
+                for c in counters
+            ]
 
         m_events = events.select(*_mrow(
-            "host",
             fetched=F.when(F.col("outcome") == "FETCHED", 1).otherwise(0),
             errors=F.when(F.col("outcome") != "FETCHED", 1).otherwise(0),
             failed=F.when(F.col("outcome") == "FAILED", 1).otherwise(0),
         ))
-        # one narrow read of the pinned aggregate covers dupes AND uniques
-        m_grouped = grouped.select(*_mrow(
-            "host", dupe_seen=F.col("n_disc") - 1, n_unique=F.lit(1),
+        m_disc = disc.select(*_mrow(
+            disc=F.col("n_disc"), skipped_scope=F.col("n_reject"),
+            queued=F.col("admit"),
         ))
-        m_rejects = grouped_all.filter(F.col("n_reject") > 0).select(*_mrow(
-            "_any_host", skipped_scope=F.col("n_reject"),
-        ))
-        m_queued = new_rows.select(*_mrow("host", queued=F.lit(1)))
         metrics = (
-            m_events.unionByName(m_grouped)
-            .unionByName(m_rejects)
-            .unionByName(m_queued)
+            m_events.unionByName(m_disc)
             .groupBy("host")
-            .agg(*[
-                F.sum(c).alias(c)
-                for c in ("fetched", "errors", "failed", "skipped_scope",
-                          "dupe_seen", "n_unique", "queued")
-            ])
+            .agg(*[F.sum(c).alias(c) for c in counters])
             .select(
                 F.lit(epoch).alias("epoch"),
                 "host",
                 "fetched",
                 "errors",
                 "failed",
-                (
-                    F.col("dupe_seen") + F.col("n_unique") - F.col("queued")
-                ).alias("skipped_seen"),
+                (F.col("disc") - F.col("queued")).alias("skipped_seen"),
                 "skipped_scope",
                 "queued",
             )
@@ -1212,7 +1188,7 @@ class FrontierEngine:
         # the deltas, so the epoch's manifest lists its own metrics
         append["metrics"] = metrics
 
-        # the observations were materialized by the events and admitted
+        # the observations were materialized by the events and discovery
         # pins, so the whole meta is known before the commit starts
         n_new = int(obs_ad.get["q"] or 0)
         # queued' = queued − terminal attempts + newly admitted

@@ -31,6 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 # epoch's working set is 131 classes, so at the default LRU evicts each one
 # before its next use and every epoch recompiles all of them.
 CODEGEN_CACHE_ENTRIES = 1024
+# the thread-local properties setJobGroup writes; a new thread starts
+# without them, so code that hands Spark work to a thread carries them
+JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
 
 
 def get_spark(

@@ -26,14 +26,14 @@ The engine keeps no side tables: host_state carries the TTL robots cache
 beside the politeness cursor, and fetch_log carries the payload
 verification columns.
 
-A commit writes every table it lists on one thread pool, then publishes
-the manifest, so a crash before the publish leaves only orphan data. A
-backend supplies only its physical operations: write one table, publish
-a manifest, load a manifest and read a list of refs. ``SnapshotCatalog``
-here is the filesystem backend (parquet directories, JSON manifests
-published with tmp file + fsync + ``os.replace``); sources/catalogs.py
-holds the catalog-table backends, so swapping the engine's storage is a
-constructor argument.
+A commit writes every table it lists on one thread pool, under the
+caller's job group, then publishes the manifest, so a crash before the
+publish leaves only orphan data. A backend supplies only its physical
+operations: write one table, publish a manifest, load a manifest and read
+a list of refs. ``SnapshotCatalog`` here is the filesystem backend
+(parquet directories, JSON manifests published with tmp file + fsync +
+``os.replace``); sources/catalogs.py holds the catalog-table backends, so
+swapping the engine's storage is a constructor argument.
 """
 
 from __future__ import annotations
@@ -45,6 +45,8 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from bitextor_spark.session import JOB_GROUP_PROPS
 
 
 class ManifestCatalog:
@@ -119,8 +121,19 @@ class ManifestCatalog:
             *(("append", n, df) for n, df in (append or {}).items()),
         ]
 
+        # a pool thread starts with no job group: each write takes the
+        # caller's, so the caller's job accounting and cancellation cover
+        # the commit's jobs too
+        caller: list[tuple[str, str | None]] = []
+        if jobs:
+            sc = jobs[0][2].sparkSession.sparkContext
+            caller = [(k, sc.getLocalProperty(k)) for k in JOB_GROUP_PROPS]
+
         def land(job) -> str:
             kind, name, df = job
+            sc = df.sparkSession.sparkContext
+            for k, v in caller:
+                sc.setLocalProperty(k, v)
             return self._write(df, name, kind, snap_id)
 
         # Submit all table writes as CONCURRENT Spark jobs (driver threads):

@@ -285,3 +285,52 @@ def test_epoch_loads_the_manifest_at_most_three_times(
             if backend == "table":
                 _drop_namespace(spark, ns)
             shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize("backend", ["fs", "table"])
+def test_commit_pool_jobs_run_in_the_epoch_group(
+    spark, no_aqe, monkeypatch, backend
+):
+    """The commit writes its tables on a thread pool, and every write runs
+    under the epoch's job group and description, so the epoch's ``n_jobs``
+    counts the commit's writes. The one job an epoch may run outside a
+    group is a catalog-table backend's manifest load, which comes before
+    the epoch number that names the group is known."""
+    from bitextor_spark.sources.snapshots import SnapshotCatalog
+
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    seen = []
+    for cls in (SnapshotCatalog, TableCatalog):
+        def labelled(self, df, *args, _write=cls._write):
+            seen.append(tuple(sc.getLocalProperty(k) for k in keys))
+            return _write(self, df, *args)
+        monkeypatch.setattr(cls, "_write", labelled)
+
+    root = tempfile.mkdtemp(prefix="cat_pool_group_")
+    ns = "swap_pool_group"
+    cat = root if backend == "fs" else TableCatalog(spark, ns)
+    try:
+        dfs = world_to_dfs(spark, small_world(WORLD_CFG))
+        eng = FrontierEngine(
+            spark, CFG, cat, dfs["pages"], dfs["robots"], dfs["seeds"],
+        )
+        eng.bootstrap()
+        for _ in range(2):
+            epoch = int(eng.meta()["epoch"])
+            ungrouped = set(tracker.getJobIdsForGroup(None))
+            seen.clear()
+            eng.run_epoch()
+            outside = set(tracker.getJobIdsForGroup(None)) - ungrouped
+            assert len(outside) <= (1 if backend == "table" else 0)
+            # fetch_log, metrics and the frontier and host_state tables,
+            # each written under the group `n_jobs` counts
+            assert len(seen) >= 4
+            group = f"epoch-{id(eng):x}-{epoch}"
+            assert set(seen) == {(group, "crawl epoch")}
+        eng.close()
+    finally:
+        if backend == "table":
+            _drop_namespace(spark, ns)
+        shutil.rmtree(root, ignore_errors=True)

@@ -253,11 +253,12 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe,
     merge.
 
     The third input runs the physical regimes a small local crawl never
-    reaches: the shuffled (non-broadcast) delta-key anti-join, the
+    reaches: the shuffled (non-broadcast) delta-key joins, the
     cluster-mode persist + count pins, and 3-row Arrow batches, so the
     walk carries host groups across batch boundaries and the flat
-    resolver sees many batches. After each crawl's ``close()`` the session
-    holds no persisted RDD the crawl made."""
+    resolver sees many batches. The per-host metrics match the simulator's
+    at every cadence. After each crawl's ``close()`` the session holds no
+    persisted RDD the crawl made."""
     import dataclasses
 
     from bitextor_spark.frontier import engine as engine_mod
@@ -310,6 +311,9 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe,
             seen = {r.url_canon
                     for r in eng2.frontier().select("url_canon").collect()}
             assert seen == sim.seen
+            # the seen flags decide the metrics' queued and skipped_seen
+            # while a delta log stands, not only right after a compaction
+            _assert_metrics_parity(eng2, sim)
             m = eng2.catalog.load_manifest()
             assert ("frontier_delta" in m["tables"]) == delta_left
             assert not {"blooms", "bloom_pending"} & set(m["tables"])
