@@ -42,9 +42,9 @@ Frontier state lives in snapshot tables (sources/snapshots.py): a
 single-version base plus a per-epoch delta log, for the frontier and for
 host_state, the one per-host record (the politeness cursor and, in TTL
 mode, the robots cache, as in Heritrix's per-host queue state). The
-frontier log's latest version per URL is the read itself while it holds
-one append, and one latest-wins groupBy (_latest_wins, the same fold
-compaction runs) once it holds more.
+frontier log is read through one latest-wins groupBy (_latest_wins, the
+same fold compaction runs) at any length, and every merged view is
+_merge_latest's base-minus-changed-keys plus latest versions.
 An epoch loads the catalog's manifest once and resolves every state read,
 cache key and regime decision against it; the commit publishes the next
 one. Every epoch is resumable (kill → rerun uncommitted epoch, identical
@@ -56,7 +56,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 from functools import reduce
-from typing import Any
+from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
@@ -98,8 +98,8 @@ HOST_STATE_SCHEMA = (
 )
 _CONSTRAINT_PROPAGATION = "spark.sql.constraintPropagation.enabled"
 # MOR reads and the URL-seen check broadcast the delta key set while the
-# manifest's tracked delta row count stays under this gate (8 B hashes →
-# ~32 MB); past it the merge becomes a shuffle join (SURVEY §4)
+# tracked count of the delta rows they merge stays under this gate (8 B
+# hashes → ~32 MB); past it the merge becomes a shuffle join (SURVEY §4)
 DELTA_BROADCAST_ROWS = 4_000_000
 # the pre-walk k_cap rank runs once the manifest's queued count passes
 # this gate: the queued count bounds Σ max(rows − k_cap, 0) over hosts,
@@ -127,6 +127,8 @@ class EpochStats:
     attempts: int
     new_urls: int
     queued_remaining: int
+    # the `done` flag this epoch's commit wrote
+    done: bool
 
 
 class FrontierEngine:
@@ -412,9 +414,9 @@ class FrontierEngine:
     #  - the base is single-version by construction (compaction output),  #
     #    so latest-wins only ever runs over the DELTA LOG — the big side  #
     #    contributes one anti-join against the deltas' key set, which is  #
-    #    broadcast while the manifest's delta_rows stays under            #
+    #    broadcast while the merged delta row count stays under           #
     #    DELTA_BROADCAST_ROWS (no AQE dependence), shuffled beyond: one   #
-    #    decision per epoch, from its manifest (_delta_keys);             #
+    #    decision per merge, from a tracked row count (_delta_keys);      #
     #  - per-host cursors and robots fetch times only grow, so the host   #
     #    view is a max() and a max_by — a CRDT-style merge, no versions.  #
     # Compaction rewrites the base and drops the deltas (adaptive, capped #
@@ -434,49 +436,48 @@ class FrontierEngine:
         )
 
     @staticmethod
-    def _delta_keys(m: Manifest, latest: DataFrame) -> DataFrame:
+    def _delta_keys(n_rows: int, latest: DataFrame) -> DataFrame:
         """The changed-key set of ``latest``, with a broadcast hint while
-        the row count the commits track in ``m``'s meta (reset at
-        compaction) stays under DELTA_BROADCAST_ROWS — explicit, so it
-        holds with AQE off; dropped past the gate so a 10^10-scale delta
-        backlog becomes a shuffle join, never a multi-GB driver
-        broadcast."""
+        ``n_rows`` (the commits' tracked count of the delta rows merged, an
+        upper bound on the keys, known with no count() job) stays under
+        DELTA_BROADCAST_ROWS — explicit, so it holds with AQE off; dropped
+        past the gate so a 10^10-scale delta backlog becomes a shuffle
+        join, never a multi-GB driver broadcast."""
         keys = latest.select("url_hash")
-        if int(m["meta"].get("delta_rows", 0)) <= DELTA_BROADCAST_ROWS:
+        if n_rows <= DELTA_BROADCAST_ROWS:
             return F.broadcast(keys)
         return keys
 
     def _delta_latest(self, m: Manifest) -> DataFrame | None:
         """Latest version per changed url_hash, or None when no delta log
-        exists. run_epoch pins this once (it is O(changes since last
-        compaction)) and threads it through every view below — it feeds
-        two branches of the candidate DAG plus the URL-seen check, so
-        recomputing it per consumer multiplies the latest-wins cost. Two
-        paths, both exact:
-
-        - one append: each per-epoch append is single-version per url_hash
-          (a URL changes at most once per epoch, and an epoch's attempted
-          and admitted sets are disjoint), so latest-wins is the identity
-          and the read is returned as is;
-        - two or more: one _latest_wins groupBy over the whole log, the
-          same fold compaction runs."""
+        exists: one _latest_wins groupBy over the whole log at any length,
+        the same fold compaction runs. run_epoch pins this once (it is
+        O(changes since last compaction)) and threads it through every
+        view below — it feeds two branches of the candidate DAG plus the
+        URL-seen check, so recomputing it per consumer multiplies the
+        latest-wins cost."""
         deltas = self._read(m, "frontier_delta")
-        if deltas is None or len(m["tables"]["frontier_delta"]["paths"]) <= 1:
-            return deltas
-        return self._latest_wins(deltas)
+        return None if deltas is None else self._latest_wins(deltas)
 
     def _merge_latest(
-        self, m: Manifest, base: DataFrame, latest: DataFrame | None
+        self, n_rows: int, base: DataFrame, latest: DataFrame | None,
+        side: Callable[[DataFrame], DataFrame] = lambda d: d,
     ) -> DataFrame:
-        """base (single-version) merged with the latest delta versions.
-        The wide groupBy already ran on the (small) delta side; the base
-        pays one anti-join against the broadcast-gated changed-key set."""
+        """The one merge-on-read rule:
+        ``side(base ⋉̸ keys) ∪ side(latest)``, or ``side(base)`` when no
+        delta log stands. The base is single-version, so a base row whose
+        key has no delta version is its own latest; the wide groupBy
+        already ran on the (small) delta side, and the base pays one
+        anti-join against the changed-key set of ``latest``, gated on
+        ``n_rows``, the delta rows merged (_delta_keys). ``side`` is a
+        per-row projection (filters, a lookup join) applied to each side
+        before the union, which equals applying it after the merge."""
         if latest is None:
-            return base
+            return side(base)
         unchanged = base.join(
-            self._delta_keys(m, latest), "url_hash", "left_anti"
+            self._delta_keys(n_rows, latest), "url_hash", "left_anti"
         )
-        return unchanged.unionByName(latest)
+        return side(unchanged).unionByName(side(latest))
 
     def _base_layout(self, m: Manifest) -> DataFrame:
         """The frontier BASE of ``m``, hash-partitioned + sorted on
@@ -619,6 +620,7 @@ class FrontierEngine:
         self.spark.sparkContext.setJobGroup(job_group, "crawl epoch")
         compiles0 = _codegen_compiles(self.spark)
         total_fetched = int(meta["total_fetched"])
+        delta_rows = int(meta.get("delta_rows", 0))
         epoch_start = epoch * cfg.epoch_window_ms
         epoch_end = epoch_start + cfg.epoch_window_ms
 
@@ -633,25 +635,25 @@ class FrontierEngine:
         # checkpoint cannot column-prune, while the InMemoryRelation
         # serves pruned batches.
         latest = self._delta_latest(m)
-        delta_keys = None
         if latest is not None:
             latest = self._pin(latest, columnar=True)
-            delta_keys = self._delta_keys(m, latest)
         mark('pin_delta')
 
-        # not_before/priority filters run AFTER the latest-wins merge (a
-        # retry bump raises not_before; pre-merge filtering could drop the
-        # latest version while an older, earlier-scheduled one survives) —
-        # here per SIDE of the merge, which is equivalent: base-side rows
-        # that survive the anti-join ARE their own latest version, and the
-        # delta side filters its latest-wins output. The fetch resolve
-        # (pages join) also runs per side, BEFORE the union: the base side
-        # shares the pages cache's url_canon layout, so the frontier-sized
-        # join side pays NO exchange and NO sort — only the O(delta) side
-        # shuffles into the pages layout.
+        # state/not_before/priority filters run AFTER the latest-wins merge
+        # (a retry bump raises not_before; pre-merge filtering could drop
+        # the latest version while an older, earlier-scheduled one
+        # survives) — here per SIDE of the merge (_merge_latest's `side`),
+        # which is equivalent: base-side rows that survive the anti-join
+        # ARE their own latest version, and the delta side filters its
+        # latest-wins output. The fetch resolve (pages join) also runs per
+        # side, BEFORE the union: the base side shares the pages cache's
+        # url_canon layout, so the frontier-sized join side pays NO
+        # exchange and NO sort — only the O(delta) side shuffles into the
+        # pages layout.
         priority_mode = cfg.queue_order == "priority"
 
         def prep(side: DataFrame) -> DataFrame:
+            side = side.filter(F.col("state") == "QUEUED")
             side = side.filter(F.col("not_before_ms") < epoch_end)
             if priority_mode:
                 # precedence floor (C10): below-floor cash never schedules
@@ -672,16 +674,9 @@ class FrontierEngine:
                 "left",
             )
 
-        qb = self._base_layout(m).filter(F.col("state") == "QUEUED")
-        if latest is not None:
-            qb = qb.join(delta_keys, "url_hash", "left_anti")
-        queued = prep(qb)
-        if latest is not None:
-            queued = queued.unionByName(
-                prep(latest.filter(F.col("state") == "QUEUED"))
-            )
         queued = (
-            queued.withColumn("status", F.coalesce("page_status", F.lit(404)))
+            self._merge_latest(delta_rows, self._base_layout(m), latest, prep)
+            .withColumn("status", F.coalesce("page_status", F.lit(404)))
             .withColumn(
                 "fetch_ms",
                 F.coalesce("page_fetch_ms", F.lit(cfg.default_fetch_ms)),
@@ -898,7 +893,7 @@ class FrontierEngine:
         # parity test), and the recorded delta_rows below uses it.
         prev_frontier_rows = int(meta["frontier_rows"])
         compact = (
-            int(meta.get("delta_rows", 0)) + n_attempts
+            delta_rows + n_attempts
             >= cfg.compact_delta_ratio * max(prev_frontier_rows, 1)
             or (epoch + 1) % max(cfg.frontier_compact_epochs, 1) == 0
         )
@@ -1069,7 +1064,8 @@ class FrontierEngine:
         admit = F.col("w").isNotNull() & F.col("_in_base").isNull()
         if latest is not None:
             disc = disc.join(
-                delta_keys.withColumn("_in_delta", F.lit(True)),
+                self._delta_keys(delta_rows, latest)
+                .withColumn("_in_delta", F.lit(True)),
                 "url_hash", "left",
             )
             admit = admit & F.col("_in_delta").isNull()
@@ -1161,6 +1157,14 @@ class FrontierEngine:
             fetch_log = fetch_log.join(
                 self._verify_payloads(events), "url_hash", "left"
             )
+        # the observations were materialized by the events and discovery
+        # pins, so the whole meta is known before the commit starts
+        n_new = int(obs_ad.get["q"] or 0)
+        # queued' = queued − terminal attempts + newly admitted
+        queued_remaining = int(meta["queued"]) - n_fetched - n_failed + n_new
+        # the delta log's rows with this epoch's appended: what a
+        # compaction merges
+        pending = delta_rows + n_attempts + n_new
         replace: dict[str, DataFrame] = {}
         append: dict[str, DataFrame] = {"fetch_log": fetch_log}
         drop: list[str] = []
@@ -1174,7 +1178,7 @@ class FrontierEngine:
             if latest is not None:
                 all_d = all_d.unionByName(latest)
             replace["frontier"] = self._merge_latest(
-                m, self._read(m, "frontier"), self._latest_wins(all_d)
+                pending, self._read(m, "frontier"), self._latest_wins(all_d)
             )
             replace["host_state"] = self._host_state_view(
                 m, host_state_delta
@@ -1188,12 +1192,8 @@ class FrontierEngine:
         # the deltas, so the epoch's manifest lists its own metrics
         append["metrics"] = metrics
 
-        # the observations were materialized by the events and discovery
-        # pins, so the whole meta is known before the commit starts
-        n_new = int(obs_ad.get["q"] or 0)
-        # queued' = queued − terminal attempts + newly admitted
-        queued_remaining = int(meta["queued"]) - n_fetched - n_failed + n_new
-        pending = int(meta.get("delta_rows", 0)) + n_attempts + n_new
+        done = (queued_remaining == 0
+                or total_fetched + n_fetched >= cfg.max_fetches)
         self.catalog.commit(
             replace=replace or None,
             append=append,
@@ -1206,8 +1206,7 @@ class FrontierEngine:
                 # true delta-log row count (attempts + admissions) —
                 # powers the _delta_keys broadcast gate with no count() job
                 "delta_rows": 0 if compact else pending,
-                "done": queued_remaining == 0
-                or total_fetched + n_fetched >= cfg.max_fetches,
+                "done": done,
             },
         )
         mark('commit')
@@ -1224,7 +1223,8 @@ class FrontierEngine:
             self.last_timings['n_compiles'] = (
                 _codegen_compiles(self.spark) - compiles0
             )
-        return EpochStats(epoch, n_fetched, n_attempts, n_new, queued_remaining)
+        return EpochStats(epoch, n_fetched, n_attempts, n_new,
+                          queued_remaining, done)
 
     # ------------------------------------------------------------------ #
     # full crawl                                                          #
@@ -1234,11 +1234,12 @@ class FrontierEngine:
         self.bootstrap()
         stats: list[EpochStats] = []
         limit = max_epochs if max_epochs is not None else self.cfg.max_epochs
-        while True:
-            meta = self.meta()
-            if meta.get("done") or int(meta["epoch"]) >= limit:
-                break
+        # one manifest read: each epoch returns what its commit wrote
+        meta = self.meta()
+        epoch, done = int(meta["epoch"]), bool(meta.get("done"))
+        while not done and epoch < limit:
             stats.append(self.run_epoch())
+            epoch, done = stats[-1].epoch + 1, stats[-1].done
         return stats
 
     # convenience readers -------------------------------------------------
@@ -1258,7 +1259,8 @@ class FrontierEngine:
         """Current frontier (merged MOR view: base latest-wins deltas)."""
         m = self.catalog.load_manifest()
         return self._merge_latest(
-            m, self._read(m, "frontier"), self._delta_latest(m)
+            int(m["meta"].get("delta_rows", 0)), self._read(m, "frontier"),
+            self._delta_latest(m),
         )
 
     def metrics(self) -> DataFrame:

@@ -247,10 +247,10 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe,
                                        monkeypatch):
     """MOR frontier storage: the crawl is byte-identical whatever the
     compaction cadence, including a resume that lands between two
-    compactions (the resumed engine reads base + delta logs). At cadence
-    4 the resume point holds three delta appends, so the resumed epoch
-    and the final frontier read both take the multi-append latest-wins
-    merge.
+    compactions (the resumed engine reads base + delta logs). Every
+    standing delta log, of one append (cadence 2) or of three (cadences 4
+    and 5 at the resume point), is read through the same latest-wins
+    fold, by the resumed epoch and by the final frontier read.
 
     The third input runs the physical regimes a small local crawl never
     reaches: the shuffled (non-broadcast) delta-key joins, the
@@ -320,6 +320,60 @@ def test_compaction_cadence_invariance(spark, world, sim, no_aqe,
         finally:
             monkeypatch.undo()
             shutil.rmtree(root, ignore_errors=True)
+
+
+def _node_names(plan) -> list[str]:
+    """Node names of a physical plan's operator tree, without descending
+    into the plans of cached or checkpointed inputs (not its children)."""
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _node_names(kids.apply(i))
+    ]
+
+
+def test_compaction_gates_its_broadcast_on_the_rows_it_merges(
+        spark, world, no_aqe, monkeypatch, tmp_path):
+    """A compaction merges the old delta log and this epoch's attempts and
+    admissions, so its anti-join's key broadcast is gated on that row
+    count, not on the delta_rows its manifest recorded before the epoch.
+    With the gate set to the pre-compaction delta_rows (and Catalyst's
+    own size-based broadcast off) the compaction's frontier write must
+    shuffle its anti-join: its plan holds no BroadcastExchange."""
+    import dataclasses
+
+    from bitextor_spark.frontier import engine as engine_mod
+
+    cfg = dataclasses.replace(CFG, frontier_compact_epochs=3,
+                              compact_delta_ratio=float("inf"))
+    dfs = world_to_dfs(spark, world)
+    with _session_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        eng = FrontierEngine(spark, cfg, str(tmp_path), dfs["pages"],
+                             dfs["robots"], dfs["seeds"])
+        try:
+            eng.bootstrap()
+            eng.run_epoch()
+            eng.run_epoch()
+            delta_rows = eng.meta()["delta_rows"]
+            assert delta_rows > 0
+            monkeypatch.setattr(engine_mod, "DELTA_BROADCAST_ROWS", delta_rows)
+            plans = {}
+            real_commit = eng.catalog.commit
+
+            def commit(replace=None, **kw):
+                for name, df in (replace or {}).items():
+                    plans[name] = _node_names(
+                        df._jdf.queryExecution().executedPlan()
+                    )
+                return real_commit(replace=replace, **kw)
+
+            eng.catalog.commit = commit
+            eng.run_epoch()
+        finally:
+            eng.close()
+    # the third epoch compacted, through a shuffled anti-join
+    assert "frontier_delta" not in eng.catalog.load_manifest()["tables"]
+    assert "BroadcastExchange" not in plans["frontier"], plans["frontier"]
+    assert "SortMergeJoin" in plans["frontier"]
 
 
 def test_bootstrap_releases_its_pins(spark, world):
@@ -471,11 +525,12 @@ spark = get_spark(master="local[2]", shuffle_partitions=4, extra_conf={{
 compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
             .METRIC_COMPILATION_TIME())
 dfs = world_to_dfs(spark, small_world(WORLD_CFG))
-eng = FrontierEngine(spark, dataclasses.replace(CFG, compact_delta_ratio=0.0),
-                     {root!r}, dfs["pages"], dfs["robots"], dfs["seeds"])
+cfg = dataclasses.replace(CFG, compact_delta_ratio=float({ratio!r}))
+eng = FrontierEngine(spark, cfg, {root!r}, dfs["pages"], dfs["robots"],
+                     dfs["seeds"])
 eng.bootstrap()
 counts = []
-for _ in range(3):
+for _ in range({epochs}):
     c0 = compiles.getCount()
     eng.run_epoch()
     counts.append(compiles.getCount() - c0)
@@ -484,35 +539,51 @@ print(json.dumps(counts))
 
 
 def test_steady_state_epoch_reuses_generated_code(tmp_path):
-    """Every epoch at a fixed plan shape (compaction each epoch) runs the
-    same generated classes up to a few epoch-valued literals, so a
-    steady-state epoch must find them in Spark's codegen cache instead of
-    compiling its whole working set again."""
+    """Every epoch at a fixed plan shape runs the same generated classes up
+    to a few epoch-valued literals, so a steady-state epoch must find them
+    in Spark's codegen cache instead of compiling its whole working set
+    again. Two inputs, each in its own JVM: with compaction every epoch
+    the shape is fixed from the first epoch on; with compaction off every
+    epoch from the second on reads the delta log through the same
+    latest-wins fold, whatever its length, so the second delta-reading
+    epoch reuses the first one's classes."""
     import json
     import subprocess
     import sys
 
     tests_dir = os.path.dirname(os.path.abspath(__file__))
     repo = os.path.dirname(tests_dir)
-    code = _COMPILE_PROBE.format(tests_dir=tests_dir,
-                                 root=str(tmp_path / "catalog"))
     env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g",
            "PYTHONPATH": os.pathsep.join(
                p for p in (repo, os.environ.get("PYTHONPATH")) if p)}
-    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                          text=True, cwd=repo, env=env, timeout=600)
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    counts = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert counts[2] * 4 <= counts[0], f"compiles per epoch: {counts}"
+
+    def compiles_per_epoch(ratio, epochs):
+        code = _COMPILE_PROBE.format(tests_dir=tests_dir, ratio=ratio,
+                                     epochs=epochs,
+                                     root=str(tmp_path / f"catalog-{ratio}"))
+        proc = subprocess.run([sys.executable, "-c", code],
+                              capture_output=True, text=True, cwd=repo,
+                              env=env, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+
+    counts = compiles_per_epoch("0.0", 3)
+    assert counts[2] * 4 <= counts[0], f"compacting: {counts}"
+    # append-only: epochs 1 and 2 are the first two to read a delta log
+    counts = compiles_per_epoch("inf", 5)
+    assert counts[2] * 2 <= counts[1], f"append-only: {counts}"
 
 
 def test_close_restores_session(spark, world):
     """close() after run() frees the base layout and the caches the
     engine took when it was built (the pages layout, the robots table),
     so the session holds no persisted RDD it did not hold before the
-    engine, and leaves the session's confs as they were. Between epochs
-    the engine holds exactly those three: one base layout serves both
-    the queued view and the URL-seen anti-join."""
+    engine, and leaves the session's confs and the Python thread set as
+    they were (the commit pool's threads end with each commit). Between
+    epochs the engine holds exactly those three: one base layout serves
+    both the queued view and the URL-seen anti-join."""
+    import threading
+
     from bitextor_spark.frontier.engine import _CONSTRAINT_PROPAGATION
 
     # as in a fresh session, so close() has an override to undo
@@ -522,6 +593,7 @@ def test_close_restores_session(spark, world):
     root = tempfile.mkdtemp(prefix="frontier_close_")
     try:
         before = _persisted_ids(spark)
+        threads = set(threading.enumerate())
         eng = FrontierEngine(
             spark, CFG, root, dfs["pages"], dfs["robots"], dfs["seeds"],
         )
@@ -532,6 +604,7 @@ def test_close_restores_session(spark, world):
         assert len(_persisted_ids(spark) - before) == 3
         eng.close()
         assert dict(spark.conf.getAll) == confs
+        assert set(threading.enumerate()) == threads
         assert not layout.is_cached
         assert _persisted_ids(spark) <= before
     finally:
@@ -561,6 +634,32 @@ def test_run_restores_the_callers_job_group(spark, world, tmp_path):
     finally:
         for k in keys:
             sc.setLocalProperty(k, None)
+
+
+def test_run_reads_the_manifest_once(spark, world, tmp_path):
+    """run() reads the manifest once before its loop; each epoch then
+    hands back the epoch number and `done` flag its commit wrote. Over
+    three epochs on a fresh catalog the catalog loads 9 manifests:
+    bootstrap's existence check and its commit's parent, run()'s one
+    read, and two per epoch (the epoch's own load and its commit's
+    parent)."""
+    dfs = world_to_dfs(spark, world)
+    eng = FrontierEngine(spark, CFG, str(tmp_path), dfs["pages"],
+                         dfs["robots"], dfs["seeds"])
+    real_load = eng.catalog.load_manifest
+    calls = []
+
+    def load_manifest(*args, **kwargs):
+        calls.append(args)
+        return real_load(*args, **kwargs)
+
+    eng.catalog.load_manifest = load_manifest
+    try:
+        stats = eng.run(max_epochs=3)
+    finally:
+        eng.close()
+    assert [s.epoch for s in stats] == [0, 1, 2]
+    assert len(calls) == 9
 
 
 def test_robots_ttl_needs_versions(spark, world, tmp_path):
